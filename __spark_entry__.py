@@ -34,7 +34,8 @@ from duckdb_spatial_spark.operators import (
 )
 from duckdb_spatial_spark.operators.similarity import cosine_similarity
 from duckdb_spatial_spark.sources import st_generatepoints
-from duckdb_spatial_spark.sources.tables import load_table, read_layout
+from duckdb_spatial_spark.sources.tables import (load_table, local_relation,
+                                                 read_layout)
 
 
 # --------------------------------------------------------------- helpers
@@ -74,8 +75,6 @@ def _local_queries(spark: SparkSession, emb: DataFrame, pairs: list,
     RDD scan whose broadcast build is a 32-task Python job — a
     LocalRelation build side collects with no job and no scan."""
     from pyspark.sql import types as T
-
-    from duckdb_spatial_spark.sources.tables import local_relation
 
     return local_relation(
         spark,
@@ -213,19 +212,14 @@ def q02_zone_pip_join(spark: SparkSession, sf: str) -> DataFrame:
     the grid-partitioned equi-join; per-zone counts."""
     pts = _events_pts(spark, sf)
     # 15-row LITERAL dim table: parse the WKT driver-side and hand Spark a
-    # LocalRelation of ready WKB — the broadcast build side of the join is
-    # collected on the driver anyway, so an executor round-trip (parallelize
-    # + repartition + pandas-UDF parse = 3 jobs/run) would be pure overhead.
-    import pandas as _pd
-
+    # LocalRelation of ready WKB — the join's broadcast guard collects it
+    # with no job, where a createDataFrame scan would run Python tasks.
     from duckdb_spatial_spark.geom.wkb import to_wkb as _to_wkb
     from duckdb_spatial_spark.geom.wkt import from_wkt as _from_wkt
 
-    zones = spark.createDataFrame(
-        _pd.DataFrame(
-            [(zid, _to_wkb(_from_wkt(w))) for zid, w in _zone_rows()],
-            columns=["zone_id", "zone"],
-        ),
+    zones = local_relation(
+        spark,
+        [(zid, _to_wkb(_from_wkt(w))) for zid, w in _zone_rows()],
         "zone_id long, zone binary",
     )
     # POINT_2D-tier probe: no WKB built on the 100k-row side, one python

@@ -11,5 +11,14 @@ optimizer rewrites + R-tree (SURVEY §4).
 
 __version__ = "0.1.0"
 
+from pyspark import SparkFiles as _SparkFiles
+
+if _SparkFiles._is_running_on_worker:
+    # a Python worker unpickling one of the package's UDFs: stop every
+    # later task of this process from re-reading pyspark.zip (zipguard)
+    from . import zipguard as _zipguard
+
+    _zipguard.install()
+
 from . import functions  # noqa: F401
 from .functions import register_sql_functions  # noqa: F401

@@ -693,9 +693,12 @@ def st_join_points(
     # all-rectangle build side → pure col-expr broadcast nested-loop plan:
     # zero Python stages, whole-stage codegen end to end (the reference's
     # BOX_2D fast path shape). 'within' is strict-interior, the others
-    # include the boundary.
+    # include the boundary. Built by local_relation, a bounded build side
+    # is a LocalRelation whose broadcast needs no job and no Python task.
     boxes = [K._is_axis_box(g) if g is not None else None for g in geoms]
     if geoms and all(bx is not None for bx in boxes):
+        from ..sources.tables import local_relation
+
         ss = left.sparkSession
         rows2 = [tuple(r) + tuple(bx) for r, bx in zip(right_rows, boxes)]
         schema2 = T.StructType(
@@ -703,7 +706,10 @@ def st_join_points(
             + [T.StructField(c, T.DoubleType()) for c in
                ("__bx0", "__by0", "__bx1", "__by1")]
         )
-        bdf = ss.createDataFrame(rows2, schema2)
+        try:
+            bdf = local_relation(ss, rows2, schema2)
+        except TypeError:  # a right-side column type VALUES cannot hold
+            bdf = ss.createDataFrame(rows2, schema2)
         px, py = F.col(x), F.col(y)
         if pred == "within":
             cond = (

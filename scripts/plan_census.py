@@ -8,6 +8,10 @@ sf (AQE off so static shapes are visible) and count the anti-patterns:
                                MapInPandas / FlatMapGroupsInPandas);
 * BroadcastNestedLoopJoin    — allowed only as bounded-frame attaches;
                                listed per query for hand-adjudication.
+* Scan ExistingRDD           — a createDataFrame of driver data: every
+                               use is a Python-runner job (a LocalRelation
+                               would cost none); listed per query, not
+                               gated.
 
 Queries that EXECUTE during construction (streaming drains, operators
 with driver-side fits) still yield their final frame's plan; their
@@ -19,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -45,7 +50,7 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
 
-    cart, bep, bnlj, errs = [], [], {}, []
+    cart, bep, bnlj, rdd, errs = [], [], {}, {}, []
     for name, fn in entry.queries().items():
         if ONLY and name not in ONLY:
             continue
@@ -62,11 +67,16 @@ def main() -> None:
         n = plan.count("BroadcastNestedLoopJoin")
         if n:
             bnlj[name] = n
+        # tree lines only ("Scan ExistingRDD (3)"), not the detail section
+        n = len(re.findall(r"Scan ExistingRDD \(\d+\)", plan))
+        if n:
+            rdd[name] = n
     print(json.dumps({
         "sf": SF,
         "cartesian_product": cart,
         "batch_eval_python": bep,
         "broadcast_nested_loop": bnlj,
+        "existing_rdd_scan": rdd,
         "errors": errs,
     }, indent=1))
     ok = not cart and not bep and not errs

@@ -122,13 +122,17 @@ def test_st_cluster_roundtrip(spark, tmp_path):
 
 
 def test_st_join_points_native_tier(spark):
+    import datetime
+
     from duckdb_spatial_spark.operators.join import st_join_points
     from duckdb_spatial_spark.functions.scalar import st_geomfromtext
+    from duckdb_spatial_spark.sources.tables import local_relation
     from pyspark.sql import functions as F
 
-    pts = spark.createDataFrame(
+    pts = local_relation(
+        spark,
         [(1, 0.5, 0.5), (2, 1.5, 0.5), (3, 5.0, 5.0), (4, 1.0, 0.5)],
-        ["pid", "x", "y"],
+        "pid long, x double, y double",
     )
     zones = spark.createDataFrame(
         [(10, "POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))"),
@@ -137,12 +141,25 @@ def test_st_join_points_native_tier(spark):
     ).withColumn("zone", st_geomfromtext("zwkt"))
 
     within = st_join_points(pts, zones, "within", "x", "y", "zone")
+    # all-rectangle build side: broadcast straight from a LocalTableScan,
+    # no createDataFrame (ExistingRDD) scan left to run Python tasks
+    plan = within._jdf.queryExecution().executedPlan().toString()
+    bx = plan[plan.index("BroadcastExchange"):].splitlines()
+    assert bx[1].strip().startswith("+- LocalTableScan"), plan
+    assert "ExistingRDD" not in plan
     got = {(r["pid"], r["zid"]) for r in within.collect()}
     assert got == {(1, 10), (2, 20)}  # boundary point pid=4 excluded
 
     inter = st_join_points(pts, zones, "intersects", "x", "y", "zone")
     got = {(r["pid"], r["zid"]) for r in inter.collect()}
     assert got == {(1, 10), (2, 20), (4, 10), (4, 20)}  # boundary included
+
+    # a build-side type inline VALUES cannot hold keeps createDataFrame
+    day = datetime.date(2020, 1, 2)
+    dated = st_join_points(pts, zones.withColumn("day", F.lit(day)),
+                           "within", "x", "y", "zone")
+    got = {(r["pid"], r["zid"], r["day"]) for r in dated.collect()}
+    assert got == {(1, 10, day), (2, 20, day)}
 
 
 def test_pred_pairs_vectorized_no_perrow_kernel(monkeypatch):

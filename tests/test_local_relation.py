@@ -4,7 +4,8 @@ The contract under test: (1) values round-trip BIT-EXACTLY (floats via
 shortest-repr string casts, strings via escaping or unbase64), (2) the
 result is a true LocalRelation — collect() and broadcast builds answer
 from executeCollect with zero jobs, unlike createDataFrame's
-parallelized-RDD scan."""
+parallelized-RDD scan, (3) malformed rows raise a clear error and inputs
+above the row cap fall back to createDataFrame."""
 
 import math
 
@@ -83,6 +84,61 @@ def test_plan_is_local_relation_zero_job_collect(spark):
 
 
 def test_unsupported_type_raises(spark):
+    import datetime
+
     with pytest.raises(TypeError):
-        local_relation(spark, [(b"x",)], T.StructType(
-            [T.StructField("b", T.BinaryType())]))
+        local_relation(spark, [(datetime.date(2020, 1, 1),)], T.StructType(
+            [T.StructField("d", T.DateType())]))
+
+
+def test_roundtrip_binary(spark):
+    rows = [(1, b"\x01\x00\xff'\\"), (2, bytearray(b"wkb")), (3, b""),
+            (4, None)]
+    df = local_relation(spark, rows, "i int, b binary")
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    got = {r.i: r.b for r in df.collect()}
+    assert got == {1: bytearray(b"\x01\x00\xff'\\"), 2: bytearray(b"wkb"),
+                   3: bytearray(b""), 4: None}
+
+
+def test_column_names_with_backticks(spark):
+    schema = T.StructType([T.StructField("a`b", T.IntegerType()),
+                           T.StructField("c d", T.StringType())])
+    for rows in ([(1, "x")], []):
+        df = local_relation(spark, rows, schema)
+        assert df.columns == ["a`b", "c d"]
+        assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_row_arity_mismatch_raises(spark):
+    with pytest.raises(ValueError, match="row 1 has 1 values"):
+        local_relation(spark, [(1, 2.0), (3,)], "i int, v double")
+    with pytest.raises(ValueError, match="row 0 has 3 values"):
+        local_relation(spark, [(1, 2.0, "x")], "i int, v double")
+
+
+@pytest.mark.parametrize("ddl,bits", [
+    ("tinyint", 8), ("smallint", 16), ("int", 32), ("bigint", 64)])
+def test_integer_range_checked(spark, ddl, bits):
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    got = sorted(r.v for r in local_relation(
+        spark, [(lo,), (hi,)], f"v {ddl}").collect())
+    assert got == [lo, hi]
+    for bad in (lo - 1, hi + 1):
+        with pytest.raises(ValueError, match="out of range"):
+            local_relation(spark, [(bad,)], f"v {ddl}")
+
+
+def test_row_cap_falls_back_to_create_dataframe(spark):
+    from duckdb_spatial_spark.sources import tables
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    cap = tables._INLINE_MAX_ROWS
+    rows = [(i, float(i) / 3.0) for i in range(cap + 1)]
+    inline = local_relation(spark, rows[:cap], "i int, v double")
+    assert "LocalRelation" in plan(inline)
+    big = local_relation(spark, rows, "i int, v double")
+    assert "LocalRelation" not in plan(big)
+    assert sorted(tuple(r) for r in big.collect()) == rows
