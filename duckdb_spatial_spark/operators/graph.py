@@ -412,15 +412,17 @@ def k_core(
 
     Plan per round: one CO-PARTITIONED semi-join of the dst-partitioned
     edge cache against the alive set (count v-alive neighbors per u for
-    ALL u), one map-side-combined degree count, then a node-scale
-    co-partitioned semi-join filtering to alive u — algebraically the
-    same peel (counting both-alive edges per alive u ≡ counting v-alive
-    edges per u, then keeping alive u), with ZERO per-round broadcast
-    builds (each n-guarded broadcast of the derived alive set was its
-    own job barrier, trap 13 — the HITS/LPA loop fix) and the same
-    single edge-scale exchange (the groupBy) the broadcast path already
-    paid. The alive set persists per generation, previous unpersisted —
-    O(1) lineage. Returns (node) — the surviving set.
+    ALL u) and one map-side-combined degree count, with ZERO per-round
+    broadcast builds (each n-guarded broadcast of the derived alive set
+    was its own job barrier, trap 13 — the HITS/LPA loop fix) and the
+    same single edge-scale exchange (the groupBy) the broadcast path
+    already paid. No filter to alive u is needed: alive sets only
+    shrink, so a node peeled in an earlier round has fewer than k
+    neighbors in every later alive set. Each round references the
+    previous alive set ONCE — with two references the plan description
+    doubled per round (hundreds of MB after 16 rounds). The alive set
+    persists per generation, previous unpersisted. Returns (node) — the
+    surviving set.
     """
     if k < 1:
         raise ValueError("k_core: k must be >= 1")
@@ -444,8 +446,6 @@ def k_core(
             .groupBy(F.col("src").alias("node"))
             .agg(F.count("*").alias("__d"))
             .filter(F.col("__d") >= k)
-            .hint("merge")
-            .join(alive, "node", "leftsemi")
             .select("node").persist())
         n_new = new_alive.count()
         alive.unpersist()

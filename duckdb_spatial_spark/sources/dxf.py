@@ -19,24 +19,22 @@ tessellated at ≤4° steps (OGR's DXF driver likewise tessellates bulges
 rather than emitting chords).
 
 Attributes: layer (code 8) and the entity type ride along as columns.
-Files are listed driver-side, parsed executor-side in mapInPandas (one
-task per file — DXF is a single-document format).
+Files are parsed one task per file through the shared ``binaryFile`` scan
+(sources/filescan.py) — DXF is a single-document format.
 """
 from __future__ import annotations
 
-import glob
 import math
-import os
 from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom.core import LINESTRING, POLYGON, Geometry
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import binary_files, scan_files
 
 DXF_SCHEMA = T.StructType([
     T.StructField("source_file", T.StringType()),
@@ -242,27 +240,10 @@ def parse_dxf_text(text: str, source: str) -> List[tuple]:
 
 def st_read_dxf(spark: SparkSession, path: str, geom_col: str = "geom"
                 ) -> DataFrame:
-    files = (sorted(glob.glob(os.path.join(path, "*.dxf")))
-             if os.path.isdir(path) else [path])
-    if not files:
-        return spark.createDataFrame([], DXF_SCHEMA)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(min(len(files), 64))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "r", errors="replace") as fh:
-                    rows = parse_dxf_text(fh.read(), str(p))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["source_file", "layer", "entity",
-                                       "geom"])
-
-    df = fdf.mapInPandas(scan, schema=DXF_SCHEMA)
-    if geom_col != "geom":
-        df = df.withColumnRenamed("geom", geom_col)
-    return df
+    return scan_files(
+        binary_files(spark, path, "*.dxf"),
+        lambda p, data: parse_dxf_text(data.decode("utf-8", "replace"), p),
+        DXF_SCHEMA, geom_col)
 
 
 # ------------------------------------------------------------------ sink

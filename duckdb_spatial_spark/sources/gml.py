@@ -8,18 +8,16 @@ exterior/interior) / MultiPoint / MultiLineString / MultiCurve /
 MultiPolygon / MultiSurface, namespace-agnostically; non-geometry child
 elements of each feature become string property columns.
 
-Layout mirrors the KML reader: driver lists files, one executor task per
-file (GML is a single-document format)."""
+Layout mirrors the KML reader: one task per file through the shared
+``binaryFile`` scan (sources/filescan.py) — GML is a single-document
+format. The property columns are bound from the first file by path."""
 
 from __future__ import annotations
 
-import glob
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -35,6 +33,7 @@ from ..geom.core import (
     collect,
 )
 from ..geom.wkb import to_wkb
+from .filescan import binary_files, scan_files
 
 _GEOM_TAGS = {
     "Point", "LineString", "Polygon", "Curve", "Surface",
@@ -161,35 +160,17 @@ def parse_gml_bytes(data: bytes, source: str) -> Tuple[List[dict], List[str]]:
 
 
 def st_read_gml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataFrame:
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.gml")))
-    else:
-        files = [path]
-    # bind: parse the FIRST file driver-side for the property schema
-    with open(files[0], "rb") as fh:
-        _feats, props = parse_gml_bytes(fh.read(), files[0])
-    fields = [T.StructField("source_file", T.StringType())]
-    fields += [T.StructField(p, T.StringType()) for p in props]
-    fields.append(T.StructField(geom_col, T.BinaryType()))
-    schema = T.StructType(fields)
+    files = binary_files(spark, path, "*.gml")
+    # bind: the first file by path decides the property columns
+    first = files.orderBy("path").select("content").limit(1).collect()
+    props = parse_gml_bytes(bytes(first[0][0]), path)[1] if first else []
+    schema = T.StructType(
+        [T.StructField("source_file", T.StringType())]
+        + [T.StructField(p, T.StringType()) for p in props]
+        + [T.StructField("geom", T.BinaryType())])
 
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), 64)
-    )
+    def parse(p: str, data: bytes) -> List[tuple]:
+        return [tuple([p] + [f.get(c) for c in props] + [f["geom"]])
+                for f in parse_gml_bytes(data, p)[0]]
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    feats, _ = parse_gml_bytes(fh.read(), str(p))
-                if feats:
-                    rows = [
-                        tuple([f["__source"]] + [f.get(c) for c in props]
-                              + [f["geom"]])
-                        for f in feats
-                    ]
-                    yield pd.DataFrame(
-                        rows, columns=["source_file"] + props + ["__g"]
-                    ).rename(columns={"__g": geom_col})
-
-    return fdf.mapInPandas(scan, schema=schema)
+    return scan_files(files, parse, schema, geom_col)

@@ -11,25 +11,23 @@ model is reproduced exactly: one GPX file exposes five layers —
     route_points <rtept>            → Point + route_fid
     track_points <trkpt>            → Point + track_fid/seg/point ids
 
-Files are listed driver-side and parsed executor-side in mapInPandas (one
-task per file — GPX is a single-document format); elevation/time attributes
-ride along as typed columns.
+Files are parsed one task per file through the shared ``binaryFile`` scan
+(sources/filescan.py) — GPX is a single-document format; elevation/time
+attributes ride along as typed columns.
 """
 from __future__ import annotations
 
-import glob
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom.core import LINESTRING, MULTILINESTRING, Geometry
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import binary_files, scan_files
 
 GPX_LAYERS = ("waypoints", "routes", "tracks", "route_points", "track_points")
 
@@ -159,30 +157,9 @@ def st_read_gpx(
 ) -> DataFrame:
     if layer not in GPX_LAYERS:
         raise ValueError(f"unknown GPX layer {layer!r}; one of {GPX_LAYERS}")
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.gpx")))
-    else:
-        files = [path]
-    schema = _SCHEMAS[layer]
-    if not files:
-        return spark.createDataFrame([], schema)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), 64)
-    )
-    cols = [f.name for f in schema.fields]
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    rows = parse_gpx_bytes(fh.read(), str(p), layer)
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    df = fdf.mapInPandas(scan, schema=schema)
-    if geom_col != "geom":
-        df = df.withColumnRenamed("geom", geom_col)
-    return df
+    return scan_files(binary_files(spark, path, "*.gpx"),
+                      lambda p, data: parse_gpx_bytes(data, p, layer),
+                      _SCHEMAS[layer], geom_col)
 
 
 # ------------------------------------------------------------------ sink

@@ -6,21 +6,18 @@ Point / LineString / Polygon / MultiGeometry with ``coordinates`` text of
 engine reads the format natively (reference lists KML among the GDAL
 drivers, st_read.cpp:612-641).
 
-Layout: the bind step lists files driver-side (a directory fans out one
-task per file — KML is a single-document format, so intra-file parallelism
-isn't available); the scan step parses each file executor-side inside
-mapInPandas and emits (source_file, name, description, geom WKB).
+Layout: one task per file through the shared ``binaryFile`` scan
+(sources/filescan.py) — KML is a single-document format, so intra-file
+parallelism isn't available; each task emits (source_file, name,
+description, geom WKB).
 """
 
 from __future__ import annotations
 
-import glob
-import os
 import xml.etree.ElementTree as ET
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -34,6 +31,7 @@ from ..geom.core import (
     collect,
 )
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import binary_files, scan_files
 
 _NS = "{http://www.opengis.net/kml/2.2}"
 
@@ -116,32 +114,9 @@ def parse_kml_bytes(data: bytes, source: str) -> List[tuple]:
 
 
 def st_read_kml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataFrame:
-    if os.path.isdir(path):
-        files = sorted(
-            glob.glob(os.path.join(path, "*.kml"))
-        )
-    else:
-        files = [path]
-    if not files:
-        return spark.createDataFrame([], KML_SCHEMA)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), 64)
-    )
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    rows = parse_kml_bytes(fh.read(), str(p))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["source_file", "name", "description", "geom"]
-                    )
-
-    df = fdf.mapInPandas(scan, schema=KML_SCHEMA)
-    if geom_col != "geom":
-        df = df.withColumnRenamed("geom", geom_col)
-    return df
+    return scan_files(binary_files(spark, path, "*.kml"),
+                      lambda p, data: parse_kml_bytes(data, p),
+                      KML_SCHEMA, geom_col)
 
 
 # ------------------------------------------------------------------ sink

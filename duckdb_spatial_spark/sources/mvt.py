@@ -15,21 +15,19 @@ Coordinates are returned tile-local (0..extent doubles) by default;
 pass ``tile=(z, x, y)`` to georeference into WGS84 lon/lat via the
 standard web-mercator tiling.
 
-Scale shape: one driver-side glob binds the tile list; each task decodes
-its own tiles (mapInPandas over the path list — the geojson/kml reader
-shape). Wire helpers are shared with the OSM-PBF reader (geom/pbf.py).
+Scale shape: one task per tile file through the shared ``binaryFile``
+scan (sources/filescan.py — the geojson/kml reader shape). Wire helpers
+are shared with the OSM-PBF reader (geom/pbf.py).
 """
 
 from __future__ import annotations
 
-import glob as _glob
+import gzip
 import math
-import os
 import struct
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -38,6 +36,7 @@ from ..geom.core import (Geometry, LINESTRING, MULTILINESTRING, MULTIPOINT,
 from ..geom.pbf import (_enc_field, _enc_varint, _fields, _packed_varints,
                         _varint)
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import binary_files, scan_files
 
 __all__ = ["decode_mvt", "encode_mvt_tile", "st_read_mvt", "st_write_mvt"]
 
@@ -370,15 +369,6 @@ MVT_SCHEMA = T.StructType([
 ])
 
 
-def _mvt_files(path: str) -> List[str]:
-    if os.path.isdir(path):
-        return sorted(
-            _glob.glob(os.path.join(path, "**", "*.mvt"), recursive=True)
-            + _glob.glob(os.path.join(path, "**", "*.vector.pbf"),
-                         recursive=True))
-    return sorted(_glob.glob(path)) or [path]
-
-
 def st_read_mvt(
     spark: SparkSession,
     path: str,
@@ -386,38 +376,21 @@ def st_read_mvt(
     geom_col: str = "geom",
     tile: Optional[Tuple[int, int, int]] = None,
 ) -> DataFrame:
-    """Distributed MVT scan: the driver binds the tile list, each task
-    decodes its own tiles. ``tile=(z,x,y)`` applies to every file (single
-    georeferenced tile read); directory scans of a z/x/y pyramid pass
-    tile=None and keep tile-local coordinates plus the source_file path
-    (which carries z/x/y for downstream georeferencing)."""
-    files = _mvt_files(path)
-    if not files:
-        raise FileNotFoundError(path)
-    fdf = spark.createDataFrame(
-        [(f,) for f in files], "path string"
-    ).repartition(min(len(files), spark.sparkContext.defaultParallelism))
+    """Distributed MVT scan: each task decodes its own tiles (a directory
+    is scanned recursively for ``*.mvt`` / ``*.vector.pbf``).
+    ``tile=(z,x,y)`` applies to every file (single georeferenced tile
+    read); directory scans of a z/x/y pyramid pass tile=None and keep
+    tile-local coordinates plus the source_file path (which carries z/x/y
+    for downstream georeferencing)."""
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip
+    def parse(p: str, data: bytes) -> List[tuple]:
+        if data[:2] == b"\x1f\x8b":  # tiles are often gzipped
+            data = gzip.decompress(data)
+        return [row + (p,) for row in decode_mvt(data, layer=layer, tile=tile)]
 
-        for pdf in batches:
-            out = []
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    data = fh.read()
-                if data[:2] == b"\x1f\x8b":  # tiles are often gzipped
-                    data = gzip.decompress(data)
-                for (name, fid, wkb, props, extent) in decode_mvt(
-                        data, layer=layer, tile=tile):
-                    out.append((name, fid, wkb, props, extent, str(p)))
-            yield pd.DataFrame(
-                out, columns=[f.name for f in MVT_SCHEMA.fields])
-
-    df = fdf.mapInPandas(scan, schema=MVT_SCHEMA)
-    if geom_col != "geom":
-        df = df.withColumnRenamed("geom", geom_col)
-    return df
+    return scan_files(
+        binary_files(spark, path, "*.{mvt,vector.pbf}", recursive=True),
+        parse, MVT_SCHEMA, geom_col)
 
 
 _MAX_SINK_BYTES = 1 << 30

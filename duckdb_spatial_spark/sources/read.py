@@ -5,9 +5,9 @@ Tiering:
 * **native formats** (no external libs): parquet / geoparquet (WKB geometry
   column), csv (+WKT column), json, orc — straight ``spark.read`` with
   geometry post-processing.
-* **GeoJSON** — own distributed reader: one task per file, driver lists
-  files only (bind phase = the reference's ``st_read.cpp:105-240``; scan
-  phase = per-file task, like its per-thread Arrow batches).
+* **GeoJSON** — own distributed reader: one task per file through the
+  shared ``binaryFile`` scan (sources/filescan.py; the reference's
+  ``st_read.cpp:105-240`` bind + per-thread scan shape).
 * **Shapefile** (.shp/.dbf, sources/shapefile.py), **GeoPackage**
   (stdlib sqlite3, sources/gpkg.py, rowid-range parallel scan with bbox +
   column pushdown), **FlatGeobuf** (hand-rolled flatbuffers codec,
@@ -30,7 +30,7 @@ Tiering:
 
 from __future__ import annotations
 
-import glob as _glob
+import gzip
 import json
 import os
 from typing import Iterator, List, Optional
@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 
 from ..geom.geojson import geojson_to_geometry
 from ..geom.wkb import to_wkb
+from .filescan import binary_files, scan_files
 
 # fixed ST_ReadOSM output schema (st_read_osm.cpp:39-90)
 OSM_SCHEMA = T.StructType(
@@ -96,24 +97,6 @@ def st_drivers(spark: SparkSession) -> DataFrame:
     )
 
 
-def _geojson_files(path: str) -> List[str]:
-    if os.path.isdir(path):
-        found = sorted(
-            _glob.glob(os.path.join(path, "**", "*.json"), recursive=True)
-            + _glob.glob(os.path.join(path, "**", "*.geojson"), recursive=True)
-        )
-        if not found:
-            # the distributed geojson sink emits newline-delimited
-            # features as Spark text part files (part-*.txt) — pick those
-            # up so a sink directory roundtrips through the reader
-            found = sorted(
-                f for f in _glob.glob(os.path.join(path, "part-*"))
-                if not f.endswith(".crc")
-            )
-        return found
-    return sorted(_glob.glob(path)) or [path]
-
-
 GEOJSON_SCHEMA = T.StructType(
     [
         T.StructField("geom", T.BinaryType()),
@@ -123,56 +106,47 @@ GEOJSON_SCHEMA = T.StructType(
 )
 
 
+def _parse_geojson(p: str, data: bytes) -> List[tuple]:
+    # transparent gzip — the /vsigzip/ analog (gdal_vsi.test)
+    if p.endswith(".gz"):
+        data = gzip.decompress(data)
+    txt = data.decode("utf-8").strip()
+    try:
+        obj = json.loads(txt)
+        t = obj.get("type")
+        if t == "FeatureCollection":
+            feats = obj.get("features", [])
+        elif t == "Feature":
+            feats = [obj]
+        else:
+            feats = [{"type": "Feature", "geometry": obj, "properties": {}}]
+    except json.JSONDecodeError:  # newline-delimited features
+        feats = [json.loads(line) for line in txt.splitlines() if line.strip()]
+    rows = []
+    for ft in feats:
+        geom = ft.get("geometry")
+        props = ft.get("properties") or {}
+        rows.append((
+            to_wkb(geojson_to_geometry(geom)) if geom else None,
+            {str(k): (json.dumps(v) if isinstance(v, (dict, list)) else str(v))
+             for k, v in props.items()},
+            p,
+        ))
+    return rows
+
+
 def read_geojson(spark: SparkSession, path: str) -> DataFrame:
-    """Distributed GeoJSON reader: driver binds the file list, each task
-    parses its files (FeatureCollection | single Feature | bare geometry |
-    newline-delimited features)."""
-    files = _geojson_files(path)
-    if not files:
-        raise FileNotFoundError(path)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string").repartition(
-        min(len(files), spark.sparkContext.defaultParallelism)
-    )
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gzip
-
-        for pdf in batches:
-            out = []
-            for p in pdf["path"]:
-                # transparent gzip — the /vsigzip/ analog (gdal_vsi.test)
-                if str(p).endswith(".gz"):
-                    with gzip.open(p, "rt") as fh:
-                        txt = fh.read().strip()
-                else:
-                    with open(p) as fh:
-                        txt = fh.read().strip()
-                feats = []
-                try:
-                    obj = json.loads(txt)
-                    t = obj.get("type")
-                    if t == "FeatureCollection":
-                        feats = obj.get("features", [])
-                    elif t == "Feature":
-                        feats = [obj]
-                    else:
-                        feats = [{"type": "Feature", "geometry": obj, "properties": {}}]
-                except json.JSONDecodeError:  # newline-delimited features
-                    feats = [json.loads(line) for line in txt.splitlines() if line.strip()]
-                for ft in feats:
-                    geom = ft.get("geometry")
-                    props = ft.get("properties") or {}
-                    out.append(
-                        (
-                            to_wkb(geojson_to_geometry(geom)) if geom else None,
-                            {str(k): (json.dumps(v) if isinstance(v, (dict, list)) else str(v))
-                             for k, v in props.items()},
-                            p,
-                        )
-                    )
-            yield pd.DataFrame(out, columns=["geom", "properties", "source_file"])
-
-    return fdf.mapInPandas(parse, schema=GEOJSON_SCHEMA)
+    """Distributed GeoJSON reader: each task parses its files
+    (FeatureCollection | single Feature | bare geometry | newline-delimited
+    features). A directory is scanned recursively for ``*.json`` /
+    ``*.geojson``, else for the ``part-*`` files of the geojson sink."""
+    files = binary_files(spark, path, "*.{json,geojson}", recursive=True)
+    if not files.inputFiles():
+        # the distributed geojson sink emits newline-delimited features as
+        # Spark text part files (part-*.txt) — pick those up so a sink
+        # directory roundtrips through the reader
+        files = binary_files(spark, path, "part-*")
+    return scan_files(files, _parse_geojson, GEOJSON_SCHEMA)
 
 
 def st_read(

@@ -66,7 +66,6 @@ def st_read_shp(
         if not os.path.exists(f):
             raise FileNotFoundError(f)
     schema = shp_schema(files[0], geom_col)
-    ncols = len(schema.fields)
 
     paths_df = spark.createDataFrame(
         [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
@@ -93,7 +92,6 @@ def st_read_shp(
                 ]
                 yield pd.DataFrame(data, columns=[f.name for f in schema.fields])
 
-    _ = ncols
     return paths_df.mapInPandas(scan, schema=schema)
 
 

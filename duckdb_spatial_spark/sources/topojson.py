@@ -11,13 +11,10 @@ feature ``id``/``properties`` as a JSON string).
 """
 from __future__ import annotations
 
-import glob
 import json
-import os
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -25,6 +22,7 @@ from ..geom.core import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
                          MULTIPOINT, MULTIPOLYGON, POINT, POLYGON, Geometry,
                          collect)
 from ..geom.wkb import to_wkb
+from .filescan import binary_files, scan_files
 
 TOPOJSON_SCHEMA = T.StructType([
     T.StructField("source_file", T.StringType()),
@@ -150,25 +148,7 @@ def st_read_topojson(
     layer: Optional[str] = None,
     geom_col: str = "geom",
 ) -> DataFrame:
-    files = (sorted(glob.glob(os.path.join(path, "*.topojson"))
-                    + glob.glob(os.path.join(path, "*.json")))
-             if os.path.isdir(path) else [path])
-    if not files:
-        return spark.createDataFrame([], TOPOJSON_SCHEMA)
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(min(len(files), 64))
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p) as fh:
-                    rows = parse_topojson_text(fh.read(), str(p), layer)
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["source_file", "layer", "id",
-                                       "properties", "geom"])
-
-    df = fdf.mapInPandas(scan, schema=TOPOJSON_SCHEMA)
-    if geom_col != "geom":
-        df = df.withColumnRenamed("geom", geom_col)
-    return df
+    return scan_files(
+        binary_files(spark, path, "*.{topojson,json}"),
+        lambda p, data: parse_topojson_text(data.decode("utf-8"), p, layer),
+        TOPOJSON_SCHEMA, geom_col)
