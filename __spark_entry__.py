@@ -33,9 +33,11 @@ from duckdb_spatial_spark.operators import (
     textops,
 )
 from duckdb_spatial_spark.operators.similarity import cosine_similarity
+from duckdb_spatial_spark.runtime import (adaptive_partitions, scoped_conf,
+                                          utc_timestamp)
 from duckdb_spatial_spark.sources import st_generatepoints
 from duckdb_spatial_spark.sources.tables import (load_table, local_relation,
-                                                 read_layout)
+                                                 read_layout, stream_table)
 
 
 # --------------------------------------------------------------- helpers
@@ -95,71 +97,6 @@ def _ssort(df: DataFrame, *cols) -> DataFrame:
     single-partition sort is strictly cheaper and scale-safe."""
     return df.repartition(1).sortWithinPartitions(*cols)
 
-
-import contextlib as _contextlib
-
-
-@_contextlib.contextmanager
-def _stream_single_pass(spark: SparkSession):
-    """Disable NO-DATA micro-batches for one availableNow streaming
-    drain. The engine fires an empty trailing batch to advance the
-    watermark — needed only when the SINK contents depend on it
-    (append-mode aggregations flush windows then; event-time timeouts
-    fire then). For an inner stream-stream join (output emitted in the
-    data batch; the watermark only EVICTS state a terminating query
-    discards anyway) and for update-mode monotone-state operators (the
-    last DATA update per key already carries the final values), the
-    empty batch is pure fixed cost: one extra round of planning + a
-    state-store commit per store instance (measured 1.27 s of trigger
-    time for q91's empty batch, 0.72 s for q81's). Scoped set-and-
-    restore; the conf is read live per batch, so it must stay set until
-    the query terminates — call inside the ``with``, drain inside the
-    ``with``. NEVER use for append-mode aggregations."""
-    key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    try:
-        old = spark.conf.get(key)
-    except Exception:
-        old = None
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-
-
-@_contextlib.contextmanager
-def _stream_state_partitions(spark: SparkSession, batch_df: DataFrame):
-    """Scoped shuffle-partition count for a streaming query, derived
-    from the INPUT-size estimate (the `_adaptive_partitions` yardstick
-    applied to state layout; guide §2.2 "fewer, larger partitions").
-    Each state partition instantiates one state-store provider per
-    stateful operator and pays a per-batch commit; a stream whose
-    batches are KBs spreads that fixed cost over near-empty stores
-    (measured: q75 0.94 s of state commit across 8 stores holding 150
-    rows total). Clamped to [1, defaultParallelism]: a 100-TB stream
-    still fans out to every core — scale-adaptive, not a local tune.
-    The count is pinned into the query's offset log at batch 0, so the
-    conf can be restored after ``start()`` returns a running query —
-    but keeping the scope until termination is the simple, safe shape.
-
-    Use ONLY where the per-batch stateful work is bounded by operator
-    parameters or map-side partials (windowed min/max partials, a
-    pool-bounded re-rank): a row-bound Python state stage (per-user
-    funnel merges) needs the ambient data-parallel fan-out even when
-    the byte estimate is small (measured 2.4x slower at 1 partition on
-    q153)."""
-    from duckdb_spatial_spark.operators.invindex import _adaptive_partitions
-
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(_adaptive_partitions(batch_df)))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
 
 def _events_pts(spark: SparkSession, sf: str, fan_out: bool = True) -> DataFrame:
     """Point substrate from events: x = value ∈ (0, ~490), y = user_id.
@@ -1696,19 +1633,7 @@ def q75_streaming_extent(spark: SparkSession, sf: str) -> DataFrame:
     from duckdb_spatial_spark.streaming import streaming_extent_agg
 
     batch = load_table(spark, sf, "events", fan_out=False)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", (F.col("ts") / F.lit(1e9)).cast("timestamp"))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        # watermarks require TIMESTAMP (LTZ); pin the session to UTC so the
-        # NTZ→LTZ cast is epoch-faithful regardless of host timezone
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    pts = stream.select(
+    pts = stream_table(spark, sf, "events").select(
         "ts", "event_type", F.col("value").alias("x"),
         F.col("user_id").cast("double").alias("y"),
     )
@@ -1721,7 +1646,8 @@ def q75_streaming_extent(spark: SparkSession, sf: str) -> DataFrame:
     # complete-mode min/max partials: per-batch state rows are bounded
     # by open windows x event_type, so state partitions follow the
     # input-size estimate (1 here, defaultParallelism at scale)
-    with _stream_state_partitions(spark, batch):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions":
+                             adaptive_partitions(batch)}):
         q = (
             agg.writeStream.format("memory").queryName(sink)
             .outputMode("complete").trigger(availableNow=True).start()
@@ -1866,18 +1792,7 @@ def q81_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     bespoke-state operator an exact SQL oracle."""
     from duckdb_spatial_spark.streaming import streaming_session_extents
 
-    batch = load_table(spark, sf, "events", fan_out=False)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", (F.col("ts") / F.lit(1e9)).cast("timestamp"))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    pts = stream.select(
+    pts = stream_table(spark, sf, "events").select(
         "ts",
         (F.col("user_id") % 20).cast("string").alias("key"),
         F.col("value").alias("x"),
@@ -1895,10 +1810,12 @@ def q81_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     # the min/max/max-n sink aggregate already carries — row-level
     # verified + oracle-green both SFs). The drain loop keeps the old
     # empty-batch condition as a fallback and adds the is-active check
-    # the self-terminating form needs.
+    # the self-terminating form needs. The conf is read per batch, so
+    # the drain stays inside the scope.
     import time as _time
 
-    with _stream_single_pass(spark):
+    with scoped_conf(spark, {
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
         q = (
             sess.writeStream.format("memory").queryName(sink)
             .outputMode("update").trigger(availableNow=True).start()
@@ -2394,15 +2311,7 @@ def q91_streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     exact oracle."""
     from duckdb_spatial_spark.streaming import streaming_interval_join
 
-    batch = load_table(spark, sf, "events", fan_out=False)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    if dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_table(spark, sf, "events")
     clicks = stream.filter(F.col("event_type") == "click").select(
         (F.col("user_id") % 50).alias("k"), F.col("ts").alias("lt"),
         F.col("event_id").alias("click_id"))
@@ -2418,7 +2327,8 @@ def q91_streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     # trailing batch only advances the watermark to evict state this
     # terminating drain discards — skipping it removes one full round
     # of planning + 32 state-store commits (measured 1.27 s trigger)
-    with _stream_single_pass(spark):
+    with scoped_conf(spark, {
+            "spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
         q = (j.writeStream.format("memory").queryName(sink)
              .outputMode("append").trigger(availableNow=True).start())
         q.awaitTermination(300)
@@ -3384,7 +3294,8 @@ def q121_resample_ffill(spark: SparkSession, sf: str) -> DataFrame:
     grid + native ASOF LEFT JOIN."""
     from duckdb_spatial_spark.operators.temporal import resample_ffill
 
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     obs = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy((F.col("user_id") % 20).alias("k"),
@@ -3411,7 +3322,8 @@ def q122_rolling_window(spark: SparkSession, sf: str) -> DataFrame:
     across engines) and event count; checksummed per key. Pure built-in
     window — §2.J relational breadth the reference gets from DuckDB's
     RANGE frames."""
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     look = 7 * 86400 * 1_000_000
     pts = e.select(
         F.col("event_id").alias("eid"),
@@ -3625,16 +3537,6 @@ def _q124_oracle_sql() -> str:
     """
 
 
-def _events_utc(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """events.ts as TIMESTAMP (LTZ): the driver parquet may surface NTZ,
-    which unix_micros rejects — pin the session to UTC so the cast is
-    epoch-faithful (the q75/q91 pattern)."""
-    if dict(e.dtypes).get("ts") == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        e = e.withColumn("ts", F.col("ts").cast("timestamp"))
-    return e
-
-
 def q112_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     """As-of join, the temporal operator DuckDB ships natively (ASOF JOIN)
     and Spark lacks: every click event picks the latest purchase at or
@@ -3644,7 +3546,8 @@ def q112_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     the identical tolerance CASE — a different algorithm entirely."""
     from duckdb_spatial_spark.operators.temporal import asof_join
 
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     clicks = e.filter(F.col("event_type") == "click").select(
         (F.col("user_id") % 50).alias("k"), F.col("ts"),
         F.col("event_id").alias("click_id"))
@@ -3682,7 +3585,8 @@ def q113_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     Oracle: the plain overlap-predicate join."""
     from duckdb_spatial_spark.operators.temporal import interval_join
 
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     us = F.unix_micros(F.col("ts"))
     clicks = e.filter(F.col("event_type") == "click").select(
         (F.col("user_id") % 50).alias("k"), us.alias("s"),
@@ -3833,7 +3737,8 @@ def q126_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     in ANSI SQL."""
     from duckdb_spatial_spark.operators.temporal import sessionize
 
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     ev = e.select(
         (F.col("user_id") % 50).alias("k"),
         F.unix_micros("ts").alias("t"),
@@ -4262,12 +4167,8 @@ def q138_streaming_index(spark: SparkSession, sf: str) -> DataFrame:
     path = os.path.join(tempfile.mkdtemp(prefix="dss_q138_"), "sidx")
     build_scored_index(d.filter(F.col("doc_id") % 2 == 0), path,
                        "doc_id", "text", segment_size=500)
-    stream = (
-        spark.readStream.schema(d.schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
+    stream = stream_table(spark, sf, "documents") \
         .filter(F.col("doc_id") % 2 == 1)
-    )
     q = streaming_index_append(stream, path, segment_size=500)
     q.awaitTermination()
     return (
@@ -4445,7 +4346,8 @@ def q152_session_funnel(spark: SparkSession, sf: str) -> DataFrame:
     from duckdb_spatial_spark.operators.temporal import (session_funnel,
                                                          sessionize)
 
-    e = _events_utc(spark, load_table(spark, sf, "events", fan_out=False))
+    e = load_table(spark, sf, "events", fan_out=False) \
+        .withColumn("ts", utc_timestamp("ts"))
     ev = e.select("user_id", "event_type", "ts",
                   F.unix_micros("ts").alias("t"),
                   F.col("event_id").alias("eid"))
@@ -4530,18 +4432,7 @@ def q153_streaming_funnel(spark: SparkSession, sf: str) -> DataFrame:
     hash."""
     from duckdb_spatial_spark.streaming import streaming_funnel
 
-    batch = load_table(spark, sf, "events", fan_out=False)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    if dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn(
-            "ts", (F.col("ts") / F.lit(1e9)).cast("timestamp"))
-    elif dict(stream.dtypes).get("ts") == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = stream_table(spark, sf, "events")
     # thin the stream (1/7 of events) so the depth distribution spans
     # 0..3 — on the full table every user completes the funnel and the
     # check degenerates to one row
@@ -4760,7 +4651,8 @@ def q158_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()  # reused by every round — 4 lineitem scans otherwise;
-    # like q115's wf, reclaimed by the ContextCleaner when refs drop
+    # like q115's wf it stays in the CacheManager until an unpersist or
+    # clearCache(): dropping the last reference does not free it
     dist = spark.range(1).select(
         F.lit(0).cast("long").alias("node"),
         F.lit(0).cast("int").alias("d"))
@@ -5045,11 +4937,8 @@ def q142_streaming_layout(spark: SparkSession, sf: str) -> DataFrame:
     zorder_cluster(ev.filter(F.col("event_id") % 2 == 0),
                    ["value", "user_id"], ranges=ranges,
                    num_partitions=4).write.parquet(path)
-    batch = load_table(spark, sf, "events", fan_out=False)
     stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+        stream_table(spark, sf, "events")
         .filter(F.col("event_id") % 2 == 1)
         .select("event_id", "user_id", "value")
     )
@@ -5500,17 +5389,11 @@ def q160_streaming_mmr(spark: SparkSession, sf: str) -> DataFrame:
     desyncs the hash)."""
     from duckdb_spatial_spark.streaming import streaming_mmr_rerank
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     batch = load_table(spark, sf, "embeddings", fan_out=False)
     qv = batch.filter(F.col("vec_id") == 0).select(
         "embedding").collect()[0][0]
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf)
-    )
     ev = (
-        stream.filter(F.col("vec_id") > 0)
+        stream_table(spark, sf, "embeddings").filter(F.col("vec_id") > 0)
         .withColumn("ts", F.timestamp_seconds(
             F.lit(1704067200)
             + (F.col("vec_id") % 4) * 3600
@@ -5524,7 +5407,8 @@ def q160_streaming_mmr(spark: SparkSession, sf: str) -> DataFrame:
     # pool-bounded state (<= pool triples x 4 windows): state partitions
     # follow the input-size estimate (1 here, defaultParallelism at
     # scale — the shuffle fans out exactly when the stream does)
-    with _stream_state_partitions(spark, batch):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions":
+                             adaptive_partitions(batch)}):
         q = (
             out.writeStream.format("memory").queryName(sink)
             .outputMode("update").trigger(availableNow=True).start()

@@ -589,9 +589,9 @@ def connected_components(
     # over the guard, the worst case is min(partition_rows, guard+1)
     # rows per task — the documented P x limit bound, and the probe
     # job doubles as the cache materializer tier 3 reads.
-    from .join import _probe_limit_collect
+    from ..runtime import probe_limit_collect
 
-    rows = _probe_limit_collect(star, driver_node_limit + 1)
+    rows = probe_limit_collect(star, driver_node_limit + 1)
 
     if len(rows) <= driver_node_limit:
         # Tier 2: the star mapping is one row per edge-touched node and

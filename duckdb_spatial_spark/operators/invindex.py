@@ -30,6 +30,8 @@ from typing import List, Optional
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..runtime import adaptive_partitions
+
 __all__ = [
     "build_inverted_index",
     "index_term_stats",
@@ -47,24 +49,6 @@ def _terms(text_col: str) -> Column:
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+"),
         lambda w: w != "",
     )
-
-
-def _adaptive_partitions(df: DataFrame, target_bytes: int = 64 << 20) -> int:
-    """Output-partition count derived from the INPUT size estimate, not
-    from cluster parallelism (guide §6: size output files to
-    64 MB-1 GB). Catalyst's optimizedPlan stats are a driver-side
-    estimate (no job); posting layouts are roughly corpus-sized, so
-    input bytes are the right yardstick. Clamped to
-    [1, defaultParallelism]: a tiny corpus yields ONE sorted file (no
-    range-sampling job, no 32 near-empty files), a 100-TB corpus still
-    fans out to every core."""
-    try:
-        est = int(df._jdf.queryExecution().optimizedPlan()
-                  .stats().sizeInBytes())
-    except Exception:
-        est = 1 << 60  # unknown → keep the old fan-out behavior
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(par, -(-est // int(target_bytes))))
 
 
 def build_inverted_index(
@@ -103,7 +87,7 @@ def build_inverted_index(
         F.sum("__n").over(Window.partitionBy("term")).cast("long").alias("df"),
         "docs",
     )
-    np_ = num_partitions or _adaptive_partitions(df)
+    np_ = num_partitions or adaptive_partitions(df)
     (
         out.repartitionByRange(np_, "term", "seg")
         .sortWithinPartitions("term", "seg")
@@ -191,7 +175,7 @@ def _scored_generation(df: DataFrame, path: str, id_col: str,
         F.transform("__p", lambda x: x["tf"]).alias("tfs"),
         F.transform("__p", lambda x: x["dl"]).alias("dls"),
     )
-    np_ = num_partitions or _adaptive_partitions(df)
+    np_ = num_partitions or adaptive_partitions(df)
     (
         out.repartitionByRange(np_, "term", "seg")
         .sortWithinPartitions("term", "seg")
@@ -419,7 +403,7 @@ def build_positional_index(
         F.transform("__p", lambda x: x["__d"]).alias("docs"),
         F.transform("__p", lambda x: x["positions"]).alias("pos_lists"),
     )
-    np_ = num_partitions or _adaptive_partitions(df)
+    np_ = num_partitions or adaptive_partitions(df)
     (
         out.repartitionByRange(np_, "term", "seg")
         .sortWithinPartitions("term", "seg")

@@ -39,6 +39,7 @@ from ..geom import kernels as K
 from ..geom import vec as Vec
 from ..geom.wkb import from_wkb
 from ..functions import scalar as S
+from ..runtime import probe_limit_collect
 
 # predicate name → (kernel, needs_swap_for_bulk)
 _KERNELS = {
@@ -55,26 +56,6 @@ _KERNELS = {
 }
 
 BBOX_IMPLIED = frozenset(_KERNELS)  # all of these imply bbox intersection
-
-
-def _probe_limit_collect(df: DataFrame, n: int):
-    """``df.limit(n).collect()`` in ONE job. CollectLimit's default
-    escalation (1 partition, then 4×, …) re-runs the child subtree per
-    wave whenever the input holds fewer than ``n`` rows — measured 4
-    jobs for a broadcast-guard probe of a small build side. Scanning
-    all partitions at once transfers at most min(partition_rows, n)
-    rows per task, the same bound as the escalation's final wave."""
-    sess = df.sparkSession
-    key = "spark.sql.limit.initialNumPartitions"
-    old = sess.conf.get(key, None)
-    sess.conf.set(key, str(1 << 30))
-    try:
-        return df.limit(n).collect()
-    finally:
-        if old is None:
-            sess.conf.unset(key)
-        else:
-            sess.conf.set(key, old)
 
 
 def _norm_pred(predicate: str) -> str:
@@ -340,7 +321,7 @@ def st_join(
     # 200k-row side of huge polygons is still never broadcast.
     if broadcast_threshold > 0:
         try:
-            sample = _probe_limit_collect(right, broadcast_threshold + 1)
+            sample = probe_limit_collect(right, broadcast_threshold + 1)
         except Exception:
             sample = None
         if sample is not None and len(sample) <= broadcast_threshold:
@@ -668,7 +649,7 @@ def st_join_points(
     # right plan), and the sampled rows double as the build side. An
     # over-budget right side redirects to the grid tier (st_join) instead
     # of OOMing the driver/executors with an unguarded collect.
-    right_rows = _probe_limit_collect(right, broadcast_threshold + 1)
+    right_rows = probe_limit_collect(right, broadcast_threshold + 1)
     geom_bytes = sum(
         len(r[right_geom]) for r in right_rows if r[right_geom] is not None
     )

@@ -477,11 +477,10 @@ def ngram_lm_doc_scores(
 
     Cache lifetime (both paths persist one frame): blocks stay cached
     after the caller's action — the returned frame is lazy, so there is
-    no point inside this function where they are safe to drop. Spark's
-    ContextCleaner reclaims them once the caller releases the returned
-    DataFrame (Python GC → JVM RDD unreference); long-lived sessions
-    that pin the result should drop the reference or call
-    ``spark.catalog.clearCache()``.
+    no point inside this function where they are safe to drop. The
+    CacheManager keeps them until an explicit unpersist: releasing the
+    returned DataFrame (Python GC, even a JVM GC) frees nothing, so
+    long-lived sessions should call ``spark.catalog.clearCache()``.
     """
     if kind not in ("addk", "kn"):
         raise ValueError("kind must be 'addk' or 'kn'")

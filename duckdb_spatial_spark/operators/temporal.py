@@ -43,6 +43,8 @@ from typing import List, Optional, Sequence, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime import epoch_micros
+
 __all__ = ["asof_join", "funnel", "interval_join", "resample_ffill",
            "session_funnel", "sessionize"]
 
@@ -53,6 +55,21 @@ def _as_list(x) -> List[str]:
     if isinstance(x, str):
         return [x]
     return list(x)
+
+
+def _epoch_us(c: Column, dt: str) -> Column:
+    """Exact epoch microseconds of column ``c`` of Spark type ``dt``.
+    TIMESTAMP_NTZ wall time reads as UTC, so the session timezone never
+    enters (a session-zone cast would reorder NTZ values around a
+    daylight-saving gap); other types go through the TIMESTAMP cast."""
+    if dt == "timestamp_ntz":
+        return epoch_micros(c)
+    return F.unix_micros(c.cast("timestamp"))
+
+
+def _ord(c: Column, dt: str) -> Column:
+    """Numeric ordering key: epoch µs for timestamps, else the value."""
+    return _epoch_us(c, dt) if dt.startswith("timestamp") else c.cast("double")
 
 
 def asof_join(
@@ -97,17 +114,6 @@ def asof_join(
         raise ValueError(f"right value columns collide with left: {overlap}")
 
     ts_l = F.col(left_on)
-    # Numeric ordering key that is exact for timestamps (microseconds).
-    # TIMESTAMP_NTZ lacks unix_micros — cast to LTZ first (pin the session
-    # timezone to UTC for an epoch-faithful cast; ordering and tolerance
-    # are correct under any fixed zone either way).
-    def _ord(c: Column, dt: str) -> Column:
-        if dt == "timestamp_ntz":
-            return F.unix_micros(c.cast("timestamp"))
-        if dt.startswith("timestamp"):
-            return F.unix_micros(c)
-        return c.cast("double")
-
     l_dt = dict(left.dtypes)[left_on]
     r_dt = dict(right.dtypes)[right_on]
 
@@ -213,13 +219,7 @@ def asof_join(
         u = u.drop("__bkt")
 
     res = u.filter(F.col("__tag") == 1)
-    matched_ord = (
-        F.unix_micros(F.col("__m.__rt").cast("timestamp"))
-        if r_dt == "timestamp_ntz"
-        else F.unix_micros(F.col("__m.__rt"))
-        if r_dt.startswith("timestamp")
-        else F.col("__m.__rt").cast("double")
-    )
+    matched_ord = _ord(F.col("__m.__rt"), r_dt)
     if tolerance_us is not None:
         dist = F.abs(F.col("__ord") - matched_ord)
         res = res.withColumn(
@@ -273,12 +273,7 @@ def interval_join(
                r_end + suffix if r_end in overlap else r_end)
 
     def _num(df: DataFrame, col: str) -> Column:
-        dt = dict(df.dtypes)[col]
-        if dt == "timestamp_ntz":
-            return F.unix_micros(F.col(col).cast("timestamp")).cast("double")
-        if dt.startswith("timestamp"):
-            return F.unix_micros(F.col(col)).cast("double")
-        return F.col(col).cast("double")
+        return _ord(F.col(col), dict(df.dtypes)[col]).cast("double")
 
     lnum_s, lnum_e = _num(left, l_start), _num(left, l_end)
     rnum_s, rnum_e = _num(right_renamed, rs), _num(right_renamed, re_)
@@ -504,9 +499,9 @@ def funnel(
     steps = list(steps)
     if not steps:
         raise ValueError("funnel: empty steps")
-    # unix_micros is exact; a double round-trip could drift a µs vs the
+    # integer µs are exact; a double round-trip could drift a µs vs the
     # oracle's epoch_us
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = _epoch_us(F.col(ts_col), dict(df.dtypes)[ts_col])
     ev = df.select(F.col(user_col).alias("__u"),
                    F.col(type_col).alias("__t"),
                    us.cast("long").alias("__us"))
@@ -587,7 +582,7 @@ def session_funnel(
     if not steps:
         raise ValueError("session_funnel: empty steps")
     keys = _as_list(key_col)
-    us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    us = _epoch_us(F.col(ts_col), dict(df.dtypes)[ts_col])
     d = df.select(*[F.col(c) for c in keys],
                   F.col(type_col).alias("__t"),
                   us.cast("long").alias("__us"))

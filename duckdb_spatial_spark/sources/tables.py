@@ -1,9 +1,9 @@
 """Driver testdata loading helpers.
 
-``events.parquet`` is written with nanosecond timestamps, which Spark 4's
-Parquet reader rejects unless ``spark.sql.legacy.parquet.nanosAsLong`` is
-set; we set it and rebuild a proper TimestampType column (UTC microseconds)
-so windowing/watermarks work unchanged.
+``events.parquet`` stores ``ts`` as microsecond timestamps without a
+timezone, which Spark reads as TIMESTAMP_NTZ. Batch queries take it as
+is; :func:`stream_table` turns it into a TIMESTAMP (its wall time read as
+UTC) because watermarks and event-time windows need one.
 """
 
 from __future__ import annotations
@@ -11,8 +11,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..runtime import utc_timestamp
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -143,14 +144,21 @@ def load_table(
     single-row-group file across cores for pandas-UDF-heavy consumers; pass
     False for pure-JVM relational queries where the exchange is dead cost."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_cached_schema(spark, path)
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", (F.col("ts") / F.lit(1e9)).cast("timestamp"))
-    else:
-        df = _read_cached_schema(spark, path)
+    df = _read_cached_schema(spark, path)
     return _fan_out(spark, df, path) if fan_out else df
+
+
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """A driver testdata table as a file STREAM over ``sf_dir``, with
+    :func:`load_table`'s schema. ``events.ts`` becomes a TIMESTAMP via
+    ``runtime.utc_timestamp``, so the stream's event time does not depend
+    on the session timezone."""
+    schema = load_table(spark, sf_dir, name, fan_out=False).schema
+    df = (spark.readStream.schema(schema)
+          .option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir))
+    if name == "events":
+        df = df.withColumn("ts", utc_timestamp("ts"))
+    return df
 
 
 def read_layout(spark: SparkSession, *paths: str) -> DataFrame:

@@ -12,6 +12,15 @@ sf (AQE off so static shapes are visible) and count the anti-patterns:
                                use is a Python-runner job (a LocalRelation
                                would cost none); listed per query, not
                                gated.
+* session conf changes       — "query: key" for every conf key whose
+                               value changed while the query was built;
+                               must be empty (scope writes with
+                               runtime.scoped_conf).
+* CacheManager entries left  — queries that left Dataset caches behind
+                               (persist without unpersist); listed, not
+                               gated. The cache is cleared after every
+                               query, so each entry is charged to the
+                               query that made it.
 
 Queries that EXECUTE during construction (streaming drains, operators
 with driver-side fits) still yield their final frame's plan; their
@@ -50,16 +59,27 @@ def main() -> None:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted")
 
+    cache = spark._jsparkSession.sharedState().cacheManager()
     cart, bep, bnlj, rdd, errs = [], [], {}, {}, []
+    conf_changed, cache_left = [], []
     for name, fn in entry.queries().items():
         if ONLY and name not in ONLY:
             continue
+        before = dict(spark.conf.getAll)
         try:
             df = fn(spark, SF)
             plan = df._jdf.queryExecution().explainString(mode)
         except Exception as e:  # noqa: BLE001 — census must finish
             errs.append(f"{name}: {type(e).__name__}")
             continue
+        finally:
+            after = dict(spark.conf.getAll)
+            conf_changed += [f"{name}: {k}"
+                             for k in sorted(before.keys() | after.keys())
+                             if before.get(k) != after.get(k)]
+            if not cache.isEmpty():
+                cache_left.append(name)
+            spark.catalog.clearCache()
         if "CartesianProduct" in plan:
             cart.append(name)
         if "BatchEvalPython" in plan:
@@ -77,9 +97,11 @@ def main() -> None:
         "batch_eval_python": bep,
         "broadcast_nested_loop": bnlj,
         "existing_rdd_scan": rdd,
+        "session_conf_changed": conf_changed,
+        "cache_left": cache_left,
         "errors": errs,
     }, indent=1))
-    ok = not cart and not bep and not errs
+    ok = not cart and not bep and not conf_changed and not errs
     print("census:", "CLEAN" if ok else "FINDINGS ABOVE")
     sys.exit(0 if ok else 1)
 

@@ -121,20 +121,8 @@ def test_shp_native_corrupt_raises(spark, tmp_path):
 
 
 def test_streaming_extent_agg(spark):
-    from duckdb_spatial_spark.sources.tables import load_table
-
-    batch = load_table(spark, "/root/testdata/sf0.001", "events")
-    stream = (
-        spark.readStream.schema(
-            spark.read.parquet("/root/testdata/sf0.001/events.parquet").schema
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet("/root/testdata/sf0.001")  # streaming source must be a dir
-        .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withColumn("x", F.col("value"))
-        .withColumn("y", (F.col("user_id") % 100).cast("double"))
-    )
-    agg = streaming_extent_agg(stream, "ts", "x", "y", window="1 day")
+    agg = streaming_extent_agg(_events_stream(spark), "ts", "x", "y",
+                               window="1 day")
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -150,14 +138,10 @@ def test_streaming_extent_agg(spark):
 
 
 def _events_stream(spark, sf="/root/testdata/sf0.001"):
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from duckdb_spatial_spark.sources.tables import stream_table
+
     return (
-        spark.readStream.schema(
-            spark.read.parquet(f"{sf}/events.parquet").schema
-        )
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
+        stream_table(spark, sf, "events")
         .withColumn("x", F.col("value"))
         .withColumn("y", (F.col("user_id") % 100).cast("double"))
     )

@@ -135,6 +135,44 @@ def test_asof_timestamp_columns(spark):
     assert got == {1: 7.0, 2: None}
 
 
+_GAP_SQL = """SELECT * FROM VALUES
+    (1, TIMESTAMP_NTZ'2024-03-10 01:00:00', 'view', 10),
+    (1, TIMESTAMP_NTZ'2024-03-10 02:30:00', 'click', 1),
+    (1, TIMESTAMP_NTZ'2024-03-10 03:10:00', 'purchase', 20)
+    AS t(user_id, ts, event_type, eid)"""
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_asof_ntz_ignores_session_timezone(spark, tz):
+    """TIMESTAMP_NTZ keys order by wall time under any session zone. 02:30
+    on 2024-03-10 falls in Los Angeles' spring-forward gap: a session-zone
+    cast moves it to 03:30, past the 03:10 right row."""
+    from duckdb_spatial_spark.runtime import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.session.timeZone": tz}):
+        ev = spark.sql(_GAP_SQL)
+        left = ev.filter("event_type = 'click'").select("user_id", "ts")
+        right = ev.filter("event_type != 'click'").select(
+            "user_id", "ts", "eid")
+        got = asof_join(left, right, "ts", "ts", by=["user_id"],
+                        value_cols=["eid"]).collect()
+    assert [r["eid"] for r in got] == [10]
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/Los_Angeles"])
+def test_funnel_ntz_ignores_session_timezone(spark, tz):
+    """view 01:00 → click 02:30 → purchase 03:10 completes all three steps
+    under any session zone (see the asof case above)."""
+    from duckdb_spatial_spark.operators.temporal import funnel
+    from duckdb_spatial_spark.runtime import scoped_conf
+
+    with scoped_conf(spark, {"spark.sql.session.timeZone": tz}):
+        got = funnel(spark.sql(_GAP_SQL),
+                     ["view", "click", "purchase"]).collect()
+    assert [(r["steps_completed"], r["t_last_us"] - r["t_first_us"])
+            for r in got] == [(3, 2 * 3600_000_000 + 10 * 60_000_000)]
+
+
 def test_interval_join_diversion_guard(spark):
     """A pathological bucket_width that makes every interval 'long' must
     raise (not silently broadcast the whole table)."""
