@@ -73,9 +73,7 @@ def _local_queries(spark: SparkSession, emb: DataFrame, pairs: list,
     downstream cosine sees identical inputs). Each ANN branch previously
     broadcast the query subtree separately, and each derived-frame
     broadcast build is its own job that re-scans the corpus (trap 13);
-    ``createDataFrame`` would instead parallelize into a 32-partition
-    RDD scan whose broadcast build is a 32-task Python job — a
-    LocalRelation build side collects with no job and no scan."""
+    a LocalRelation build side collects with no job and no scan."""
     from pyspark.sql import types as T
 
     return local_relation(
@@ -150,7 +148,7 @@ def q02_zone_pip_join(spark: SparkSession, sf: str) -> DataFrame:
     pts = _events_pts(spark, sf)
     # 15-row LITERAL dim table: parse the WKT driver-side and hand Spark a
     # LocalRelation of ready WKB — the join's broadcast guard collects it
-    # with no job, where a createDataFrame scan would run Python tasks.
+    # with no job.
     from duckdb_spatial_spark.geom.wkb import to_wkb as _to_wkb
     from duckdb_spatial_spark.geom.wkt import from_wkt as _from_wkt
 
@@ -3014,8 +3012,9 @@ def q111_pca_power_iteration(spark: SparkSession, sf: str) -> DataFrame:
     e = load_table(spark, sf, "embeddings", fan_out=False)
     v, lam = power_iteration_top1(e, "embedding", dim=64, iters=8)
     rows = [(i + 1, round(v[i], 6), round(lam, 6)) for i in range(64)]
-    return spark.createDataFrame(
-        rows, "i long, loading double, eigenvalue double").transform(_ssort, "i")
+    return local_relation(
+        spark, rows, "i long, loading double, eigenvalue double"
+    ).transform(_ssort, "i")
 
 
 def q116_ann_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
@@ -4317,8 +4316,9 @@ def q151_mmr_rerank(spark: SparkSession, sf: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
     rows = mmr_rerank(e.filter(F.col("vec_id") > 0), q, id_col="vec_id",
                       vec_col="embedding", k=8, pool=32, lam=0.7)
-    return spark.createDataFrame(
-        rows, "rank long, id long, rel double, mmr double").orderBy("rank")
+    return local_relation(
+        spark, rows, "rank long, id long, rel double, mmr double"
+    ).orderBy("rank")
 
 
 def _q151_oracle_sql() -> str:

@@ -576,10 +576,6 @@ _st_z_udf = _unary_geom_to(T.DoubleType(), lambda g: float(g.coords[2]) if g.typ
 _st_m_udf = _unary_geom_to(T.DoubleType(), lambda g: float(g.coords[2 + int(g.has_z)]) if g.type_id == 1 and g.has_m and g.coords is not None else None)
 
 
-def _is_struct(c: Column) -> bool:
-    return False  # callers pass structs through dedicated *2d functions
-
-
 def st_x(geom: ColumnOrName) -> Column:
     t = _ctortag(geom)
     if t is not None and t[0] == "point":

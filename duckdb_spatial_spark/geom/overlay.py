@@ -122,17 +122,6 @@ def ear_triangulate(ring: np.ndarray) -> List[np.ndarray]:
     return [t for t in tris if abs(_signed_area(t)) > _EPS_AREA]
 
 
-def _seg_x_line(p, q, a, b):
-    """Intersection of segment pq with the infinite line ab."""
-    r = (q[0] - p[0], q[1] - p[1])
-    s = (b[0] - a[0], b[1] - a[1])
-    denom = r[0] * s[1] - r[1] * s[0]
-    if denom == 0:
-        return q
-    t = ((a[0] - p[0]) * s[1] - (a[1] - p[1]) * s[0]) / denom
-    return (p[0] + t * r[0], p[1] + t * r[1])
-
-
 def _clip_halfplane(pts, a, b, keep_left: bool):
     """One Sutherland–Hodgman pass: keep the part of `pts` on the left
     (or right) of the infinite line a→b. pts is a list of (x, y) tuples.

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
 from .dsir import (_bigrams_zip, _gram_rows, bucket_sql, gram_rows_sql,
                    hashed_bucket)
 from .pipeline import normalized_words
@@ -99,8 +100,7 @@ def nb_score(df: DataFrame, model_rows, stats, id_col: str = "doc_id",
     buckets, alpha = stats["buckets"], stats["alpha"]
     spark = df.sparkSession
     schema = "bucket int, cnt_pos long, cnt_neg long"
-    model = (spark.createDataFrame(model_rows, schema) if model_rows
-             else spark.createDataFrame([], schema))
+    model = local_relation(spark, model_rows, schema)
 
     a = F.lit(alpha)
     ab = F.lit(alpha * buckets)
@@ -502,7 +502,7 @@ def isotonic_calibrate(
     spark = df.sparkSession
     schema = "bin int, n_docs long, n_pos long, calibrated double"
     if not rows:
-        return spark.createDataFrame([], schema)
+        return local_relation(spark, [], schema)
     m = len(rows)
     ccum, scum, c, s = [], [], 0, 0
     for _, cnt, pos in rows:
@@ -529,7 +529,7 @@ def isotonic_calibrate(
         fit[i] = best
     out = [(int(bn), int(cnt), int(pos), fit[i])
            for i, (bn, cnt, pos) in enumerate(rows)]
-    return spark.createDataFrame(out, schema)
+    return local_relation(spark, out, schema)
 
 
 def isotonic_sql(

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from ..functions import scalar as S
 from ..geom.wkt import from_wkt
 from ..geom import kernels as K
+from ..sources.tables import local_relation
 
 
 def st_cluster(
@@ -314,8 +315,7 @@ def st_layout_info(spark, path: str, bbox_cols=("xmin", "ymin", "xmax", "ymax"))
                 stats.get(bbox_cols[0] + "_min"), stats.get(bbox_cols[1] + "_min"),
                 stats.get(bbox_cols[2] + "_max"), stats.get(bbox_cols[3] + "_max"),
             ))
-    return spark.createDataFrame(
-        rows,
+    return local_relation(
+        spark, rows,
         "file string, row_group int, rows long, bytes long, "
-        "xmin double, ymin double, xmax double, ymax double",
-    ).repartition(1)
+        "xmin double, ymin double, xmax double, ymax double")

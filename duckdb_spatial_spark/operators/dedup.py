@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import local_relation
+
 
 def exact_dedup(df: DataFrame, key_cols: List[str], id_col: str) -> DataFrame:
     """Keep exactly one row (min id) per duplicate group.
@@ -621,8 +623,8 @@ def connected_components(
         # final left-join fans out duplicate rows
         label_rows = sorted(
             (n, find(n)) for n in {row["src"] for row in rows})
-        clustered = pairs.sparkSession.createDataFrame(
-            label_rows,
+        clustered = local_relation(
+            pairs.sparkSession, label_rows,
             T.StructType([T.StructField(id_col, node_t),
                           T.StructField("comp", node_t)]),
         )

@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.generate import _uniform01_portable, portable_uniform_sql
+from ..sources.tables import local_relation
 from .pipeline import normalized_words
 
 __all__ = [
@@ -212,14 +213,10 @@ def dsir_log_weights(raw_df: DataFrame, target_df: DataFrame,
     # inner and total; buckets only in the target contribute nothing to
     # any doc's sum and are dropped (matches the SQL twin's LEFT JOIN p)
     spark = raw_df.sparkSession
-    # NOTE: do NOT coalesce(1) a parallelized local list — each of the
-    # 32 slices is a separate Python-runner partition and one task
-    # draining them sequentially measured 4.7 s vs 0.3 s parallel
-    model = spark.createDataFrame(
-        [(r["bucket"], p_cnt.get(r["bucket"], 0), r["c"])
-         for r in q_rows],
-        "bucket int, cnt_p long, cnt_q long",
-    )
+    model = local_relation(
+        spark,
+        [(r["bucket"], p_cnt.get(r["bucket"], 0), r["c"]) for r in q_rows],
+        "bucket int, cnt_p long, cnt_q long")
 
     a = F.lit(float(alpha))
     ab = F.lit(float(alpha) * buckets)
@@ -229,10 +226,9 @@ def dsir_log_weights(raw_df: DataFrame, target_df: DataFrame,
     # The normalizer is subtracted AFTER the sum (not folded per-row) so
     # the floating arithmetic matches the SQL twin term-for-term.
     norm = F.log(F.lit(tot_p) + ab) - F.log(F.lit(tot_q) + ab)
-    # broadcast the bounded model: its parallelize+broadcast build is a
-    # ~2048-row job, while the join-side alternative re-exchanges the
-    # FULL (id, bucket) frame by bucket — measured 1.97 → 1.44 s at
-    # sf0.1 under the bench profile (AQE off, 8 shuffle partitions)
+    # broadcast the bounded model: a LocalRelation broadcasts with no job,
+    # while the join-side alternative re-exchanges the FULL (id, bucket)
+    # frame by bucket
     return (
         doc_b.join(F.broadcast(model), "bucket")
         .groupBy(id_col)

@@ -687,10 +687,7 @@ def st_join_points(
             + [T.StructField(c, T.DoubleType()) for c in
                ("__bx0", "__by0", "__bx1", "__by1")]
         )
-        try:
-            bdf = local_relation(ss, rows2, schema2)
-        except TypeError:  # a right-side column type VALUES cannot hold
-            bdf = ss.createDataFrame(rows2, schema2)
+        bdf = local_relation(ss, rows2, schema2)
         px, py = F.col(x), F.col(y)
         if pred == "within":
             cond = (

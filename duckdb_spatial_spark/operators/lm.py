@@ -30,6 +30,8 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 __all__ = [
     "ngram_lm_train", "ngram_lm_score", "ngram_lm_score_sql",
     "kn_tables", "ngram_lm_score_kn", "ngram_lm_score_kn_sql", "UNK",
@@ -102,12 +104,12 @@ def _vocab_tables(
     second corpus pass."""
     spark = df.sparkSession
     top, total = _vocab_top(df, text_col, vocab_size)
-    vocab = spark.createDataFrame([(w,) for w, _ in top], "word string")
+    vocab = local_relation(spark, [(w,) for w, _ in top], "word string")
     unk_mass = total - sum(f for _, f in top)
     uni_rows = [(w, f) for w, f in top]
     if unk_mass > 0:
         uni_rows.append((UNK, unk_mass))
-    uni = spark.createDataFrame(uni_rows, "w1 string, c1 long")
+    uni = local_relation(spark, uni_rows, "w1 string, c1 long")
     return vocab, uni
 
 
@@ -147,9 +149,7 @@ def ngram_lm_train(
     try:
         probe = bi_plan.limit(cap + 1).collect()
         if len(probe) <= cap:
-            bi = spark.createDataFrame(
-                [(r.w1, r.w2, r.c12) for r in probe],
-                "w1 string, w2 string, c12 long")
+            bi = local_relation(spark, probe, "w1 string, w2 string, c12 long")
         else:
             bi = bi_plan.localCheckpoint(eager=True)
     finally:

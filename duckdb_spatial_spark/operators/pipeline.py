@@ -200,8 +200,7 @@ def decontaminate(
                 .alias("__h2"),
             )
             # exact verification as a literal InSet (codegen hash-set
-            # probe) — a createDataFrame+broadcast would cost a whole
-            # parallelize job just to ship rows the driver already holds
+            # probe), with no join against the grams the driver holds
             gram_set = [r["gram"] for r in head]
             hit = (bloom_expr(bit_words, m_bits, k,
                               F.col("__h1"), F.col("__h2"))

@@ -163,9 +163,6 @@ def pq_codebook_df(spark, codebooks: np.ndarray) -> DataFrame:
     ]
     from ..sources.tables import local_relation
 
-    # TRUE LocalRelation: the codebook frame exists to be broadcast
-    # (q163) — a parallelized local list's broadcast build is a whole
-    # 32-task job; a LocalRelation build side costs zero jobs
     return local_relation(spark, rows, "j int, c int, centroid array<double>")
 
 
@@ -247,9 +244,6 @@ def _adc_lut(
         T.StructField("c", T.IntegerType()),
         T.StructField("d2", T.DoubleType()),
     ])
-    # a TRUE LocalRelation: the LUT exists only to be broadcast, and a
-    # parallelized local list's broadcast build is a whole 32-task
-    # Python-runner job; a LocalRelation build side costs zero jobs
     return local_relation(spark, out, schema)
 
 

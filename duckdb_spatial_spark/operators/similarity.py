@@ -20,6 +20,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_relation
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -330,8 +332,8 @@ def save_ivf_centroids(spark, centroids: np.ndarray, path: str) -> None:
     has). Written through Spark so `path` works on any supported
     filesystem."""
     C = np.asarray(centroids, dtype=np.float64)
-    spark.createDataFrame(
-        [(i, [float(v) for v in C[i]]) for i in range(len(C))],
+    local_relation(
+        spark, [(i, [float(v) for v in C[i]]) for i in range(len(C))],
         "cid int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(path)
 

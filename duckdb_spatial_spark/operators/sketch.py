@@ -44,11 +44,6 @@ __all__ = [
 _W = 48  # rho source bits (hex digits 5..16 of md5)
 
 
-def _digit(h: Column, i: int) -> Column:
-    a = F.ascii(F.substring(h, i, 1))
-    return a - F.when(a >= 97, F.lit(87)).otherwise(F.lit(48))
-
-
 def _digit_sql(hexpr: str, i: int) -> str:
     a = f"ascii(substring({hexpr}, {i}, 1))"
     return f"({a} - CASE WHEN {a} >= 97 THEN 87 ELSE 48 END)"

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..runtime import epoch_micros
+from ..sources.tables import local_relation
 
 __all__ = ["asof_join", "funnel", "interval_join", "resample_ffill",
            "session_funnel", "sessionize"]
@@ -207,12 +208,9 @@ def asof_join(
             (b, p) for b, p in seen.items() if p is not None
         ]
         if carry_rows:
-            cdf = u.sparkSession.createDataFrame(
-                carry_rows,
-                schema=u.select(
-                    F.col("__bkt"), F.col("__p").alias("__carry")
-                ).schema,
-            )
+            cdf = local_relation(
+                u.sparkSession, carry_rows,
+                u.select(F.col("__bkt"), F.col("__p").alias("__carry")).schema)
             u = u.join(F.broadcast(cdf), "__bkt", "left")
             u = u.withColumn("__m", F.coalesce(F.col("__m"), F.col("__carry")))
             u = u.drop("__carry")

@@ -19,28 +19,9 @@ def token_count(text: Column) -> Column:
     )
 
 
-def word_token_count(text: Column) -> Column:
-    """BPE-ish token estimate: word pieces + punctuation marks counted
-    separately (regexp split on word boundaries)."""
-    words = F.size(F.split(F.trim(text), r"[^A-Za-z0-9]+")) - F.when(
-        F.trim(text).rlike(r"[^A-Za-z0-9]$") | (F.length(F.trim(text)) == 0), F.lit(1)
-    ).otherwise(F.lit(0))
-    puncts = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
-    return words + puncts
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_ratio(text: Column) -> Column:
     puncts = F.length(text) - F.length(F.regexp_replace(text, r"[^\w\s]", ""))
     return puncts.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")
-
-
-def upper_ratio(text: Column) -> Column:
-    uppers = F.length(text) - F.length(F.regexp_replace(text, r"[A-Z]", ""))
-    return uppers.cast("double") / F.greatest(F.length(text), F.lit(1)).cast("double")
 
 
 def digit_ratio(text: Column) -> Column:

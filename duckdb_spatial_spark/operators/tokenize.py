@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import local_relation
+
 __all__ = [
     "word_frequencies", "train_bpe", "apply_bpe", "bpe_token_count",
     "bpe_doc_tokens_sql",
@@ -142,10 +144,9 @@ def bpe_encode_word(word: str, ranks: Dict[Tuple[str, str], int]) -> List[str]:
 
 def merges_to_df(spark: SparkSession, merges: Sequence[Tuple[str, str]]) -> DataFrame:
     """Persistable tokenizer state: (rank, left, right)."""
-    return spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank long, left string, right string",
-    )
+    return local_relation(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)],
+        "rank long, left string, right string")
 
 
 def merges_from_df(df: DataFrame) -> List[Tuple[str, str]]:

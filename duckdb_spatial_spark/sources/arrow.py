@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .tables import local_relation
+
 
 def _arrow_files(path: str) -> List[str]:
     if os.path.isdir(path):
@@ -79,9 +81,10 @@ def st_read_arrow(
         schema = pa.schema([schema.field(c) for c in columns])
     spark_schema = from_arrow_schema(schema)
 
-    tdf = spark.createDataFrame(
-        tasks, "path string, lo int, hi int"
-    ).repartition(min(len(tasks), 256))
+    # its own loop, not scan_ranges: a record batch goes to pandas
+    # column-wise, where rows would box every value as a Python object
+    tdf = local_relation(spark, tasks, "path string, lo int, hi int") \
+        .repartition(min(len(tasks), 256))
     cols = list(schema.names)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

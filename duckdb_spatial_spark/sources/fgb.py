@@ -13,16 +13,16 @@ from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom import fgb as FGB
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import scan_ranges
 
 _CT_TO_SPARK = {
     FGB.CT_BYTE: T.LongType(), FGB.CT_UBYTE: T.LongType(),
@@ -81,9 +81,8 @@ def st_read_fgb(
     gtype = hdr["geometry_type"]
 
     if count == 0:
-        return spark.createDataFrame([], schema)
-
-    if idx:
+        ranges = []
+    elif idx:
         offs = FGB.leaf_offsets(idx, count, hdr["index_node_size"]) + data_start
         offs = np.sort(offs)
         np_ = num_partitions or min(max(1, count // 50_000 + 1), 64)
@@ -97,34 +96,24 @@ def st_read_fgb(
             ranges.append((path, int(chunk[0]), end))
     else:
         ranges = [(path, data_start, None)]
-
-    rdf = spark.createDataFrame(
-        ranges, "path string, start long, stop long"
-    ).repartition(len(ranges))
     want_bbox = bbox
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, start, stop in zip(pdf["path"], pdf["start"], pdf["stop"]):
-                rows = []
-                for geom, props in FGB.scan_features(
-                    str(p), int(start), None if pd.isna(stop) else int(stop),
-                    cols, gtype,
-                ):
-                    if geom is not None and want_bbox is not None:
-                        bd = geom.bounds()
-                        if bd and (bd[0] > want_bbox[2] or bd[2] < want_bbox[0]
-                                   or bd[1] > want_bbox[3] or bd[3] < want_bbox[1]):
-                            continue
-                    rows.append(
-                        tuple(props.get(c) for c in attr_cols)
-                        + (None if geom is None else to_wkb(geom),)
-                    )
-                if rows:
-                    yield pd.DataFrame(rows, columns=attr_cols + ["__g"]
-                                       ).rename(columns={"__g": geom_col})
+    def parse(p, start, stop):
+        rows = []
+        for geom, props in FGB.scan_features(
+            p, int(start), None if stop is None else int(stop), cols, gtype,
+        ):
+            if geom is not None and want_bbox is not None:
+                bd = geom.bounds()
+                if bd and (bd[0] > want_bbox[2] or bd[2] < want_bbox[0]
+                           or bd[1] > want_bbox[3] or bd[3] < want_bbox[1]):
+                    continue
+            rows.append(tuple(props.get(c) for c in attr_cols)
+                        + (None if geom is None else to_wkb(geom),))
+        return rows
 
-    return rdf.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, ranges, "path string, start long, stop long",
+                       parse, schema)
 
 
 def st_write_fgb(

@@ -1,4 +1,5 @@
-"""One file-per-task scan for the whole-file vector readers.
+"""The two scans behind the vector readers: one file per task, or one
+driver-planned range per task.
 
 GeoJSON, KML, GPX, DXF, GML, TopoJSON and MVT are single-document formats:
 a file cannot be split, so the scan unit is the file. Spark's built-in
@@ -8,17 +9,28 @@ task whole ``(path, content)`` rows; one ``mapInPandas`` turns them into
 features with the reader's own ``parse(path, data) -> rows``. This is the
 reference's ST_Read shape — one table function, a parser picked per format
 (st_read.cpp:105-240) — with no driver-side listing or shuffle.
+
+The split readers (FlatGeobuf, GeoPackage, OpenFileGDB, TAB, SpatiaLite,
+Arrow IPC, MIF, shapefile, WARC, WebDataset, OSM PBF) instead plan ranges
+on the driver from headers or footers — a feature span, a record-batch
+span, a blob, a file — and :func:`scan_ranges` parses one range per task.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List
+from typing import Callable, Iterator, List, Sequence
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .tables import local_relation
+
 Parse = Callable[[str, bytes], List[tuple]]
+
+# Past this many ranges a task parses several: every task is a Python
+# runner, and a range is already sized to be worth one.
+_MAX_TASKS = 256
 
 
 def binary_files(spark: SparkSession, path: str, glob_filter: str,
@@ -61,3 +73,35 @@ def scan_files(files: DataFrame, parse: Parse, schema: T.StructType,
 
     df = files.mapInPandas(scan, schema=schema)
     return df if geom_col == "geom" else df.withColumnRenamed("geom", geom_col)
+
+
+def scan_ranges(spark: SparkSession, ranges: Sequence[tuple], ddl: str,
+                parse: Callable[..., List[tuple]],
+                schema) -> DataFrame:
+    """Parse driver-planned ``ranges`` (tuples of the ``ddl`` columns) into
+    rows of ``schema`` (a StructType or DDL string), one range per task:
+    ``parse(*range)`` gets None for a NULL range value and returns the
+    range's rows, as tuples in field order or dicts by field name. No
+    ranges give an empty frame with ``schema``."""
+    if not ranges:
+        return local_relation(spark, [], schema)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    cols = schema.fieldNames()
+
+    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            pdf = pdf.astype(object).where(pdf.notna(), None)
+            for rng in pdf.itertuples(index=False, name=None):
+                rows = parse(*rng[1:])
+                if rows:
+                    yield pd.DataFrame(rows, columns=cols)
+
+    # The scan of a LocalRelation runs min(rows, cores) tasks, and a
+    # round-robin from each lands at a random start, so two ranges can
+    # share a task; range partitioning on the range index gives each
+    # range its own task.
+    table = local_relation(spark, [(i,) + tuple(r) for i, r in
+                                   enumerate(ranges)], "__i int, " + ddl)
+    return (table.repartitionByRange(min(len(ranges), _MAX_TASKS), "__i")
+            .mapInPandas(scan, schema=schema))

@@ -20,16 +20,16 @@ parallelism:
 from __future__ import annotations
 
 import os
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom import gdbtable as GT
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import scan_ranges
 
 _SPARK_TYPE = {
     GT.FT_INT16: T.IntegerType(),
@@ -97,46 +97,33 @@ def st_read_gdb(
                     if f.name in columns or f.name == geom_col]
         schema = T.StructType([schema.fields[i] for i in keep_idx])
     n = len(offsets)
-    if n == 0:
-        return spark.createDataFrame([], schema)
-
     np_ = num_partitions or min(max(1, n // 50_000 + 1), 64)
     step = max(1, (n + np_ - 1) // np_)
     ranges = [(base, lo, min(lo + step, n)) for lo in range(0, n, step)]
-    rdf = spark.createDataFrame(
-        ranges, "base string, lo long, hi long"
-    ).repartition(len(ranges))
-    names = [f.name for f in schema.fields]
     gidx = next((i for i, f in enumerate(fields)
                  if f.ftype == GT.FT_GEOMETRY), None)
     want_bbox = bbox
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..geom import gdbtable as _GT
+    def parse(b, lo, hi):
+        offs = GT.read_tablx(b + ".gdbtablx")[lo:hi]
+        out = []
+        for r in GT.read_rows(b + ".gdbtable", fields, offs,
+                              first_rowid=lo + 1):
+            vals = list(r)
+            if gidx is not None:
+                g = vals[gidx]
+                if g is not None and want_bbox is not None:
+                    bd = g.bounds()
+                    if bd and (bd[0] > want_bbox[2] or bd[2] < want_bbox[0]
+                               or bd[1] > want_bbox[3]
+                               or bd[3] < want_bbox[1]):
+                        continue
+                vals[gidx] = None if g is None else to_wkb(g)
+            out.append(tuple(vals[i] for i in keep_idx))
+        return out
 
-        for pdf in batches:
-            for b, lo, hi in zip(pdf["base"], pdf["lo"], pdf["hi"]):
-                offs = _GT.read_tablx(str(b) + ".gdbtablx")[int(lo):int(hi)]
-                rows = _GT.read_rows(str(b) + ".gdbtable", fields, offs,
-                                     first_rowid=int(lo) + 1)
-                out = []
-                for r in rows:
-                    vals = list(r)
-                    if gidx is not None:
-                        g = vals[gidx]
-                        if g is not None and want_bbox is not None:
-                            bd = g.bounds()
-                            if bd and (bd[0] > want_bbox[2]
-                                       or bd[2] < want_bbox[0]
-                                       or bd[1] > want_bbox[3]
-                                       or bd[3] < want_bbox[1]):
-                                continue
-                        vals[gidx] = None if g is None else to_wkb(g)
-                    out.append(tuple(vals[i] for i in keep_idx))
-                if out:
-                    yield pd.DataFrame(out, columns=names)
-
-    return rdf.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, ranges, "base string, lo long, hi long", parse,
+                       schema)
 
 
 def local_gdb_rows(path: str, layer: Optional[str] = None,

@@ -27,13 +27,14 @@ from __future__ import annotations
 import os
 import sqlite3
 import struct
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .filescan import scan_ranges
 
 _GPKG_APP_ID = 0x47504B47  # 'GPKG'
 
@@ -183,64 +184,52 @@ def st_read_gpkg(
 
     np_ = num_partitions or min(max(1, (span[2] or 0) // 50_000 + 1), 64)
     step = max(1, (hi - lo + 1) // np_ + 1)
-    ranges = [(path, lname, gcol, lo + i * step,
-               min(hi, lo + (i + 1) * step - 1))
+    ranges = [(path, lo + i * step, min(hi, lo + (i + 1) * step - 1))
               for i in range(np_) if lo + i * step <= hi]
-    if not ranges:
-        return spark.createDataFrame([], schema)
-    rdf = spark.createDataFrame(
-        ranges, "path string, layer string, gcol string, lo long, hi long"
-    ).repartition(len(ranges))
-
     sel_cols = ", ".join(f'"{c}"' for c in attr_cols + [gcol]) or f'"{gcol}"'
     want_bbox = bbox
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, ln, gc, rlo, rhi in zip(
-                pdf["path"], pdf["layer"], pdf["gcol"], pdf["lo"], pdf["hi"]
-            ):
-                con = _connect_ro(str(p))
+    def parse(p, rlo, rhi):
+        con = _connect_ro(p)
+        try:
+            sql = (f'SELECT {sel_cols} FROM "{lname}" '
+                   f"WHERE _rowid_ BETWEEN {int(rlo)} AND {int(rhi)}")
+            ids: Optional[set] = None
+            if want_bbox is not None and has_rtree:
                 try:
-                    sql = (f'SELECT {sel_cols} FROM "{ln}" '
-                           f"WHERE _rowid_ BETWEEN {int(rlo)} AND {int(rhi)}")
-                    ids: Optional[set] = None
-                    if want_bbox is not None and has_rtree:
-                        try:
-                            xmin, ymin, xmax, ymax = want_bbox
-                            ids = {
-                                r[0] for r in con.execute(
-                                    f'SELECT id FROM "rtree_{ln}_{gc}" '
-                                    "WHERE minx <= ? AND maxx >= ? "
-                                    "AND miny <= ? AND maxy >= ?",
-                                    (xmax, xmin, ymax, ymin),
-                                )
-                            }
-                        except sqlite3.OperationalError:
-                            ids = None  # runtime sqlite lacks rtree: scan
-                    rows = con.execute(
-                        sql.replace("SELECT ", "SELECT _rowid_, ", 1)
-                    ).fetchall()
-                finally:
-                    con.close()
-                out_rows = []
-                for r in rows:
-                    rid, attrs, gblob = r[0], r[1:-1], r[-1]
-                    if ids is not None and rid not in ids:
+                    xmin, ymin, xmax, ymax = want_bbox
+                    ids = {
+                        r[0] for r in con.execute(
+                            f'SELECT id FROM "rtree_{lname}_{gcol}" '
+                            "WHERE minx <= ? AND maxx >= ? "
+                            "AND miny <= ? AND maxy >= ?",
+                            (xmax, xmin, ymax, ymin),
+                        )
+                    }
+                except sqlite3.OperationalError:
+                    ids = None  # runtime sqlite lacks rtree: scan
+            rows = con.execute(
+                sql.replace("SELECT ", "SELECT _rowid_, ", 1)
+            ).fetchall()
+        finally:
+            con.close()
+        out_rows = []
+        for r in rows:
+            rid, attrs, gblob = r[0], r[1:-1], r[-1]
+            if ids is not None and rid not in ids:
+                continue
+            if want_bbox is not None and gblob is not None:
+                env = gpkg_blob_envelope(bytes(gblob))
+                if env is not None:
+                    xmin, ymin, xmax, ymax = want_bbox
+                    if (env[0] > xmax or env[2] < xmin
+                            or env[1] > ymax or env[3] < ymin):
                         continue
-                    if want_bbox is not None and gblob is not None:
-                        env = gpkg_blob_envelope(bytes(gblob))
-                        if env is not None:
-                            xmin, ymin, xmax, ymax = want_bbox
-                            if (env[0] > xmax or env[2] < xmin
-                                    or env[1] > ymax or env[3] < ymin):
-                                continue
-                    out_rows.append(tuple(attrs) + (gpkg_blob_to_wkb(gblob),))
-                if out_rows:
-                    yield pd.DataFrame(out_rows, columns=attr_cols + ["__g"]
-                                       ).rename(columns={"__g": geom_col})
+            out_rows.append(tuple(attrs) + (gpkg_blob_to_wkb(gblob),))
+        return out_rows
 
-    df = rdf.mapInPandas(scan, schema=schema)
+    df = scan_ranges(spark, ranges, "path string, lo long, hi long", parse,
+                     schema)
     if want_bbox is not None:
         # exact bbox re-check on decoded WKB for headerless blobs
         from ..functions import scalar as S

@@ -24,10 +24,9 @@ from __future__ import annotations
 
 import glob
 import os
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -35,6 +34,7 @@ from pyspark.sql import types as T
 from ..geom.core import (Geometry, LINESTRING, MULTILINESTRING, MULTIPOINT,
                          MULTIPOLYGON, POINT, POLYGON)
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import scan_ranges
 
 _TYPE_MAP = {
     "integer": T.IntegerType(),
@@ -257,18 +257,8 @@ def st_read_mif(spark: SparkSession, path: str,
         schema = T.StructType(
             [T.StructField(geom_col if f.name == "geom" else f.name,
                            f.dataType) for f in schema.fields])
-    fdf = spark.createDataFrame([(f,) for f in files], "path string") \
-        .repartition(min(len(files), 64))
-    names = [f.name for f in schema.fields]
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                _, rows = read_mif_pair(str(p))
-                if rows:
-                    yield pd.DataFrame(rows, columns=names)
-
-    return fdf.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, [(f,) for f in files], "path string",
+                       lambda p: read_mif_pair(p)[1], schema)
 
 
 _MAX_SINK_BYTES = 1 << 30

@@ -42,7 +42,8 @@ from pyspark.sql import types as T
 
 from ..geom.geojson import geojson_to_geometry
 from ..geom.wkb import to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import binary_files, scan_files, scan_ranges
+from .tables import local_relation
 
 # fixed ST_ReadOSM output schema (st_read_osm.cpp:39-90)
 OSM_SCHEMA = T.StructType(
@@ -92,9 +93,9 @@ def st_drivers(spark: SparkSession) -> DataFrame:
         ("ogr", f"OGR formats via pyogrio ({'available' if has_ogr else 'NOT INSTALLED'})",
          has_ogr, False, has_ogr),
     ]
-    return spark.createDataFrame(
-        rows, "short_name string, description string, can_open boolean, can_create boolean, can_copy boolean"
-    )
+    return local_relation(
+        spark, rows, "short_name string, description string, "
+        "can_open boolean, can_create boolean, can_copy boolean")
 
 
 GEOJSON_SCHEMA = T.StructType(
@@ -440,10 +441,9 @@ def _st_read_ogr(spark, path, layer, columns, bbox, geom_col):  # pragma: no cov
     tbl = pyogrio.raw.read_arrow(
         path, layer=layer, columns=columns, bbox=bbox
     )
-    pdf = tbl[1].to_pandas() if isinstance(tbl, tuple) else tbl.to_pandas()
-    if "wkb_geometry" in pdf.columns:
-        pdf = pdf.rename(columns={"wkb_geometry": geom_col})
-    return spark.createDataFrame(pdf)
+    tbl = tbl[1] if isinstance(tbl, tuple) else tbl
+    return spark.createDataFrame(tbl.rename_columns(
+        [geom_col if c == "wkb_geometry" else c for c in tbl.column_names]))
 
 
 def st_read_meta(spark: SparkSession, path: str) -> DataFrame:
@@ -554,9 +554,9 @@ def st_read_meta(spark: SparkSession, path: str) -> DataFrame:
     else:
         size = os.path.getsize(path)
         rows = [(path, os.path.splitext(path)[1].lstrip("."), None, None, json.dumps({"bytes": size}))]
-    return spark.createDataFrame(
-        rows, "path string, driver string, num_rows long, num_row_groups long, schema_json string"
-    )
+    return local_relation(
+        spark, rows, "path string, driver string, num_rows long, "
+        "num_row_groups long, schema_json string")
 
 
 def st_read_osm(spark: SparkSession, path: str) -> DataFrame:
@@ -573,29 +573,8 @@ def st_read_osm(spark: SparkSession, path: str) -> DataFrame:
         for btype, off, size in PBF.scan_blobs(path)
         if btype == "OSMData"
     ]
-    if not blobs:
-        return spark.createDataFrame([], OSM_SCHEMA)
-    blob_df = spark.createDataFrame(
-        blobs,
-        T.StructType([
-            T.StructField("path", T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("size", T.LongType()),
-        ]),
-    ).repartition(min(len(blobs), 64))
-
-    cols = [f.name for f in OSM_SCHEMA.fields]
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..geom import pbf as _PBF
-
-        for pdf in batches:
-            for p, off, size in zip(pdf["path"], pdf["offset"], pdf["size"]):
-                rows = _PBF.read_blob_rows(p, int(off), int(size))
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
-
-    return blob_df.mapInPandas(scan, schema=OSM_SCHEMA)
+    return scan_ranges(spark, blobs, "path string, offset long, size long",
+                       PBF.read_blob_rows, OSM_SCHEMA)
 
 
 def read(spark: SparkSession, path: str, **opts) -> DataFrame:
@@ -827,9 +806,9 @@ def st_list_proj_crs(spark: SparkSession) -> DataFrame:
                          str(crs.type), "", "pyproj"))
     except ImportError:
         pass
-    return spark.createDataFrame(
-        rows, ["auth_name", "code", "name", "kind", "projection", "engine"]
-    ).repartition(1)
+    return local_relation(
+        spark, rows, "auth_name string, code long, name string, kind string, "
+        "projection string, engine string")
 
 
 # ------------------------------------------------------------- local rows

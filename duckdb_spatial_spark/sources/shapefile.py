@@ -5,8 +5,8 @@ Bind phase (driver): glob the path, read ONE .dbf header to infer the
 attribute schema (read_shapefile.cpp maps DBF→DuckDB types the same way);
 ``geom GEOMETRY`` is appended last (read_shapefile.cpp:154-160).
 
-Scan phase (executors): one task per file — each task opens its .shp/.dbf
-pair and emits Arrow batches. Files must live on storage every executor can
+Scan phase (executors): one task per file (``scan_ranges``) — each task
+opens its .shp/.dbf pair. Files must live on storage every executor can
 reach (posix/NFS locally; object storage on a real cluster), matching the
 reference's per-thread scan model (SURVEY EP2)."""
 
@@ -14,14 +14,14 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-from typing import Iterator, List, Optional
+from typing import List
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..geom import shp as SHP
 from ..geom.wkb import to_wkb
+from .filescan import scan_ranges
 
 _DBF_SPARK_TYPES = {
     "C": T.StringType(),
@@ -67,32 +67,27 @@ def st_read_shp(
             raise FileNotFoundError(f)
     schema = shp_schema(files[0], geom_col)
 
-    paths_df = spark.createDataFrame(
-        [(f,) for f in files], T.StructType([T.StructField("path", T.StringType())])
-    ).repartition(len(files))
+    width = len(schema.fields) - 1
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                with open(p, "rb") as fh:
-                    geoms = SHP.parse_shp(fh.read())
-                dbf_path = os.path.splitext(p)[0] + ".dbf"
-                if os.path.exists(dbf_path):
-                    with open(dbf_path, "rb") as fh:
-                        _, rows = SHP.parse_dbf(fh.read(), encoding=encoding)
-                else:
-                    rows = [() for _ in geoms]
-                n = min(len(geoms), len(rows)) if rows else len(geoms)
-                data = {
-                    f.name: [rows[i][j] if j < len(rows[i]) else None for i in range(n)]
-                    for j, f in enumerate(schema.fields[:-1])
-                }
-                data[geom_col] = [
-                    None if g is None else to_wkb(g) for g in geoms[:n]
-                ]
-                yield pd.DataFrame(data, columns=[f.name for f in schema.fields])
+    def parse(p):
+        with open(p, "rb") as fh:
+            geoms = SHP.parse_shp(fh.read())
+        rows = []
+        dbf_path = os.path.splitext(p)[0] + ".dbf"
+        if os.path.exists(dbf_path):
+            with open(dbf_path, "rb") as fh:
+                _, rows = SHP.parse_dbf(fh.read(), encoding=encoding)
+        if rows:
+            geoms = geoms[:len(rows)]
+        out = []
+        for i, g in enumerate(geoms):
+            attrs = tuple(rows[i][:width]) if i < len(rows) else ()
+            out.append(attrs + (None,) * (width - len(attrs))
+                       + (None if g is None else to_wkb(g),))
+        return out
 
-    return paths_df.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, [(f,) for f in files], "path string", parse,
+                       schema)
 
 
 def st_write_shp(df: DataFrame, path: str, geom_col: str = "geom",

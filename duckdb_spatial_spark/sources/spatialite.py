@@ -24,14 +24,14 @@ from __future__ import annotations
 import os
 import sqlite3
 import struct
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional, Tuple
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom.wkb import from_wkb
+from .filescan import scan_ranges
 
 _MARK_START, _MARK_MBR, _MARK_ENTITY, _MARK_END = 0x00, 0x7C, 0x69, 0xFE
 
@@ -243,60 +243,52 @@ def st_read_spatialite(
         [T.StructField(c, types[c]) for c in attr_cols]
         + [T.StructField(geom_col, T.BinaryType())])
 
-    if not span[2]:
-        return spark.createDataFrame([], schema)
-    lo, hi = int(span[0]), int(span[1])
+    lo, hi = (int(span[0]), int(span[1])) if span[2] else (0, -1)
     np_ = num_partitions or min(max(1, span[2] // 50_000 + 1), 64)
     step = max(1, (hi - lo + 1) // np_ + 1)
     ranges = [(path, lo + i * step, min(hi, lo + (i + 1) * step - 1))
               for i in range(np_) if lo + i * step <= hi]
-    rdf = spark.createDataFrame(ranges, "path string, lo long, hi long") \
-        .repartition(len(ranges))
     sel = ", ".join(f'"{c}"' for c in attr_cols + [gcol])
     want_bbox = bbox
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p, rlo, rhi in zip(pdf["path"], pdf["lo"], pdf["hi"]):
-                con = _connect_ro(str(p))
+    def parse(p, rlo, rhi):
+        con = _connect_ro(p)
+        try:
+            ids: Optional[set] = None
+            if want_bbox is not None and has_rtree:
                 try:
-                    ids: Optional[set] = None
-                    if want_bbox is not None and has_rtree:
-                        try:
-                            xmin, ymin, xmax, ymax = want_bbox
-                            ids = {r[0] for r in con.execute(
-                                f'SELECT pkid FROM "idx_{lname}_{gcol}" '
-                                "WHERE xmin <= ? AND xmax >= ? "
-                                "AND ymin <= ? AND ymax >= ?",
-                                (xmax, xmin, ymax, ymin))}
-                        except sqlite3.OperationalError:
-                            ids = None
-                    rows = con.execute(
-                        f'SELECT _rowid_, {sel} FROM "{lname}" '
-                        f"WHERE _rowid_ BETWEEN {int(rlo)} AND {int(rhi)}"
-                    ).fetchall()
-                finally:
-                    con.close()
-                out = []
-                for r in rows:
-                    rid, attrs, gblob = r[0], r[1:-1], r[-1]
-                    if ids is not None and rid not in ids:
+                    xmin, ymin, xmax, ymax = want_bbox
+                    ids = {r[0] for r in con.execute(
+                        f'SELECT pkid FROM "idx_{lname}_{gcol}" '
+                        "WHERE xmin <= ? AND xmax >= ? "
+                        "AND ymin <= ? AND ymax >= ?",
+                        (xmax, xmin, ymax, ymin))}
+                except sqlite3.OperationalError:
+                    ids = None
+            rows = con.execute(
+                f'SELECT _rowid_, {sel} FROM "{lname}" '
+                f"WHERE _rowid_ BETWEEN {int(rlo)} AND {int(rhi)}"
+            ).fetchall()
+        finally:
+            con.close()
+        out = []
+        for r in rows:
+            rid, attrs, gblob = r[0], r[1:-1], r[-1]
+            if ids is not None and rid not in ids:
+                continue
+            wkb = spatialite_blob_to_wkb(gblob)
+            if want_bbox is not None and wkb is not None and ids is None:
+                bd = from_wkb(wkb).bounds()
+                if bd:
+                    xmin, ymin, xmax, ymax = want_bbox
+                    if (bd[0] > xmax or bd[2] < xmin
+                            or bd[1] > ymax or bd[3] < ymin):
                         continue
-                    wkb = spatialite_blob_to_wkb(gblob)
-                    if want_bbox is not None and wkb is not None and ids is None:
-                        g = from_wkb(wkb)
-                        bd = g.bounds()
-                        if bd:
-                            xmin, ymin, xmax, ymax = want_bbox
-                            if (bd[0] > xmax or bd[2] < xmin
-                                    or bd[1] > ymax or bd[3] < ymin):
-                                continue
-                    out.append(tuple(attrs) + (wkb,))
-                if out:
-                    yield pd.DataFrame(out, columns=attr_cols + ["__g"]
-                                       ).rename(columns={"__g": geom_col})
+            out.append(tuple(attrs) + (wkb,))
+        return out
 
-    return rdf.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, ranges, "path string, lo long, hi long", parse,
+                       schema)
 
 
 # ------------------------------------------------------------------- sink

@@ -21,10 +21,9 @@ from __future__ import annotations
 
 import os
 import struct
-from typing import Iterator, List, Optional
+from typing import List, Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,6 +31,7 @@ from pyspark.sql import types as T
 from ..geom import shp as SHP
 from ..geom import tabmap as TM
 from ..geom.wkb import from_wkb, to_wkb
+from .filescan import scan_ranges
 
 _DBF_SPARK = {"C": T.StringType(), "N": T.LongType(), "F": T.DoubleType(),
               "L": T.BooleanType(), "D": T.StringType()}
@@ -90,43 +90,32 @@ def st_read_tab(
         keep_idx = [i for i, f in enumerate(schema.fields)
                     if f.name in columns or f.name == geom_col]
         schema = T.StructType([schema.fields[i] for i in keep_idx])
-    if nrec == 0:
-        return spark.createDataFrame([], schema)
-
     np_ = num_partitions or min(max(1, nrec // 100_000 + 1), 64)
     step = max(1, (nrec + np_ - 1) // np_)
     ranges = [(base, lo, min(lo + step, nrec))
               for lo in range(0, nrec, step)]
-    rdf = spark.createDataFrame(
-        ranges, "base string, lo long, hi long").repartition(len(ranges))
-    names = [f.name for f in schema.fields]
-    gpos = len(fields)  # geometry appended after attributes
     want_bbox = bbox
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for b, lo, hi in zip(pdf["base"], pdf["lo"], pdf["hi"]):
-                b, lo, hi = str(b), int(lo), int(hi)
-                rows = _read_dat_range(b + ".dat", hdr, rec_size, lo, hi)
-                offsets = TM.read_id(b + ".id")[lo:hi]
-                with open(b + ".map", "rb") as fh:
-                    mbuf = fh.read()
-                aff, _ = TM.read_map_header(mbuf)
-                out = []
-                for r, off in zip(rows, offsets):
-                    g = TM.read_object(mbuf, int(off), aff)
-                    if g is not None and want_bbox is not None:
-                        bd = g.bounds()
-                        if bd and (bd[0] > want_bbox[2] or bd[2] < want_bbox[0]
-                                   or bd[1] > want_bbox[3]
-                                   or bd[3] < want_bbox[1]):
-                            continue
-                    vals = list(r) + [None if g is None else to_wkb(g)]
-                    out.append(tuple(vals[i] for i in keep_idx))
-                if out:
-                    yield pd.DataFrame(out, columns=names)
+    def parse(b, lo, hi):
+        rows = _read_dat_range(b + ".dat", hdr, rec_size, lo, hi)
+        offsets = TM.read_id(b + ".id")[lo:hi]
+        with open(b + ".map", "rb") as fh:
+            mbuf = fh.read()
+        aff, _ = TM.read_map_header(mbuf)
+        out = []
+        for r, off in zip(rows, offsets):
+            g = TM.read_object(mbuf, int(off), aff)
+            if g is not None and want_bbox is not None:
+                bd = g.bounds()
+                if bd and (bd[0] > want_bbox[2] or bd[2] < want_bbox[0]
+                           or bd[1] > want_bbox[3] or bd[3] < want_bbox[1]):
+                    continue
+            vals = list(r) + [None if g is None else to_wkb(g)]
+            out.append(tuple(vals[i] for i in keep_idx))
+        return out
 
-    return rdf.mapInPandas(scan, schema=schema)
+    return scan_ranges(spark, ranges, "base string, lo long, hi long", parse,
+                       schema)
 
 
 _MAX_SINGLE_WRITER = 1 << 30

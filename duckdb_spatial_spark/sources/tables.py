@@ -39,80 +39,25 @@ def _read_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(s).parquet(path)
 
 
-# Above this many rows, parsing and folding the inline VALUES text costs
-# more driver time than the createDataFrame job it saves. Six-column rows
-# on a 4-core VM (local[2]): 1,000 build and collect in ~0.3 s, 5,000 in
-# ~1 s; createDataFrame takes ~0.4-0.5 s at either size.
-_INLINE_MAX_ROWS = 2000
-
-_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32,
-             T.LongType: 64}
-
-
-def _sql_value(v, dt) -> str:
-    """Render one Python value as a FOLDABLE SQL expression of type ``dt``
-    (see :func:`local_relation`). Floats go through shortest-repr string
-    casts — Java's parseDouble/parseFloat are correctly rounded, so the
-    round-trip is bit-exact for any double (and any float32 widened to
-    double, which is exact). Strings that carry quotes/backslashes/control
-    or non-ASCII characters are routed through unbase64 so no SQL escaping
-    rules are ever load-bearing; binary values become ``X'<hex>'``
-    literals. Integers outside the declared type's range raise
-    ValueError; other types raise TypeError."""
-    s = dt.simpleString()
-    if v is None:
-        return f"CAST(NULL AS {s})"
-    if isinstance(dt, T.ArrayType):
-        inner = ",".join(_sql_value(x, dt.elementType) for x in v)
-        return f"ARRAY({inner})" if inner else f"CAST(ARRAY() AS {s})"
-    if isinstance(dt, (T.FloatType, T.DoubleType)):
-        f = float(v)
-        if f != f:
-            return f"CAST('NaN' AS {s})"
-        if f == float("inf"):
-            return f"CAST('Infinity' AS {s})"
-        if f == float("-inf"):
-            return f"CAST('-Infinity' AS {s})"
-        return f"CAST('{f!r}' AS {s})"
-    bits = _INT_BITS.get(type(dt))
-    if bits is not None:
-        i = int(v)
-        if not -(1 << (bits - 1)) <= i < 1 << (bits - 1):
-            # ANSI-off sessions would wrap the CAST silently
-            raise ValueError(f"local_relation: {i} is out of range for {s}")
-        return f"CAST({i} AS {s})"
-    if isinstance(dt, T.BooleanType):
-        return "true" if v else "false"
-    if isinstance(dt, T.StringType):
-        txt = str(v)
-        if txt.isascii() and txt.isprintable() and "'" not in txt \
-                and "\\" not in txt:
-            return f"'{txt}'"
-        import base64
-
-        b64 = base64.b64encode(txt.encode("utf-8")).decode("ascii")
-        return f"CAST(unbase64('{b64}') AS STRING)"
-    if isinstance(dt, T.BinaryType):
-        return f"X'{bytes(v).hex()}'"
-    raise TypeError(f"local_relation: unsupported type {s}")
-
-
 def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
-    """Bounded driver-side rows as a TRUE LocalRelation via inline-VALUES
-    SQL (every expression foldable, so ResolveInlineTables folds the whole
-    table at analysis time). ``spark.createDataFrame(list)`` instead
-    parallelizes the list into a defaultParallelism-partition RDD scan, so
-    every broadcast build or collect of such a frame is a full
-    Python-runner JOB (32 tasks on local[32]); a LocalRelation answers
-    broadcast builds and collects from ``executeCollect`` with ZERO jobs.
-    Use for the bounded model frames (query sets, LUTs, vocab heads) the
-    engine inlines on query paths. ``schema`` is a StructType or DDL
-    string; ``rows`` are sequences in field order (a row of the wrong
-    length raises ValueError). More than ``_INLINE_MAX_ROWS`` rows fall
-    back to ``createDataFrame``, whose cost does not grow with the SQL
-    text."""
+    """Bounded driver-side rows as a LocalRelation, built from a
+    ``pyarrow.Table``: the plan holds the rows, so collects and broadcast
+    builds run no job and no Python task, where ``createDataFrame`` of a
+    list or pandas frame plans an RDD scan that runs Python tasks on every
+    use. ``schema`` is a StructType or DDL string; ``rows`` are sequences
+    in field order. Values go through the field types' ``toInternal``, as
+    in ``createDataFrame(list)``, so a naive datetime in a TIMESTAMP
+    column is read in the process's local zone (what ``collect()``
+    returns). All fields come back nullable: Arrow cannot cast a nullable
+    struct field to the non-nullable one a plan's schema may carry. A row
+    of the wrong length or an integer outside its column's range raises
+    ValueError."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
+    schema = schema.toNullable()
     rows = list(rows)
     width = len(schema.fields)
     for i, r in enumerate(rows):
@@ -120,21 +65,24 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             raise ValueError(
                 f"local_relation: row {i} has {len(r)} values, the schema "
                 f"has {width} fields")
-    if len(rows) > _INLINE_MAX_ROWS:
-        return spark.createDataFrame(rows, schema)
-    names = ["`" + f.name.replace("`", "``") + "`" for f in schema.fields]
-    if not rows:
-        sel = ", ".join(
-            f"CAST(NULL AS {f.dataType.simpleString()}) AS {n}"
-            for f, n in zip(schema.fields, names))
-        return spark.sql(f"SELECT {sel} WHERE false")
-    vals = ",".join(
-        "(" + ",".join(
-            _sql_value(v, f.dataType) for v, f in zip(r, schema.fields)
-        ) + ")"
-        for r in rows)
-    cols = ", ".join(f"col{i + 1} AS {n}" for i, n in enumerate(names))
-    return spark.sql(f"SELECT {cols} FROM VALUES {vals}")
+    arrow = to_arrow_schema(schema)
+    cols = []
+    for j, (f, af) in enumerate(zip(schema.fields, arrow)):
+        vals = [r[j] for r in rows]
+        if f.dataType.needConversion():
+            vals = [f.dataType.toInternal(v) for v in vals]
+        if pa.types.is_integer(af.type):
+            # Arrow's own overflow error names neither column nor limit
+            lim = 1 << (af.type.bit_width - 1)
+            bad = next((v for v in vals
+                        if v is not None and not -lim <= v < lim), None)
+            if bad is not None:
+                raise ValueError(
+                    f"local_relation: {bad} is out of range for column "
+                    f"{f.name!r} ({f.dataType.simpleString()})")
+        cols.append(pa.array(vals, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow),
+                                 schema)
 
 
 def load_table(

@@ -46,6 +46,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .filescan import scan_ranges
+
 __all__ = ["st_read_warc", "st_write_warc"]
 
 _READ_SCHEMA = (
@@ -177,28 +179,8 @@ def st_read_warc(
         raise ValueError(f"no .warc/.warc.gz files at {path!r}")
     want = set(record_types) if record_types is not None else None
 
-    # explicit index + range partitioning gives a true 1:1 file→task
-    # mapping (hash-partitioning on the path leaves ~1/e of tasks empty
-    # and stacks multiple large archives on others)
-    paths_df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(files)], "i long, path string"
-    ).repartitionByRange(len(files), "i")
-
-    cols = ["file", "record_type", "record_id", "target_uri", "warc_date",
-            "content_type", "http_status", "http_content_type", "payload",
-            "nbytes"]
-
-    def read_file(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                rows = list(_parse_warc(p, want))
-                if rows:
-                    pdf_out = pd.DataFrame(rows, columns=cols)
-                    pdf_out["http_status"] = pdf_out["http_status"].astype(
-                        "Int32")
-                    yield pdf_out
-
-    return paths_df.mapInPandas(read_file, schema=_READ_SCHEMA)
+    return scan_ranges(spark, [(f,) for f in files], "path string",
+                       lambda p: list(_parse_warc(p, want)), _READ_SCHEMA)
 
 
 _FIXED_DATE = "2020-01-01T00:00:00Z"

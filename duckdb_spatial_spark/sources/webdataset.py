@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .filescan import scan_ranges
+
 __all__ = ["st_read_webdataset", "st_write_webdataset", "group_samples"]
 
 _READ_SCHEMA = (
@@ -72,33 +74,22 @@ def st_read_webdataset(
         raise ValueError(f"no .tar shards at {path!r}")
     want = set(exts) if exts else None
 
-    # explicit index + range partitioning: a true 1:1 shard→task mapping
-    # (hash-partitioning on the path leaves ~1/e of tasks empty and
-    # stacks multiple shards on others)
-    paths_df = spark.createDataFrame(
-        [(i, p) for i, p in enumerate(shards)], "i long, path string"
-    ).repartitionByRange(len(shards), "i")
+    def parse(p):
+        rows = []
+        shard_name = os.path.basename(p)
+        with tarfile.open(p, "r:*") as tf:  # transparent gzip
+            for m in tf:
+                if not m.isfile():
+                    continue
+                key, ext = _split_key(m.name)
+                if want is not None and ext not in want:
+                    continue
+                payload = tf.extractfile(m).read()
+                rows.append((shard_name, key, ext, payload, len(payload)))
+        return rows
 
-    def read_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for p in pdf["path"]:
-                rows = []
-                shard_name = os.path.basename(p)
-                with tarfile.open(p, "r:*") as tf:  # transparent gzip
-                    for m in tf:
-                        if not m.isfile():
-                            continue
-                        key, ext = _split_key(m.name)
-                        if want is not None and ext not in want:
-                            continue
-                        payload = tf.extractfile(m).read()
-                        rows.append((shard_name, key, ext, payload, len(payload)))
-                if rows:
-                    yield pd.DataFrame(
-                        rows, columns=["shard", "key", "ext", "payload", "nbytes"]
-                    )
-
-    return paths_df.mapInPandas(read_shard, schema=_READ_SCHEMA)
+    return scan_ranges(spark, [(p,) for p in shards], "path string", parse,
+                       _READ_SCHEMA)
 
 
 def group_samples(long_df: DataFrame) -> DataFrame:

@@ -5,8 +5,8 @@ The reference reads spreadsheets through GDAL's XLSX driver
 file is a zip of XML parts (ECMA-376, a public spec): worksheet cell rows
 in ``xl/worksheets/sheetN.xml`` with shared strings in
 ``xl/sharedStrings.xml``. The bind step parses driver-side (spreadsheets
-are small by construction); the rows ship to executors through
-``spark.createDataFrame`` like any local relation. A ``wkt_col`` turns a
+are small by construction) into a ``local_relation``, so the rows travel
+inside the plan and no Spark job reads them. A ``wkt_col`` turns a
 column of WKT into geometry downstream (same convention as the csv path).
 """
 
@@ -18,6 +18,8 @@ import zipfile
 from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .tables import local_relation
 
 _NS = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}"
 
@@ -122,7 +124,7 @@ def st_read_xlsx(
                 for r in body
             ]
         cols.append(f"`{nm}` {t}")
-    df = spark.createDataFrame([tuple(r) for r in body], ", ".join(cols))
+    df = local_relation(spark, body, ", ".join(cols))
     if wkt_col is not None and wkt_col in df.columns:
         from ..functions import scalar as S
 

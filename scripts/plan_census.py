@@ -8,10 +8,13 @@ sf (AQE off so static shapes are visible) and count the anti-patterns:
                                MapInPandas / FlatMapGroupsInPandas);
 * BroadcastNestedLoopJoin    — allowed only as bounded-frame attaches;
                                listed per query for hand-adjudication.
-* Scan ExistingRDD           — a createDataFrame of driver data: every
-                               use is a Python-runner job (a LocalRelation
-                               would cost none); listed per query, not
-                               gated.
+* Scan ExistingRDD           — split by the scanned RDD's lineage:
+  - driver_rows_scan         — a ParallelCollectionRDD, i.e. a
+                               createDataFrame of driver rows: every use is
+                               a Python-runner job (a LocalRelation costs
+                               none); must be empty;
+  - checkpoint_scan          — anything else, i.e. a localCheckpoint
+                               result; listed per query, not gated.
 * session conf changes       — "query: key" for every conf key whose
                                value changed while the query was built;
                                must be empty (scope writes with
@@ -42,6 +45,18 @@ SF = next((a for a in sys.argv[1:] if os.path.sep in a),
 ONLY = {a for a in sys.argv[1:] if os.path.sep not in a}
 
 
+def _rdd_scans(node) -> list:
+    """The lineage (``toDebugString``) of every RDD scan in a physical
+    plan, subqueries and cached plans included."""
+    if node.getClass().getSimpleName() == "RDDScanExec":
+        return [node.rdd().toDebugString()]
+    out = []
+    for kids in (node.children(), node.innerChildren(), node.subqueries()):
+        for i in range(kids.size()):
+            out += _rdd_scans(kids.apply(i))
+    return out
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -60,7 +75,7 @@ def main() -> None:
         "formatted")
 
     cache = spark._jsparkSession.sharedState().cacheManager()
-    cart, bep, bnlj, rdd, errs = [], [], {}, {}, []
+    cart, bep, bnlj, rows_scan, ckpt_scan, errs = [], [], {}, {}, {}, []
     conf_changed, cache_left = [], []
     for name, fn in entry.queries().items():
         if ONLY and name not in ONLY:
@@ -68,7 +83,9 @@ def main() -> None:
         before = dict(spark.conf.getAll)
         try:
             df = fn(spark, SF)
-            plan = df._jdf.queryExecution().explainString(mode)
+            qe = df._jdf.queryExecution()
+            plan = qe.explainString(mode)
+            scans = _rdd_scans(qe.executedPlan())
         except Exception as e:  # noqa: BLE001 — census must finish
             errs.append(f"{name}: {type(e).__name__}")
             continue
@@ -87,21 +104,24 @@ def main() -> None:
         n = plan.count("BroadcastNestedLoopJoin")
         if n:
             bnlj[name] = n
-        # tree lines only ("Scan ExistingRDD (3)"), not the detail section
-        n = len(re.findall(r"Scan ExistingRDD \(\d+\)", plan))
+        n = sum("ParallelCollectionRDD" in s for s in scans)
         if n:
-            rdd[name] = n
+            rows_scan[name] = n
+        if len(scans) > n:
+            ckpt_scan[name] = len(scans) - n
     print(json.dumps({
         "sf": SF,
         "cartesian_product": cart,
         "batch_eval_python": bep,
         "broadcast_nested_loop": bnlj,
-        "existing_rdd_scan": rdd,
+        "driver_rows_scan": rows_scan,
+        "checkpoint_scan": ckpt_scan,
         "session_conf_changed": conf_changed,
         "cache_left": cache_left,
         "errors": errs,
     }, indent=1))
-    ok = not cart and not bep and not conf_changed and not errs
+    ok = (not cart and not bep and not rows_scan and not conf_changed
+          and not errs)
     print("census:", "CLEAN" if ok else "FINDINGS ABOVE")
     sys.exit(0 if ok else 1)
 

@@ -1,18 +1,29 @@
-"""local_relation: inline-VALUES LocalRelation builder.
+"""local_relation: the LocalRelation builder on a pyarrow.Table.
 
-The contract under test: (1) values round-trip BIT-EXACTLY (floats via
-shortest-repr string casts, strings via escaping or unbase64), (2) the
-result is a true LocalRelation — collect() and broadcast builds answer
-from executeCollect with zero jobs, unlike createDataFrame's
-parallelized-RDD scan, (3) malformed rows raise a clear error and inputs
-above the row cap fall back to createDataFrame."""
+The contract under test: (1) values round-trip exactly — floats bit for
+bit, naive datetimes in TIMESTAMP columns read in the process's local zone
+as createDataFrame(list) reads them, and schemas taken from a plan (with
+non-nullable struct fields) accepted; (2) the result is a true
+LocalRelation at any size — collect() and broadcast builds answer from
+executeCollect with zero jobs, unlike createDataFrame's RDD scan; (3)
+malformed rows and out-of-range integers raise a clear ValueError."""
 
+import datetime
+import decimal
 import math
+import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import types as T
 
 from duckdb_spatial_spark.sources.tables import local_relation
+
+
+def _jobs(spark):
+    return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None)
+               or [])
 
 
 def test_roundtrip_floats_exact(spark):
@@ -76,19 +87,77 @@ def test_plan_is_local_relation_zero_job_collect(spark):
     # true LocalRelation: the optimized plan is a single LocalRelation
     # node (no RDD scan), so collect() runs zero Spark jobs
     assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None) or [])
+    before = _jobs(spark)
     assert len(df.collect()) == 100
-    after = len(tracker.getJobIdsForGroup(None) or [])
-    assert after == before
+    assert _jobs(spark) == before
 
 
-def test_unsupported_type_raises(spark):
-    import datetime
+def test_roundtrip_date_timestamp_decimal_struct(spark):
+    ts = datetime.datetime(2024, 3, 1, 10, 30, 0, 123456)
+    rows = [
+        (1, datetime.date(1900, 1, 1), ts, ts, decimal.Decimal("-12.345"),
+         (7, ts, "x")),
+        (2, datetime.date(2262, 4, 11), datetime.datetime(1969, 12, 31, 23,
+                                                          59, 59, 999999),
+         datetime.datetime(1970, 1, 1), decimal.Decimal("99999.999"),
+         None),
+        (3, None, None, None, None, (None, None, None)),
+    ]
+    ddl = ("i int, d date, t timestamp, n timestamp_ntz, m decimal(8,3), "
+           "s struct<a:int,b:timestamp,c:string>")
+    df = local_relation(spark, rows, ddl)
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [tuple(r) for r in rows]
+    assert got == sorted(
+        tuple(r) for r in spark.createDataFrame(rows, ddl).collect())
 
-    with pytest.raises(TypeError):
-        local_relation(spark, [(datetime.date(2020, 1, 1),)], T.StructType(
-            [T.StructField("d", T.DateType())]))
+
+def test_schema_with_non_nullable_struct_fields(spark):
+    from pyspark.sql import functions as F
+
+    # a schema taken from a plan: F.struct of non-null columns, one of
+    # them an array of non-null elements
+    base = spark.range(3).select(
+        F.col("id").alias("k"),
+        F.struct(F.col("id").alias("x"), F.lit("q").alias("y"),
+                 F.array(F.col("id")).alias("a")).alias("p"))
+    assert not base.schema["p"].dataType["x"].nullable
+    rows = [tuple(r) for r in base.collect()]
+    df = local_relation(spark, rows, base.schema)
+    assert sorted(tuple(r) for r in df.collect()) == rows
+    assert [f.name for f in df.schema["p"].dataType.fields] == ["x", "y", "a"]
+
+
+_TZ_SCRIPT = """
+import datetime
+from pyspark.sql import SparkSession
+from duckdb_spatial_spark.sources.tables import local_relation
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.sql.session.timeZone", "UTC")
+         .config("spark.ui.enabled", "false").getOrCreate())
+ts = datetime.datetime(2024, 7, 1, 10, 30)
+df = local_relation(spark, [(ts, (1, ts))],
+                    "t timestamp, s struct<i:int,t:timestamp>")
+r = df.collect()[0]
+print("GOT", r.t.isoformat(), r.s.t.isoformat())
+spark.stop()
+"""
+
+
+def test_timestamp_local_zone_roundtrip_subprocess():
+    # collect() hands back naive datetimes in the PROCESS's zone, whatever
+    # the session zone; put straight into a UTC Arrow array they would
+    # come back shifted by the zone's offset (10:30 -> 03:30 here)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TZ="America/Los_Angeles",
+               PYTHONPATH=repo + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    out = subprocess.run([sys.executable, "-c", _TZ_SCRIPT], cwd=repo,
+                         env=env, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = [ln for ln in out.stdout.splitlines() if ln.startswith("GOT ")]
+    assert got == ["GOT 2024-07-01T10:30:00 2024-07-01T10:30:00"], out.stdout
 
 
 def test_roundtrip_binary(spark):
@@ -129,16 +198,12 @@ def test_integer_range_checked(spark, ddl, bits):
             local_relation(spark, [(bad,)], f"v {ddl}")
 
 
-def test_row_cap_falls_back_to_create_dataframe(spark):
-    from duckdb_spatial_spark.sources import tables
-
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    cap = tables._INLINE_MAX_ROWS
-    rows = [(i, float(i) / 3.0) for i in range(cap + 1)]
-    inline = local_relation(spark, rows[:cap], "i int, v double")
-    assert "LocalRelation" in plan(inline)
-    big = local_relation(spark, rows, "i int, v double")
-    assert "LocalRelation" not in plan(big)
-    assert sorted(tuple(r) for r in big.collect()) == rows
+def test_5000_rows_stay_local_relation_zero_jobs(spark):
+    rows = [(i, float(i) / 3.0, f"s{i}", bytes([i % 256]) * 8)
+            for i in range(5000)]
+    df = local_relation(spark, rows, "i int, v double, s string, b binary")
+    assert "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString()
+    before = _jobs(spark)
+    got = df.collect()
+    assert _jobs(spark) == before
+    assert sorted((r.i, r.v, r.s, bytes(r.b)) for r in got) == rows
