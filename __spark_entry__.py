@@ -33,8 +33,7 @@ from duckdb_spatial_spark.operators import (
     textops,
 )
 from duckdb_spatial_spark.operators.similarity import cosine_similarity
-from duckdb_spatial_spark.runtime import (adaptive_partitions, scoped_conf,
-                                          utc_timestamp)
+from duckdb_spatial_spark.runtime import adaptive_partitions, utc_timestamp
 from duckdb_spatial_spark.sources import st_generatepoints
 from duckdb_spatial_spark.sources.tables import (load_table, local_relation,
                                                  read_layout, stream_table)
@@ -1616,9 +1615,6 @@ def q73_paragraph_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-_Q75_SINK_SEQ = [0]
-
-
 def q75_streaming_extent(spark: SparkSession, sf: str) -> DataFrame:
     """End-to-end Structured Streaming: the events table read as a file
     STREAM (availableNow trigger), watermarked daily tumbling windows per
@@ -1628,7 +1624,7 @@ def q75_streaming_extent(spark: SparkSession, sf: str) -> DataFrame:
     deterministic and exactly SQL-checkable; the same plan keeps running
     incrementally on a live source at scale (bounded state: one row per
     open window × event_type)."""
-    from duckdb_spatial_spark.streaming import streaming_extent_agg
+    from duckdb_spatial_spark.streaming import drain, streaming_extent_agg
 
     batch = load_table(spark, sf, "events", fan_out=False)
     pts = stream_table(spark, sf, "events").select(
@@ -1639,20 +1635,11 @@ def q75_streaming_extent(spark: SparkSession, sf: str) -> DataFrame:
         pts, "ts", "x", "y", window="1 day", watermark="1 day",
         group_cols=("event_type",),
     )
-    _Q75_SINK_SEQ[0] += 1
-    sink = f"q75_sink_{_Q75_SINK_SEQ[0]}"
     # complete-mode min/max partials: per-batch state rows are bounded
     # by open windows x event_type, so state partitions follow the
     # input-size estimate (1 here, defaultParallelism at scale)
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions":
-                             adaptive_partitions(batch)}):
-        q = (
-            agg.writeStream.format("memory").queryName(sink)
-            .outputMode("complete").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(agg, "complete", state_partitions=adaptive_partitions(batch))
         .select(
             "event_type",
             (F.col("window.start").cast("long") / F.lit(86400)).cast("long").alias("day_idx"),
@@ -1788,7 +1775,8 @@ def q81_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     monotonically per key, so aggregating min/max/max-n over the sink
     reconstructs each key's final state deterministically — giving a
     bespoke-state operator an exact SQL oracle."""
-    from duckdb_spatial_spark.streaming import streaming_session_extents
+    from duckdb_spatial_spark.streaming import (drain,
+                                                streaming_session_extents)
 
     pts = stream_table(spark, sf, "events").select(
         "ts",
@@ -1799,38 +1787,8 @@ def q81_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     sess = streaming_session_extents(
         pts, "key", "x", "y", "ts", watermark="1 day", timeout="1 second"
     )
-    _Q75_SINK_SEQ[0] += 1
-    sink = f"q81_sink_{_Q75_SINK_SEQ[0]}"
-    # Single-pass drain: with no-data micro-batches disabled the
-    # availableNow query terminates right after the data batches
-    # instead of firing empty timeout-service epochs (ProcessingTime
-    # timeouts only re-emit each closed session's last extents, which
-    # the min/max/max-n sink aggregate already carries — row-level
-    # verified + oracle-green both SFs). The drain loop keeps the old
-    # empty-batch condition as a fallback and adds the is-active check
-    # the self-terminating form needs. The conf is read per batch, so
-    # the drain stays inside the scope.
-    import time as _time
-
-    with scoped_conf(spark, {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
-        q = (
-            sess.writeStream.format("memory").queryName(sink)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        deadline = _time.time() + 300
-        while _time.time() < deadline:
-            if not q.isActive:
-                break
-            prog = q.recentProgress
-            if any(p["numInputRows"] > 0 for p in prog) and prog and \
-                    prog[-1]["numInputRows"] == 0:
-                break
-            _time.sleep(0.2)
-        q.stop()
-        q.awaitTermination()
     return (
-        spark.table(sink)
+        drain(sess, "update")
         .groupBy("key")
         .agg(
             F.round(F.min("xmin"), 6).alias("xmin"),
@@ -2307,7 +2265,7 @@ def q91_streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     streams), availableNow drain, append sink. With all data drained the
     result equals the batch interval join, so a plain SQL self-join is an
     exact oracle."""
-    from duckdb_spatial_spark.streaming import streaming_interval_join
+    from duckdb_spatial_spark.streaming import drain, streaming_interval_join
 
     stream = stream_table(spark, sf, "events")
     clicks = stream.filter(F.col("event_type") == "click").select(
@@ -2319,19 +2277,8 @@ def q91_streaming_interval_join(spark: SparkSession, sf: str) -> DataFrame:
     j = streaming_interval_join(clicks, buys, "k", "lt", "rt",
                                 lower="0 seconds", upper="10 minutes",
                                 watermark="365 days")
-    _Q75_SINK_SEQ[0] += 1
-    sink = f"q91_sink_{_Q75_SINK_SEQ[0]}"
-    # inner-join append output is emitted IN the data batch; the empty
-    # trailing batch only advances the watermark to evict state this
-    # terminating drain discards — skipping it removes one full round
-    # of planning + 32 state-store commits (measured 1.27 s trigger)
-    with scoped_conf(spark, {
-            "spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
-        q = (j.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(300)
     return (
-        spark.table(sink)
+        drain(j, "append")
         .groupBy("k")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -4430,7 +4377,7 @@ def q153_streaming_funnel(spark: SparkSession, sf: str) -> DataFrame:
     answer. The oracle is the BATCH funnel over the same events — a
     lost batch, a state merge bug, or a non-greedy match desyncs the
     hash."""
-    from duckdb_spatial_spark.streaming import streaming_funnel
+    from duckdb_spatial_spark.streaming import drain, streaming_funnel
 
     stream = stream_table(spark, sf, "events")
     # thin the stream (1/7 of events) so the depth distribution spans
@@ -4438,14 +4385,7 @@ def q153_streaming_funnel(spark: SparkSession, sf: str) -> DataFrame:
     # check degenerates to one row
     fun = streaming_funnel(stream.filter(F.col("event_id") % 7 == 0),
                            ["view", "click", "purchase"])
-    _Q75_SINK_SEQ[0] += 1
-    sink = f"q153_sink_{_Q75_SINK_SEQ[0]}"
-    q = (
-        fun.writeStream.format("memory").queryName(sink)
-        .outputMode("update").trigger(availableNow=True).start()
-    )
-    q.awaitTermination()
-    upd = spark.table(sink)
+    upd = drain(fun, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.col("n_seen").desc(), F.col("depth").desc())
     final = (upd.withColumn("__rn", F.row_number().over(w))
@@ -5387,7 +5327,7 @@ def q160_streaming_mmr(spark: SparkSession, sf: str) -> DataFrame:
     oracle replays each window with the q151 unrolled-argmax CTE
     generator (a lost batch, a pool-merge bug, or a tie-break drift
     desyncs the hash)."""
-    from duckdb_spatial_spark.streaming import streaming_mmr_rerank
+    from duckdb_spatial_spark.streaming import drain, streaming_mmr_rerank
 
     batch = load_table(spark, sf, "embeddings", fan_out=False)
     qv = batch.filter(F.col("vec_id") == 0).select(
@@ -5402,19 +5342,10 @@ def q160_streaming_mmr(spark: SparkSession, sf: str) -> DataFrame:
     out = streaming_mmr_rerank(ev, qv, id_col="vec_id",
                                vec_col="embedding", ts_col="ts",
                                k=5, pool=24, lam=0.7, window="1 hour")
-    _Q75_SINK_SEQ[0] += 1
-    sink = f"q160_sink_{_Q75_SINK_SEQ[0]}"
     # pool-bounded state (<= pool triples x 4 windows): state partitions
     # follow the input-size estimate (1 here, defaultParallelism at
     # scale — the shuffle fans out exactly when the stream does)
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions":
-                             adaptive_partitions(batch)}):
-        q = (
-            out.writeStream.format("memory").queryName(sink)
-            .outputMode("update").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-    upd = spark.table(sink)
+    upd = drain(out, "update", state_partitions=adaptive_partitions(batch))
     w = Window.partitionBy("win", "rank").orderBy(F.col("n_seen").desc())
     final = (upd.withColumn("__rn", F.row_number().over(w))
              .filter(F.col("__rn") == 1))

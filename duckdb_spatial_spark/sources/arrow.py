@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .tables import local_relation
+from .filescan import _range_table
 
 
 def _arrow_files(path: str) -> List[str]:
@@ -83,8 +83,7 @@ def st_read_arrow(
 
     # its own loop, not scan_ranges: a record batch goes to pandas
     # column-wise, where rows would box every value as a Python object
-    tdf = local_relation(spark, tasks, "path string, lo int, hi int") \
-        .repartition(min(len(tasks), 256))
+    tdf = _range_table(spark, tasks, "path string, lo int, hi int")
     cols = list(schema.names)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

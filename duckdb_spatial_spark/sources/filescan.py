@@ -13,7 +13,8 @@ reference's ST_Read shape — one table function, a parser picked per format
 The split readers (FlatGeobuf, GeoPackage, OpenFileGDB, TAB, SpatiaLite,
 Arrow IPC, MIF, shapefile, WARC, WebDataset, OSM PBF) instead plan ranges
 on the driver from headers or footers — a feature span, a record-batch
-span, a blob, a file — and :func:`scan_ranges` parses one range per task.
+span, a blob, a file — and :func:`scan_ranges` parses one range per task
+(Arrow IPC maps its own loop over the same range table).
 """
 
 from __future__ import annotations
@@ -97,11 +98,16 @@ def scan_ranges(spark: SparkSession, ranges: Sequence[tuple], ddl: str,
                 if rows:
                     yield pd.DataFrame(rows, columns=cols)
 
-    # The scan of a LocalRelation runs min(rows, cores) tasks, and a
-    # round-robin from each lands at a random start, so two ranges can
-    # share a task; range partitioning on the range index gives each
-    # range its own task.
+    return _range_table(spark, ranges, ddl).mapInPandas(scan, schema=schema)
+
+
+def _range_table(spark: SparkSession, ranges: Sequence[tuple],
+                 ddl: str) -> DataFrame:
+    """``ranges`` as rows of ``__i int`` (the range index) and the ``ddl``
+    columns, one range per task up to ``_MAX_TASKS``. The scan of a
+    LocalRelation runs min(rows, cores) tasks, and a round-robin from each
+    lands at a random start, so two ranges can share a task; range
+    partitioning on the range index gives each range its own task."""
     table = local_relation(spark, [(i,) + tuple(r) for i, r in
                                    enumerate(ranges)], "__i int, " + ddl)
-    return (table.repartitionByRange(min(len(ranges), _MAX_TASKS), "__i")
-            .mapInPandas(scan, schema=schema))
+    return table.repartitionByRange(min(len(ranges), _MAX_TASKS), "__i")

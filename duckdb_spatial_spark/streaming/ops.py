@@ -6,17 +6,60 @@ Every scalar ST_* function is stateless → usable in a stream unchanged.
 ``ST_Extent_Agg`` decomposes into min/max → watermark-compatible windowed
 aggregation with no custom state store. Stream-static spatial joins reuse
 the broadcast probe (mapInPandas is streaming-safe); bespoke state goes
-through ``applyInPandasWithState``.
+through ``applyInPandasWithState``. A bounded stream is run to its end and
+read back with :func:`drain`.
 """
 
 from __future__ import annotations
 
+import uuid
 from typing import Tuple
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..runtime import scoped_conf
+
+
+def drain(stream: DataFrame, mode: str, *,
+          state_partitions: int = None) -> DataFrame:
+    """Run ``stream`` over all the input available now, in one
+    ``availableNow`` pass into a memory sink with output ``mode``, and
+    return the sink's rows. The frame is analyzed before the sink's temp
+    view is dropped, so it keeps the rows and the catalog keeps no view,
+    also when the stream fails (its error is raised here).
+
+    ``state_partitions`` sets ``spark.sql.shuffle.partitions`` for the
+    pass, which fixes the partition count of the stream's state; without
+    it the session's value applies. Session conf is as before afterwards.
+
+    No-data micro-batches are always off. In a bounded pass such a batch
+    only advances the watermark and fires timeouts: it evicts state the
+    pass discards anyway (an inner interval join has emitted its pairs in
+    the data batch) or re-emits rows update mode already gave (a closed
+    ``ProcessingTimeTimeout`` session's last extents), at the cost of one
+    more round of planning and state commits. A ``ProcessingTimeTimeout``
+    state even fires empty batches without end, so the pass would never
+    terminate. The one limit: output that Spark emits only in a trailing
+    no-data batch is not returned — e.g. an append-mode windowed
+    aggregation whose windows only the final watermark closes.
+    """
+    spark = stream.sparkSession
+    sink = f"dss_drain_{uuid.uuid4().hex}"
+    conf = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+    if state_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = state_partitions
+    try:
+        # the conf is read per batch, so the wait stays inside the scope
+        with scoped_conf(spark, conf):
+            (stream.writeStream.format("memory").queryName(sink)
+             .outputMode(mode).trigger(availableNow=True).start()
+             .awaitTermination())
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def streaming_point_filter(stream: DataFrame, x: str, y: str,
@@ -350,13 +393,9 @@ def streaming_index_append(
     ``st_cluster_append``); pair with a transactional table format when
     exactly-once matters. Returns the started StreamingQuery.
     """
-    import tempfile
-
     from ..operators.invindex import scored_index_append
 
-    def _append(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def append(batch_df: DataFrame) -> None:
         # num_partitions=1: a micro-batch generation is SMALL by
         # definition, so it lands as one sorted file — same small-file
         # discipline as streaming_cluster/zorder_append — and
@@ -369,12 +408,7 @@ def streaming_index_append(
                             text_col=text_col, segment_size=segment_size,
                             num_partitions=1)
 
-    w = stream.writeStream.foreachBatch(_append).option(
-        "checkpointLocation",
-        checkpoint or tempfile.mkdtemp(prefix="dss_sidx_ckpt_"))
-    if available_now:
-        w = w.trigger(availableNow=True)
-    return w.start()
+    return _foreach_batch_append(stream, append, checkpoint, available_now)
 
 
 def _foreach_batch_append(stream: DataFrame, append, checkpoint,

@@ -7,13 +7,17 @@ Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# the tree this script lives in, for the driver and the Python workers
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+SF = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 \
+    else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 
 TABLES = [
@@ -66,6 +70,10 @@ def main():
 
     import __spark_entry__ as entry
 
+    # Python workers start as `python -m pyspark.daemon` in the driver's
+    # working directory, which comes first on their sys.path (before
+    # PYTHONPATH): run from ROOT so they import this tree's package
+    os.chdir(ROOT)
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")

@@ -19,6 +19,11 @@ sf (AQE off so static shapes are visible) and count the anti-patterns:
                                value changed while the query was built;
                                must be empty (scope writes with
                                runtime.scoped_conf).
+* views and streams left     — "query: name" for every temp view a query
+                               added to the catalog and every streaming
+                               query still active after it; must be empty
+                               (drain bounded streams with
+                               streaming.drain).
 * CacheManager entries left  — queries that left Dataset caches behind
                                (persist without unpersist); listed, not
                                gated. The cache is cleared after every
@@ -57,6 +62,10 @@ def _rdd_scans(node) -> list:
     return out
 
 
+def _temp_views(spark) -> set:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 def main() -> None:
     from pyspark.sql import SparkSession
 
@@ -76,11 +85,12 @@ def main() -> None:
 
     cache = spark._jsparkSession.sharedState().cacheManager()
     cart, bep, bnlj, rows_scan, ckpt_scan, errs = [], [], {}, {}, {}, []
-    conf_changed, cache_left = [], []
+    conf_changed, view_left, cache_left = [], [], []
     for name, fn in entry.queries().items():
         if ONLY and name not in ONLY:
             continue
         before = dict(spark.conf.getAll)
+        views = _temp_views(spark)
         try:
             df = fn(spark, SF)
             qe = df._jdf.queryExecution()
@@ -94,6 +104,10 @@ def main() -> None:
             conf_changed += [f"{name}: {k}"
                              for k in sorted(before.keys() | after.keys())
                              if before.get(k) != after.get(k)]
+            view_left += [f"{name}: {v}"
+                          for v in sorted(_temp_views(spark) - views)]
+            view_left += [f"{name}: stream {q.name or q.id}"
+                          for q in spark.streams.active]
             if not cache.isEmpty():
                 cache_left.append(name)
             spark.catalog.clearCache()
@@ -117,11 +131,12 @@ def main() -> None:
         "driver_rows_scan": rows_scan,
         "checkpoint_scan": ckpt_scan,
         "session_conf_changed": conf_changed,
+        "view_left": view_left,
         "cache_left": cache_left,
         "errors": errs,
     }, indent=1))
     ok = (not cart and not bep and not rows_scan and not conf_changed
-          and not errs)
+          and not view_left and not errs)
     print("census:", "CLEAN" if ok else "FINDINGS ABOVE")
     sys.exit(0 if ok else 1)
 

@@ -52,7 +52,7 @@ def test_mmr_matches_sql_twin(spark):
 
 def test_streaming_funnel_equals_batch(spark, tmp_path):
     from duckdb_spatial_spark.operators.temporal import funnel
-    from duckdb_spatial_spark.streaming import streaming_funnel
+    from duckdb_spatial_spark.streaming import drain, streaming_funnel
 
     rows = []
     eid = 0
@@ -74,14 +74,10 @@ def test_streaming_funnel_equals_batch(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     fun = streaming_funnel(stream, ["view", "click", "purchase"])
-    sink = "t_sfun_sink"
-    q = (fun.writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     got = {r["user_id"]: r["depth"] for r in
-           spark.table(sink).withColumn("rn", F.row_number().over(w))
+           drain(fun, "update").withColumn("rn", F.row_number().over(w))
            .filter("rn = 1").collect()}
     batch = {r["user_id"]: r["steps_completed"] for r in
              funnel(df, ["view", "click", "purchase"]).collect()}
@@ -148,7 +144,7 @@ def test_streaming_funnel_random_parity(spark, tmp_path):
     import random
 
     from duckdb_spatial_spark.operators.temporal import funnel
-    from duckdb_spatial_spark.streaming import streaming_funnel
+    from duckdb_spatial_spark.streaming import drain, streaming_funnel
 
     rng = random.Random(42)
     types = ["view", "click", "purchase", "error", "signup"]
@@ -170,14 +166,10 @@ def test_streaming_funnel_random_parity(spark, tmp_path):
 
     stream = spark.readStream.schema(df.schema).parquet(src)
     fun = streaming_funnel(stream, ["view", "click", "purchase"])
-    sink = "t_sfun_rand"
-    q = (fun.writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     got = {r["user_id"]: r["depth"] for r in
-           spark.table(sink).withColumn("rn", F.row_number().over(w))
+           drain(fun, "update").withColumn("rn", F.row_number().over(w))
            .filter("rn = 1").collect()}
     batch = {r["user_id"]: r["steps_completed"] for r in
              funnel(df, ["view", "click", "purchase"]).collect()}

@@ -2,7 +2,7 @@
 
 FlatGeobuf, GeoPackage, OpenFileGDB, TAB, SpatiaLite, MIF, shapefile, WARC,
 WebDataset and OSM PBF read through ``sources.filescan.scan_ranges``; the
-Arrow IPC reader keeps its own loop on the same kind of range table. One
+Arrow IPC reader keeps its own loop on the same range table. One
 parametrized suite pins what they share: the executed plan feeds
 MapInPandas from an Exchange over a LocalTableScan of the driver-planned
 ranges (no driver-rows RDD scan), and a zero-feature input reads as an
@@ -137,13 +137,27 @@ def test_zero_features_give_empty_frame_with_schema(spark, tmp_path, fmt):
     assert empty.count() == 0
 
 
-def test_each_range_gets_its_own_task(spark):
+def _one_row_batches(d, n):
+    """An Arrow file of ``n`` one-row record batches: with
+    ``batches_per_task=1`` each batch is one range."""
+    path = str(d / f"b{n}.arrow")
+    schema = pa.schema([("name", pa.string())])
+    with ipc.new_file(path, schema) as w:
+        for i in range(n):
+            w.write_table(pa.table({"name": [f"r{i}"]}, schema=schema))
+    return path
+
+
+def test_each_range_gets_its_own_task(spark, tmp_path):
     # the LocalRelation scan runs min(rows, cores) tasks; a round-robin
     # from them put 4 ranges on 3 tasks and 2 ranges on 1 task
     for n in (2, 4, 8):
-        ranges = [(f"r{i}",) for i in range(n)]
-        df = scan_ranges(spark, ranges, "name string",
-                         lambda name: [(name,)], "name string")
-        got = df.select("name", F.spark_partition_id().alias("task")).collect()
-        assert sorted(r.name for r in got) == [r[0] for r in ranges]
-        assert len({r.task for r in got}) == n
+        names = [f"r{i}" for i in range(n)]
+        for df in (scan_ranges(spark, [(x,) for x in names], "name string",
+                               lambda name: [(name,)], "name string"),
+                   st_read_arrow(spark, _one_row_batches(tmp_path, n),
+                                 batches_per_task=1)):
+            got = df.select("name",
+                            F.spark_partition_id().alias("task")).collect()
+            assert sorted(r.name for r in got) == names
+            assert len({r.task for r in got}) == n

@@ -1,7 +1,8 @@
 """No query changes the session it runs in.
 
 (a) Every ``queries()`` entry, built and collected at sf0.001, leaves
-``spark.conf.getAll`` exactly as it found it. The queries run under a
+``spark.conf.getAll`` exactly as it found it, adds no temp view to the
+catalog and leaves no streaming query active. The queries run under a
 non-UTC session timezone, so that a write of UTC shows as a change. The
 cache is cleared after each query: cache lifetimes are a separate
 contract.
@@ -43,6 +44,7 @@ def test_queries_leave_session_conf_unchanged(spark):
     with scoped_conf(spark, {_TZ: "America/Los_Angeles"}):
         for name, fn in entry.queries().items():
             before = dict(spark.conf.getAll)
+            views = _temp_views(spark)
             try:
                 fn(spark, SF_DIR).collect()
             except Exception as e:  # noqa: BLE001 — report every query
@@ -53,7 +55,15 @@ def test_queries_leave_session_conf_unchanged(spark):
             changed += [f"{name}: {k} {before.get(k)!r} -> {after.get(k)!r}"
                         for k in sorted(before.keys() | after.keys())
                         if before.get(k) != after.get(k)]
+            changed += [f"{name}: left view {v}"
+                        for v in sorted(_temp_views(spark) - views)]
+            changed += [f"{name}: left stream {q.name or q.id}"
+                        for q in spark.streams.active]
     assert not changed, "\n".join(changed)
+
+
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
 @pytest.mark.parametrize("name", ["q75_streaming_extent", "q112_asof_join",

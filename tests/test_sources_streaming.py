@@ -14,7 +14,7 @@ from duckdb_spatial_spark.sources import (
     st_read_osm,
     st_write,
 )
-from duckdb_spatial_spark.streaming import streaming_extent_agg
+from duckdb_spatial_spark.streaming import drain, streaming_extent_agg
 import duckdb_spatial_spark.functions as ST
 
 
@@ -123,16 +123,7 @@ def test_shp_native_corrupt_raises(spark, tmp_path):
 def test_streaming_extent_agg(spark):
     agg = streaming_extent_agg(_events_stream(spark), "ts", "x", "y",
                                window="1 day")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("ext_out")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql("SELECT * FROM ext_out").collect()
+    rows = drain(agg, "complete").collect()
     assert len(rows) > 0
     assert all(r["xmin"] <= r["xmax"] and r["ymin"] <= r["ymax"] for r in rows)
 
@@ -164,13 +155,8 @@ def test_streaming_spatial_join(spark):
         "event_id", st_point("x", "y").alias("pt")
     )
     joined = streaming_spatial_join(stream, zones, "within", "pt", "zone")
-    q = (
-        joined.groupBy("zone_id").count()
-        .writeStream.outputMode("complete").format("memory")
-        .queryName("sj_out").trigger(availableNow=True).start()
-    )
-    q.processAllAvailable(); q.stop()
-    rows = {r["zone_id"]: r["count"] for r in spark.sql("SELECT * FROM sj_out").collect()}
+    rows = {r["zone_id"]: r["count"] for r in
+            drain(joined.groupBy("zone_id").count(), "complete").collect()}
     assert rows and all(v > 0 for v in rows.values())
     # against batch ground truth
     batch = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -190,12 +176,7 @@ def test_streaming_dedup_exact(spark):
         .withColumn("ts", F.current_timestamp())
     )
     deduped = streaming_dedup_exact(stream, "text", "ts")
-    q = (
-        deduped.writeStream.outputMode("append").format("memory")
-        .queryName("dd_out").trigger(availableNow=True).start()
-    )
-    q.processAllAvailable(); q.stop()
-    n_out = spark.sql("SELECT count(*) c FROM dd_out").collect()[0]["c"]
+    n_out = drain(deduped, "append").count()
     n_distinct = (
         spark.read.parquet(f"{sf}/documents.parquet")
         .select(F.xxhash64(F.regexp_replace(F.lower(F.trim("text")), r"\s+", " ")))
@@ -212,18 +193,61 @@ def test_streaming_session_extents(spark):
         stream, "event_type", "x", "y", "ts",
         watermark="1 day", timeout="1 minute",
     )
-    q = (
-        sess.writeStream.outputMode("update").format("memory")
-        .queryName("sess_out").trigger(availableNow=True).start()
-    )
-    # availableNow terminates on its own; processAllAvailable can block
-    # forever on a stateful query with processing-time timeouts
-    q.awaitTermination(120)
-    q.stop()
-    rows = spark.sql("SELECT * FROM sess_out").collect()
+    rows = drain(sess, "update").collect()
     assert rows
     for r in rows:
         assert r["xmin"] <= r["xmax"] and r["ymin"] <= r["ymax"] and r["n"] > 0
+
+
+def _session_state(spark):
+    """Temp views, active streams and session conf: what a drain must
+    leave as it found them."""
+    return ({t.name for t in spark.catalog.listTables() if t.isTemporary},
+            [q.id for q in spark.streams.active], dict(spark.conf.getAll))
+
+
+@pytest.mark.parametrize("state_partitions", [None, 3])
+def test_drain_owns_its_rows_and_leaves_the_session(spark, state_partitions):
+    before = _session_state(spark)
+    agg = streaming_extent_agg(_events_stream(spark), "ts", "x", "y",
+                               window="1 day")
+    out = drain(agg, "complete", state_partitions=state_partitions)
+    assert _session_state(spark) == before
+    # the sink view is gone: the frame still reads the rows, every time
+    first = sorted(map(tuple, out.collect()))
+    assert first and sorted(map(tuple, out.collect())) == first
+
+
+def test_drain_raises_stream_error_and_leaves_the_session(spark):
+    @F.udf("double")
+    def boom(x):
+        raise ValueError("drain-test-boom")
+
+    before = _session_state(spark)
+    bad = _events_stream(spark).select(boom("x").alias("b"))
+    with pytest.raises(Exception, match="drain-test-boom"):
+        drain(bad, "append", state_partitions=3)
+    assert _session_state(spark) == before
+
+
+def test_drain_terminates_processing_time_timeout_stream(spark):
+    import threading
+
+    from duckdb_spatial_spark.streaming import streaming_session_extents
+
+    sess = streaming_session_extents(
+        _events_stream(spark), "event_type", "x", "y", "ts",
+        watermark="1 day", timeout="1 minute")
+    got = []
+    t = threading.Thread(target=lambda: got.append(
+        drain(sess, "update").count()), daemon=True)
+    t.start()
+    t.join(120)
+    if t.is_alive():  # a regression must fail the test, not hang the suite
+        for q in spark.streams.active:
+            q.stop()
+    assert not t.is_alive(), "drain did not terminate"
+    assert got and got[0] > 0
 
 
 def test_streaming_neardup_dedup(spark, tmp_path):
@@ -247,13 +271,7 @@ def test_streaming_neardup_dedup(spark, tmp_path):
         .withColumn("ts", F.current_timestamp())
     )
     out = streaming_neardup_dedup(stream, "text", "ts")
-    q = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName("neardup_out").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT id FROM neardup_out ORDER BY id").collect()
-    ids = [r["id"] for r in got]
+    ids = sorted(r["id"] for r in drain(out, "append").collect())
     assert 3 in ids           # distinct doc survives
     assert len(ids) == 2      # the exact/near pair collapsed to one
 
@@ -281,11 +299,7 @@ def test_streaming_multimodal_image_features(spark, tmp_path):
         str(src / "batch0.parquet"))
     feats = image_features(stream, "payload").select(
         "id", F.col("img_features.mean_r").alias("mr"))
-    q = (feats.writeStream.outputMode("append").format("memory")
-         .queryName("mm_out").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    got = {r["id"]: r["mr"] for r in spark.sql("SELECT * FROM mm_out").collect()}
+    got = {r["id"]: r["mr"] for r in drain(feats, "append").collect()}
     assert len(got) == 12
     for i in range(12):
         assert abs(got[i] - (i * 20 % 255)) < 1e-9
@@ -313,11 +327,8 @@ def test_streaming_interval_join(spark, tmp_path):
     j = streaming_interval_join(ls, rs, "k", "lt", "rt",
                                 lower="0 seconds", upper="10 minutes",
                                 watermark="2 hours")
-    q = (j.writeStream.format("memory").queryName("ivj")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(120)
     got = {(r.k, str(r.lt), str(r.rt))
-           for r in spark.table("ivj").collect()}
+           for r in drain(j, "append").collect()}
 
     want = {(rl[0], str(l.lt), str(r.rt))
             for rl, l in zip(rows_l, ldf.collect())
@@ -348,13 +359,7 @@ def test_streaming_hamming_dedup(spark, tmp_path):
         .withColumn("ts", F.current_timestamp())
     )
     out = streaming_hamming_dedup(stream, "ph", "ts")
-    q = (
-        out.writeStream.outputMode("append").format("memory")
-        .queryName("hamdedup_out").trigger(availableNow=True).start()
-    )
-    q.awaitTermination(120)
-    ids = sorted(r["img_id"] for r in
-                 spark.sql("SELECT img_id FROM hamdedup_out").collect())
+    ids = sorted(r["img_id"] for r in drain(out, "append").collect())
     assert 3 in ids and len(ids) == 2
 
 
@@ -379,6 +384,7 @@ def test_streaming_count_min_equals_batch_sketch(spark, tmp_path):
               .parquet(str(src / "batch")))
     out = streaming_count_min(stream, F.col("w"), "ts", depth=4, width=64,
                               window="1 day", watermark="0 seconds")
+    # not drain(): only the trailing no-data batch closes the day-1 window
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("cms_out").trigger(availableNow=True).start())
     q.awaitTermination(120)
@@ -412,6 +418,7 @@ def test_streaming_hll_equals_batch_registers(spark, tmp_path):
               .parquet(str(src / "batch")))
     out = streaming_hll(stream, F.col("w"), "ts", p=8,
                         window="1 day", watermark="0 seconds")
+    # not drain(): only the trailing no-data batch closes the day-1 window
     q = (out.writeStream.outputMode("append").format("memory")
          .queryName("hll_out").trigger(availableNow=True).start())
     q.awaitTermination(120)

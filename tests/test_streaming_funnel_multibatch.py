@@ -13,11 +13,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.operators.temporal import funnel
-from duckdb_spatial_spark.streaming import streaming_funnel
+from duckdb_spatial_spark.streaming import drain, streaming_funnel
 
 STEPS = ["view", "click", "purchase"]
-
-_SINK = [0]
 
 
 def _drive(spark, tmp_path, batches, schema):
@@ -30,14 +28,9 @@ def _drive(spark, tmp_path, batches, schema):
     stream = (spark.readStream.schema(cast.schema)
               .option("maxFilesPerTrigger", 1).parquet(src))
     fun = streaming_funnel(stream, STEPS, watermark="10 seconds")
-    _SINK[0] += 1
-    sink = f"t_sfun_mb_{_SINK[0]}"
-    q = (fun.writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
     w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
     got = {r["user_id"]: r["depth"] for r in
-           spark.table(sink).withColumn("rn", F.row_number().over(w))
+           drain(fun, "update").withColumn("rn", F.row_number().over(w))
            .filter("rn = 1").collect()}
     batch = {r["user_id"]: r["steps_completed"]
              for r in funnel(cast, STEPS).collect()}

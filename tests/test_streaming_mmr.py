@@ -12,9 +12,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from duckdb_spatial_spark.operators.rank import mmr_greedy, mmr_rerank
-from duckdb_spatial_spark.streaming import streaming_mmr_rerank
-
-_SINK = [0]
+from duckdb_spatial_spark.streaming import drain, streaming_mmr_rerank
 
 
 def _drive(spark, tmp_path, batches, qvec, k, pool):
@@ -29,13 +27,8 @@ def _drive(spark, tmp_path, batches, qvec, k, pool):
               .option("maxFilesPerTrigger", 1).parquet(src))
     out = streaming_mmr_rerank(stream, qvec, k=k, pool=pool,
                                window="1 hour")
-    _SINK[0] += 1
-    sink = f"t_smmr_{_SINK[0]}"
-    q = (out.writeStream.format("memory").queryName(sink)
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination()
     w = Window.partitionBy("win", "rank").orderBy(F.col("n_seen").desc())
-    final = (spark.table(sink)
+    final = (drain(out, "update")
              .withColumn("rn", F.row_number().over(w)).filter("rn = 1"))
     got = {}
     for r in final.collect():
