@@ -33,34 +33,16 @@ from duckdb_spatial_spark.operators import (
     textops,
 )
 from duckdb_spatial_spark.operators.similarity import cosine_similarity
-from duckdb_spatial_spark.runtime import adaptive_partitions, utc_timestamp
+from duckdb_spatial_spark.runtime import (adaptive_partitions,
+                                          probe_pairs as _probe_pairs,
+                                          probe_sorted as _probe_sorted,
+                                          small_sort as _ssort, utc_timestamp)
 from duckdb_spatial_spark.sources import st_generatepoints
 from duckdb_spatial_spark.sources.tables import (load_table, local_relation,
                                                  read_layout, stream_table)
 
 
 # --------------------------------------------------------------- helpers
-
-
-def _probe_pairs(df: DataFrame, key: str, col: str) -> list:
-    """Bounded model-probe collect, sorted DRIVER-side (trap 15 applied
-    to probes — an ``orderBy`` before a tiny collect plans a global sort
-    whose range-bounds SAMPLING job re-runs the probe subtree). Returns
-    ``(key, col)`` pairs in ``key`` order so one probe job can feed both
-    a driver-side model (centroids/codebooks) and an inlined
-    LocalRelation of the query rows."""
-    rows = df.select(key, col).collect()
-    rows.sort(key=lambda r: r[0])
-    return [(r[0], r[1]) for r in rows]
-
-
-def _probe_sorted(df: DataFrame, key: str, col: str) -> list:
-    """Bounded model-probe collect (centroids/codebook rows), sorted
-    DRIVER-side: an ``orderBy`` before a tiny collect plans a global
-    sort whose range-bounds SAMPLING job re-runs the probe subtree —
-    2 jobs for <=32 rows (trap 15 applied to probes). Returns the
-    ``col`` values in ``key`` order."""
-    return [v for _, v in _probe_pairs(df, key, col)]
 
 
 def _local_queries(spark: SparkSession, emb: DataFrame, pairs: list,
@@ -82,17 +64,6 @@ def _local_queries(spark: SparkSession, emb: DataFrame, pairs: list,
             T.StructField("query_id", emb.schema["vec_id"].dataType),
             T.StructField("query_vec", emb.schema["embedding"].dataType),
         ]))
-
-
-def _ssort(df: DataFrame, *cols) -> DataFrame:
-    """Presentation sort for a SMALL (bounded-by-construction) result:
-    one-partition exchange + in-partition sort. A trailing global
-    orderBy plans a RangePartitioning whose bounds-SAMPLING job
-    re-executes everything after the last exchange (measured 2.0x on
-    q122, whose whole 600k-row window sat between the exchange and the
-    sort); for results bounded to tens/hundreds of rows the
-    single-partition sort is strictly cheaper and scale-safe."""
-    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def _events_pts(spark: SparkSession, sf: str, fan_out: bool = True) -> DataFrame:

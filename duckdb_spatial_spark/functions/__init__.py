@@ -25,6 +25,7 @@ from .agg import (  # noqa: F401
     st_union_agg,
 )
 from .scalar import *  # noqa: F401,F403
+from . import agg as _agg
 from . import scalar as _scalar
 from .casts import (  # noqa: F401
     box2d_to_geom,
@@ -310,20 +311,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     # reference's 1-arg overload; Spark SQL UDFs cannot overload by arity)
     reg("ST_CollectionExtract", _collectionextract2)
 
-    @pandas_udf(T.BinaryType())
-    def _envelope4(a: pd.Series, b: pd.Series, c: pd.Series, d: pd.Series) -> pd.Series:
-        from ..geom.core import Geometry
-        from ..geom.wkb import to_wkb
-
-        out = []
-        for vals in zip(a, b, c, d):
-            if any(v is None for v in vals):
-                out.append(None)
-            else:
-                out.append(to_wkb(Geometry.box_polygon(*[float(v) for v in vals])))
-        return pd.Series(out, dtype=object)
-
-    reg("ST_MakeEnvelope", _envelope4)
+    reg("ST_MakeEnvelope", S._st_makeenvelope_udf)
 
     @pandas_udf(T.LongType())
     def _hilbert(x: pd.Series, y: pd.Series) -> pd.Series:
@@ -510,24 +498,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     reg("ST_Length_Spheroid", S._st_length_spheroid_udf)
     reg("ST_Area_Spheroid", S._st_area_spheroid_udf)
 
-    @pandas_udf(T.DoubleType())
-    def _perimeter_spheroid(g: pd.Series) -> pd.Series:
-        out = []
-        for b in g:
-            if b is None:
-                out.append(None)
-                continue
-            total = 0.0
-            for p in from_wkb(b).flatten():
-                if p.type_id == 3:
-                    for r in p.rings:
-                        from ..geom.core import Geometry as _G
-
-                        total += S._spheroid_len(_G(2, coords=r))
-            out.append(total)
-        return pd.Series(out)
-
-    reg("ST_Perimeter_Spheroid", _perimeter_spheroid)
+    reg("ST_Perimeter_Spheroid", S._st_perimeter_spheroid_udf)
 
     @pandas_udf(T.BooleanType())
     def _dwithin_spheroid(a: pd.Series, b: pd.Series, dist: pd.Series) -> pd.Series:
@@ -596,7 +567,7 @@ def register_sql_functions(spark: SparkSession) -> None:
     reg("ST_Point2DFromWKB", _point2dfromwkb)
 
     # grouped-aggregate registrations (usable in SQL GROUP BY)
-    reg("ST_Collect_Agg", _scalar_agg_collect())
+    reg("ST_Collect_Agg", _agg._st_collect_agg_udf)
     ext_agg = _scalar_agg_extent()
     reg("ST_Extent_Agg", ext_agg)
     reg("ST_Envelope_Agg", ext_agg)
@@ -635,30 +606,14 @@ def register_sql_table_functions(spark: SparkSession) -> None:
                 u2 = mix(i * 2 + int(seed) * 1_000_003 + 2)
                 yield i, xmin + u1 * (xmax - xmin), ymin + u2 * (ymax - ymin)
 
-    @udtf(returnType=("short_name string, description string, "
-                      "can_open boolean, can_create boolean, can_copy boolean"))
+    from ..sources.read import DRIVERS_DDL
+
+    @udtf(returnType=DRIVERS_DDL)
     class _Drivers:
         def eval(self):
-            from ..sources.read import st_drivers
+            from ..sources.read import driver_rows
 
-            # the driver rows are static — mirror them without a session
-            rows = [
-                ("parquet", "Apache Parquet (+GeoParquet WKB)", True, True, True),
-                ("csv", "CSV (+WKT geometry column)", True, True, True),
-                ("json", "JSON lines", True, True, True),
-                ("orc", "Apache ORC", True, True, True),
-                ("geojson", "GeoJSON FeatureCollection", True, True, True),
-                ("osm.pbf", "OpenStreetMap PBF (native protobuf decoder)", True, False, False),
-                ("gpkg", "GeoPackage (native stdlib-sqlite reader/writer)", True, True, True),
-                ("kml", "KML / KMZ (native XML reader/writer)", True, True, True),
-                ("fgb", "FlatGeobuf (native flatbuffers codec)", True, True, True),
-                ("gdb", "ESRI OpenFileGDB (native .gdbtable codec)", True, True, False),
-                ("zip", "Zip containers (/vsizip/ analog)", True, False, False),
-                ("shp", "ESRI Shapefile (native codec)", True, True, True),
-            ]
-            _ = st_drivers
-            for r in rows:
-                yield r
+            yield from driver_rows()
 
     @udtf(returnType="auth_name string, code int, name string, kind string, projection string")
     class _ListProjCrs:
@@ -671,9 +626,9 @@ def register_sql_table_functions(spark: SparkSession) -> None:
     # ST_Read / ST_ReadOSM as SQL table functions: polymorphic UDTF whose
     # analyze() derives the output schema from the file (the reference's
     # bind phase, st_read.cpp:105-240 made SQL-callable). eval() runs on an
-    # executor with no SparkSession, so both sides use the session-free
-    # local decode (sources.read.local_read_rows). Single-task convenience
-    # form — st_read() in the Python API is the distributed scale path.
+    # executor with no SparkSession, so both sides plan the native
+    # reader's session-free Scan (sources.read.local_read_rows) and eval()
+    # runs it in one task — st_read() runs the same Scan distributed.
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
 
     class _ReadUDTF:
@@ -699,10 +654,10 @@ def register_sql_table_functions(spark: SparkSession) -> None:
             return AnalyzeResult(schema=OSM_SCHEMA)
 
         def eval(self, path):
-            from ..sources.read import local_read_rows
+            from ..sources.filescan import rows
+            from ..sources.read import osm_scan
 
-            _schema, rows = local_read_rows(path)
-            yield from rows
+            yield from rows(osm_scan(path))
 
     spark.udtf.register("ST_GeneratePoints", _GeneratePoints)
     spark.udtf.register("ST_Drivers", _Drivers)
@@ -735,22 +690,6 @@ def _quadkey_py(lon: float, lat: float, level: int) -> str:
         else:
             digits.append("0")
     return "".join(digits)
-
-
-def _scalar_agg_collect():
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from ..geom.core import collect
-    from .scalar import from_wkb, to_wkb
-
-    @pandas_udf(T.BinaryType())
-    def f(s: pd.Series) -> bytes:
-        geoms = [from_wkb(b) for b in s if b is not None]
-        return to_wkb(collect(geoms))
-
-    return f
 
 
 def _scalar_agg_extent():

@@ -1985,17 +1985,20 @@ def st_area_spheroid(geom: ColumnOrName) -> Column:
     return _st_area_spheroid_udf(_col(geom))
 
 
-def st_perimeter_spheroid(geom: ColumnOrName) -> Column:
-    def per(g: Geometry) -> float:
-        total = 0.0
-        for p in g.flatten():
-            if p.type_id == Wkb.POLYGON:
-                for r in p.rings:
-                    ls = Geometry(Wkb.LINESTRING, coords=r)
-                    total += _spheroid_len(ls)
-        return total
+def _spheroid_perimeter(g: Geometry) -> float:
+    total = 0.0
+    for p in g.flatten():
+        if p.type_id == Wkb.POLYGON:
+            for r in p.rings:
+                total += _spheroid_len(Geometry(Wkb.LINESTRING, coords=r))
+    return total
 
-    return _unary_geom_to(T.DoubleType(), per)(_col(geom))
+
+_st_perimeter_spheroid_udf = _unary_geom_to(T.DoubleType(), _spheroid_perimeter)
+
+
+def st_perimeter_spheroid(geom: ColumnOrName) -> Column:
+    return _st_perimeter_spheroid_udf(_col(geom))
 
 
 def st_dwithin_spheroid(x1, y1, x2, y2, dist) -> Column:

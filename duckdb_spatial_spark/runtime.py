@@ -1,5 +1,6 @@
 """Shared runtime mechanisms: scoped session conf, input-sized partition
-counts, the one-job bounded probe and timezone-free event time.
+counts, the one-job bounded probes, the small-result sort and
+timezone-free event time.
 
 Session conf is shared by every thread of a SparkSession. The engine
 changes it only inside :func:`scoped_conf`, and only for the span of one
@@ -16,7 +17,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 __all__ = ["adaptive_partitions", "epoch_micros", "probe_limit_collect",
-           "scoped_conf", "utc_timestamp"]
+           "probe_pairs", "probe_sorted", "scoped_conf", "small_sort",
+           "utc_timestamp"]
 
 
 @contextlib.contextmanager
@@ -67,6 +69,35 @@ def probe_limit_collect(df: DataFrame, n: int):
     with scoped_conf(df.sparkSession,
                      {"spark.sql.limit.initialNumPartitions": 1 << 30}):
         return df.limit(n).collect()
+
+
+def probe_pairs(df: DataFrame, key: str, col: str) -> list:
+    """Bounded model-probe collect, sorted DRIVER-side (an ``orderBy``
+    before a tiny collect plans a global sort whose range-bounds SAMPLING
+    job re-runs the probe subtree). Returns ``(key, col)`` pairs in
+    ``key`` order so one probe job can feed both a driver-side model
+    (centroids/codebooks) and an inlined LocalRelation of the query
+    rows."""
+    rows = df.select(key, col).collect()
+    rows.sort(key=lambda r: r[0])
+    return [(r[0], r[1]) for r in rows]
+
+
+def probe_sorted(df: DataFrame, key: str, col: str) -> list:
+    """The ``col`` values of :func:`probe_pairs` in ``key`` order: one
+    job, where an ``orderBy`` before the collect costs 2 for <=32 rows."""
+    return [v for _, v in probe_pairs(df, key, col)]
+
+
+def small_sort(df: DataFrame, *cols) -> DataFrame:
+    """Presentation sort for a SMALL (bounded-by-construction) result:
+    one-partition exchange + in-partition sort. A trailing global
+    orderBy plans a RangePartitioning whose bounds-SAMPLING job
+    re-executes everything after the last exchange (measured 2.0x on
+    q122, whose whole 600k-row window sat between the exchange and the
+    sort); for results bounded to tens/hundreds of rows the
+    single-partition sort is strictly cheaper and scale-safe."""
+    return df.repartition(1).sortWithinPartitions(*cols)
 
 
 def epoch_micros(ts: Union[Column, str]) -> Column:

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 
 from ..geom.core import LINESTRING, POLYGON, Geometry
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, run
 
 DXF_SCHEMA = T.StructType([
     T.StructField("source_file", T.StringType()),
@@ -238,12 +238,16 @@ def parse_dxf_text(text: str, source: str) -> List[tuple]:
     return rows
 
 
+def dxf_scan(path: str) -> Scan:
+    return Scan(
+        DXF_SCHEMA,
+        lambda p, data: parse_dxf_text(data.decode("utf-8", "replace"), p),
+        path=path, globs=("*.dxf",))
+
+
 def st_read_dxf(spark: SparkSession, path: str, geom_col: str = "geom"
                 ) -> DataFrame:
-    return scan_files(
-        binary_files(spark, path, "*.dxf"),
-        lambda p, data: parse_dxf_text(data.decode("utf-8", "replace"), p),
-        DXF_SCHEMA, geom_col)
+    return run(spark, dxf_scan(path), geom_col)
 
 
 # ------------------------------------------------------------------ sink

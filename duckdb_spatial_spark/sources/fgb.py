@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 
 from ..geom import fgb as FGB
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _CT_TO_SPARK = {
     FGB.CT_BYTE: T.LongType(), FGB.CT_UBYTE: T.LongType(),
@@ -58,14 +58,13 @@ def _read_header(path: str):
     return hdr, idx, data_start
 
 
-def st_read_fgb(
-    spark: SparkSession,
+def fgb_scan(
     path: str,
     columns: Optional[List[str]] = None,
     bbox: Optional[tuple] = None,
     geom_col: str = "geom",
     num_partitions: Optional[int] = None,
-) -> DataFrame:
+) -> Scan:
     hdr, idx, data_start = _read_header(path)
     cols = hdr["columns"]
     attr_cols = [c["name"] for c in cols]
@@ -112,8 +111,19 @@ def st_read_fgb(
                         + (None if geom is None else to_wkb(geom),))
         return rows
 
-    return scan_ranges(spark, ranges, "path string, start long, stop long",
-                       parse, schema)
+    return Scan(schema, parse, ranges=ranges,
+                ddl="path string, start long, stop long")
+
+
+def st_read_fgb(
+    spark: SparkSession,
+    path: str,
+    columns: Optional[List[str]] = None,
+    bbox: Optional[tuple] = None,
+    geom_col: str = "geom",
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    return run(spark, fgb_scan(path, columns, bbox, geom_col, num_partitions))
 
 
 def st_write_fgb(

@@ -15,11 +15,20 @@ Arrow IPC, MIF, shapefile, WARC, WebDataset, OSM PBF) instead plan ranges
 on the driver from headers or footers — a feature span, a record-batch
 span, a blob, a file — and :func:`scan_ranges` parses one range per task
 (Arrow IPC maps its own loop over the same range table).
+
+A reader plans its read as a :class:`Scan` without a SparkSession; the
+same plan runs distributed through :func:`run` (``st_read``) or in this
+process through :func:`rows` (the SQL ``ST_Read`` table function).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator, List, Sequence
+import fnmatch
+import os
+import re
+from dataclasses import dataclass
+from pathlib import Path
+from typing import Callable, Iterator, List, Optional, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -32,6 +41,76 @@ Parse = Callable[[str, bytes], List[tuple]]
 # Past this many ranges a task parses several: every task is a Python
 # runner, and a range is already sized to be worth one.
 _MAX_TASKS = 256
+
+
+@dataclass(frozen=True)
+class Scan:
+    """One reader's read, planned without a session: rows of ``schema``
+    from the reader's own ``parse``. The units are either ``ranges``
+    (driver-planned tuples of the ``ddl`` columns, ``parse(*range)``) or
+    the files of ``path`` (``parse(path, data)``), listed with the first
+    of ``globs`` that matches a file (subdirectories too when
+    ``recursive``)."""
+    schema: T.StructType
+    parse: Callable[..., List[tuple]]
+    ranges: Optional[Sequence[tuple]] = None
+    ddl: str = ""
+    path: str = ""
+    globs: Tuple[str, ...] = ()
+    recursive: bool = False
+
+
+def run(spark: SparkSession, scan: Scan, geom_col: str = "geom") -> DataFrame:
+    """``scan`` as a distributed DataFrame: one task per range, or one
+    binaryFile scan of the files; ``geom_col`` renames a file scan's
+    ``geom`` column (range readers name it in their plan)."""
+    if scan.ranges is not None:
+        return scan_ranges(spark, scan.ranges, scan.ddl, scan.parse,
+                           scan.schema)
+    for g in scan.globs:
+        files = binary_files(spark, scan.path, g, scan.recursive)
+        if files.inputFiles():
+            break
+    return scan_files(files, scan.parse, scan.schema, geom_col)
+
+
+def rows(scan: Scan) -> Iterator[tuple]:
+    """``scan`` run in this process: the same ``parse`` over the same
+    units, one after another, as tuples in schema field order."""
+    if scan.ranges is not None:
+        parsed = (r for rng in scan.ranges for r in scan.parse(*rng))
+    else:
+        parsed = (r for p in local_files(scan.path, scan.globs)
+                  for r in scan.parse(p, Path(p).read_bytes()))
+    names = scan.schema.fieldNames()
+    for r in parsed:
+        yield tuple(r.get(n) for n in names) if isinstance(r, dict) else tuple(r)
+
+
+def local_files(path: str, globs: Sequence[str]) -> List[str]:
+    """The local files :func:`binary_files` lists for ``path``: the file
+    itself, or the files under the directory ``path`` whose names match
+    the first of ``globs`` (Hadoop ``{a,b}`` alternatives allowed) that
+    matches any; names starting with ``.`` or ``_`` are hidden, as in
+    Spark's file listing."""
+    local = os.path.abspath(path[5:] if path.startswith("file:") else path)
+    if not os.path.exists(local):
+        raise FileNotFoundError(path)
+    if not os.path.isdir(local):
+        return [local]
+    listed = []
+    for d, subdirs, names in os.walk(local):
+        subdirs[:] = [s for s in subdirs if not s.startswith((".", "_"))]
+        listed += [os.path.join(d, n) for n in names
+                   if not n.startswith((".", "_"))]
+    for g in globs:
+        m = re.fullmatch(r"(.*)\{(.*)\}(.*)", g)
+        pats = [m[1] + alt + m[3] for alt in m[2].split(",")] if m else [g]
+        hit = sorted(p for p in listed if any(
+            fnmatch.fnmatchcase(os.path.basename(p), pat) for pat in pats))
+        if hit:
+            return hit
+    return []
 
 
 def binary_files(spark: SparkSession, path: str, glob_filter: str,

@@ -29,7 +29,7 @@ from pyspark.sql import types as T
 
 from ..geom import gdbtable as GT
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _SPARK_TYPE = {
     GT.FT_INT16: T.IntegerType(),
@@ -77,16 +77,14 @@ def gdb_schema(base: str, geom_col: str = "geom") -> T.StructType:
     return T.StructType(out)
 
 
-def st_read_gdb(
-    spark: SparkSession,
+def gdb_scan(
     path: str,
     layer: Optional[str] = None,
     columns: Optional[List[str]] = None,
     bbox: Optional[tuple] = None,
     geom_col: str = "geom",
     num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Distributed OpenFileGDB read → attribute columns + WKB geometry."""
+) -> Scan:
     base = _resolve_layer(path, layer)
     _, fields = GT.read_header_and_fields(base + ".gdbtable")
     offsets = GT.read_tablx(base + ".gdbtablx")
@@ -122,28 +120,22 @@ def st_read_gdb(
             out.append(tuple(vals[i] for i in keep_idx))
         return out
 
-    return scan_ranges(spark, ranges, "base string, lo long, hi long", parse,
-                       schema)
+    return Scan(schema, parse, ranges=ranges,
+                ddl="base string, lo long, hi long")
 
 
-def local_gdb_rows(path: str, layer: Optional[str] = None,
-                   geom_col: str = "geom"):
-    """Session-free decode for the ST_Read UDTF: (schema, row iterator)."""
-    base = _resolve_layer(path, layer)
-    _, fields = GT.read_header_and_fields(base + ".gdbtable")
-    offsets = GT.read_tablx(base + ".gdbtablx")
-    schema = gdb_schema(base, geom_col)
-    gidx = next((i for i, f in enumerate(fields)
-                 if f.ftype == GT.FT_GEOMETRY), None)
-
-    def rows():
-        for r in GT.read_rows(base + ".gdbtable", fields, offsets):
-            vals = list(r)
-            if gidx is not None and vals[gidx] is not None:
-                vals[gidx] = to_wkb(vals[gidx])
-            yield tuple(vals)
-
-    return schema, rows()
+def st_read_gdb(
+    spark: SparkSession,
+    path: str,
+    layer: Optional[str] = None,
+    columns: Optional[List[str]] = None,
+    bbox: Optional[tuple] = None,
+    geom_col: str = "geom",
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """Distributed OpenFileGDB read → attribute columns + WKB geometry."""
+    return run(spark, gdb_scan(path, layer, columns, bbox, geom_col,
+                               num_partitions))
 
 
 _GEOM_LAYER = {1: "POINT", 4: "MULTIPOINT", 2: "POLYLINE", 5: "POLYLINE",

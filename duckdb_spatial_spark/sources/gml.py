@@ -15,6 +15,7 @@ format. The property columns are bound from the first file by path."""
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
+from pathlib import Path
 from typing import List, Optional, Tuple
 
 import numpy as np
@@ -33,7 +34,7 @@ from ..geom.core import (
     collect,
 )
 from ..geom.wkb import to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, binary_files, local_files, run
 
 _GEOM_TAGS = {
     "Point", "LineString", "Polygon", "Curve", "Surface",
@@ -159,11 +160,13 @@ def parse_gml_bytes(data: bytes, source: str) -> Tuple[List[dict], List[str]]:
     return feats, prop_names
 
 
-def st_read_gml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataFrame:
-    files = binary_files(spark, path, "*.gml")
-    # bind: the first file by path decides the property columns
-    first = files.orderBy("path").select("content").limit(1).collect()
-    props = parse_gml_bytes(bytes(first[0][0]), path)[1] if first else []
+def gml_scan(path: str, props: Optional[List[str]] = None) -> Scan:
+    """The GML read of ``path``. ``props`` are the property columns; when
+    not given, the first local file by path binds them."""
+    if props is None:
+        files = local_files(path, ("*.gml",))
+        props = (parse_gml_bytes(Path(files[0]).read_bytes(), path)[1]
+                 if files else [])
     schema = T.StructType(
         [T.StructField("source_file", T.StringType())]
         + [T.StructField(p, T.StringType()) for p in props]
@@ -173,4 +176,13 @@ def st_read_gml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataF
         return [tuple([p] + [f.get(c) for c in props] + [f["geom"]])
                 for f in parse_gml_bytes(data, p)[0]]
 
-    return scan_files(files, parse, schema, geom_col)
+    return Scan(schema, parse, path=path, globs=("*.gml",))
+
+
+def st_read_gml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataFrame:
+    # bind: the first file by path decides the property columns
+    first = (binary_files(spark, path, "*.gml").orderBy("path")
+             .select("content").limit(1).collect())
+    scan = gml_scan(path, parse_gml_bytes(bytes(first[0][0]), path)[1]
+                    if first else [])
+    return run(spark, scan, geom_col)

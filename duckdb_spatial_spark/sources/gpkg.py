@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _GPKG_APP_ID = 0x47504B47  # 'GPKG'
 
@@ -132,17 +132,14 @@ def _spark_type(decl: str) -> T.DataType:
     return T.StringType()
 
 
-def st_read_gpkg(
-    spark: SparkSession,
+def gpkg_scan(
     path: str,
     layer: Optional[str] = None,
     columns: Optional[List[str]] = None,
     bbox: Optional[Tuple[float, float, float, float]] = None,
     geom_col: str = "geom",
     num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Distributed GeoPackage read → DataFrame with the layer's attribute
-    columns plus ``geom_col`` (raw WKB binary, header stripped)."""
+) -> Scan:
     layers = gpkg_layers(path)
     if not layers:
         raise ValueError(f"{path}: no feature layers in gpkg_contents")
@@ -228,14 +225,29 @@ def st_read_gpkg(
             out_rows.append(tuple(attrs) + (gpkg_blob_to_wkb(gblob),))
         return out_rows
 
-    df = scan_ranges(spark, ranges, "path string, lo long, hi long", parse,
-                     schema)
-    if want_bbox is not None:
+    return Scan(schema, parse, ranges=ranges,
+                ddl="path string, lo long, hi long")
+
+
+def st_read_gpkg(
+    spark: SparkSession,
+    path: str,
+    layer: Optional[str] = None,
+    columns: Optional[List[str]] = None,
+    bbox: Optional[Tuple[float, float, float, float]] = None,
+    geom_col: str = "geom",
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """Distributed GeoPackage read → DataFrame with the layer's attribute
+    columns plus ``geom_col`` (raw WKB binary, header stripped)."""
+    df = run(spark, gpkg_scan(path, layer, columns, bbox, geom_col,
+                              num_partitions))
+    if bbox is not None:
         # exact bbox re-check on decoded WKB for headerless blobs
         from ..functions import scalar as S
 
         b = S.st_extent(geom_col)
-        xmin, ymin, xmax, ymax = want_bbox
+        xmin, ymin, xmax, ymax = bbox
         df = df.filter(
             (b["xmin"] <= xmax) & (b["xmax"] >= xmin)
             & (b["ymin"] <= ymax) & (b["ymax"] >= ymin)

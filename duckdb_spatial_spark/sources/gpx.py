@@ -27,7 +27,7 @@ from pyspark.sql import types as T
 
 from ..geom.core import LINESTRING, MULTILINESTRING, Geometry
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, run
 
 GPX_LAYERS = ("waypoints", "routes", "tracks", "route_points", "track_points")
 
@@ -149,17 +149,21 @@ def parse_gpx_bytes(data: bytes, source: str, layer: str) -> List[tuple]:
     return rows
 
 
+def gpx_scan(path: str, layer: str = "waypoints") -> Scan:
+    if layer not in GPX_LAYERS:
+        raise ValueError(f"unknown GPX layer {layer!r}; one of {GPX_LAYERS}")
+    return Scan(_SCHEMAS[layer],
+                lambda p, data: parse_gpx_bytes(data, p, layer),
+                path=path, globs=("*.gpx",))
+
+
 def st_read_gpx(
     spark: SparkSession,
     path: str,
     layer: str = "waypoints",
     geom_col: str = "geom",
 ) -> DataFrame:
-    if layer not in GPX_LAYERS:
-        raise ValueError(f"unknown GPX layer {layer!r}; one of {GPX_LAYERS}")
-    return scan_files(binary_files(spark, path, "*.gpx"),
-                      lambda p, data: parse_gpx_bytes(data, p, layer),
-                      _SCHEMAS[layer], geom_col)
+    return run(spark, gpx_scan(path, layer), geom_col)
 
 
 # ------------------------------------------------------------------ sink

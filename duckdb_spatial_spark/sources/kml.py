@@ -31,7 +31,7 @@ from ..geom.core import (
     collect,
 )
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, run
 
 _NS = "{http://www.opengis.net/kml/2.2}"
 
@@ -113,10 +113,13 @@ def parse_kml_bytes(data: bytes, source: str) -> List[tuple]:
     return rows
 
 
+def kml_scan(path: str) -> Scan:
+    return Scan(KML_SCHEMA, lambda p, data: parse_kml_bytes(data, p),
+                path=path, globs=("*.kml",))
+
+
 def st_read_kml(spark: SparkSession, path: str, geom_col: str = "geom") -> DataFrame:
-    return scan_files(binary_files(spark, path, "*.kml"),
-                      lambda p, data: parse_kml_bytes(data, p),
-                      KML_SCHEMA, geom_col)
+    return run(spark, kml_scan(path), geom_col)
 
 
 # ------------------------------------------------------------------ sink

@@ -34,7 +34,7 @@ from pyspark.sql import types as T
 from ..geom.core import (Geometry, LINESTRING, MULTILINESTRING, MULTIPOINT,
                          MULTIPOLYGON, POINT, POLYGON)
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _TYPE_MAP = {
     "integer": T.IntegerType(),
@@ -242,9 +242,7 @@ def read_mif_pair(mif_path: str) -> Tuple[T.StructType, List[tuple]]:
     return T.StructType(fields), rows
 
 
-def st_read_mif(spark: SparkSession, path: str,
-                geom_col: str = "geom") -> DataFrame:
-    """Distributed MIF/MID read: one task per .mif file."""
+def mif_scan(path: str, geom_col: str = "geom") -> Scan:
     if os.path.isdir(path):
         files = sorted(glob.glob(os.path.join(path, "*.mif")))
     else:
@@ -257,8 +255,14 @@ def st_read_mif(spark: SparkSession, path: str,
         schema = T.StructType(
             [T.StructField(geom_col if f.name == "geom" else f.name,
                            f.dataType) for f in schema.fields])
-    return scan_ranges(spark, [(f,) for f in files], "path string",
-                       lambda p: read_mif_pair(p)[1], schema)
+    return Scan(schema, lambda p: read_mif_pair(p)[1],
+                ranges=[(f,) for f in files], ddl="path string")
+
+
+def st_read_mif(spark: SparkSession, path: str,
+                geom_col: str = "geom") -> DataFrame:
+    """Distributed MIF/MID read: one task per .mif file."""
+    return run(spark, mif_scan(path, geom_col))
 
 
 _MAX_SINK_BYTES = 1 << 30

@@ -36,7 +36,7 @@ from ..geom.core import (Geometry, LINESTRING, MULTILINESTRING, MULTIPOINT,
 from ..geom.pbf import (_enc_field, _enc_varint, _fields, _packed_varints,
                         _varint)
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, run
 
 __all__ = ["decode_mvt", "encode_mvt_tile", "st_read_mvt", "st_write_mvt"]
 
@@ -369,6 +369,17 @@ MVT_SCHEMA = T.StructType([
 ])
 
 
+def mvt_scan(path: str, layer: Optional[str] = None,
+             tile: Optional[Tuple[int, int, int]] = None) -> Scan:
+    def parse(p: str, data: bytes) -> List[tuple]:
+        if data[:2] == b"\x1f\x8b":  # tiles are often gzipped
+            data = gzip.decompress(data)
+        return [row + (p,) for row in decode_mvt(data, layer=layer, tile=tile)]
+
+    return Scan(MVT_SCHEMA, parse, path=path, globs=("*.{mvt,vector.pbf}",),
+                recursive=True)
+
+
 def st_read_mvt(
     spark: SparkSession,
     path: str,
@@ -382,15 +393,7 @@ def st_read_mvt(
     read); directory scans of a z/x/y pyramid pass tile=None and keep
     tile-local coordinates plus the source_file path (which carries z/x/y
     for downstream georeferencing)."""
-
-    def parse(p: str, data: bytes) -> List[tuple]:
-        if data[:2] == b"\x1f\x8b":  # tiles are often gzipped
-            data = gzip.decompress(data)
-        return [row + (p,) for row in decode_mvt(data, layer=layer, tile=tile)]
-
-    return scan_files(
-        binary_files(spark, path, "*.{mvt,vector.pbf}", recursive=True),
-        parse, MVT_SCHEMA, geom_col)
+    return run(spark, mvt_scan(path, layer, tile), geom_col)
 
 
 _MAX_SINK_BYTES = 1 << 30

@@ -42,7 +42,9 @@ from pyspark.sql import types as T
 
 from ..geom.geojson import geojson_to_geometry
 from ..geom.wkb import to_wkb
-from .filescan import binary_files, scan_files, scan_ranges
+from . import (dxf, fgb, gdb, gml, gpkg, gpx, kml, mif, mvt, shapefile,
+               spatialite, tab, topojson)
+from .filescan import Scan, rows, run
 from .tables import local_relation
 
 # fixed ST_ReadOSM output schema (st_read_osm.cpp:39-90)
@@ -59,43 +61,54 @@ OSM_SCHEMA = T.StructType(
     ]
 )
 
-def st_drivers(spark: SparkSession) -> DataFrame:
-    """Supported format drivers (analog of ST_Drivers, st_drivers.cpp)."""
+#: ST_Drivers rows (st_drivers.cpp) of the native format drivers
+DRIVERS = [
+    ("parquet", "Apache Parquet (+GeoParquet WKB)", True, True, True),
+    ("csv", "CSV (+WKT geometry column)", True, True, True),
+    ("json", "JSON lines", True, True, True),
+    ("orc", "Apache ORC", True, True, True),
+    ("geojson", "GeoJSON FeatureCollection", True, True, True),
+    ("osm.pbf", "OpenStreetMap PBF (native protobuf decoder)", True, False, False),
+    ("gpkg", "GeoPackage (native stdlib-sqlite reader/writer)", True, True, True),
+    ("kml", "KML / KMZ (native XML reader/writer)", True, True, True),
+    ("fgb", "FlatGeobuf (native flatbuffers codec)", True, True, True),
+    ("gdb", "ESRI OpenFileGDB (native .gdbtable codec)", True, True, False),
+    ("mif", "MapInfo Interchange MIF/MID (native text codec)", True, True, True),
+    ("tab", "MapInfo TAB (native .map/.id/.dat binary codec)", True, True, True),
+    ("gpx", "GPS Exchange GPX 1.1 (native XML, OGR 5-layer model)", True, True, True),
+    ("arrow", "Apache Arrow IPC / Feather V2 (batch-range parallel scan, distributed sink)", True, True, True),
+    ("sqlite", "SpatiaLite (native BLOB-geometry codec, stdlib sqlite3)", True, True, True),
+    ("dxf", "AutoCAD DXF (native group-code parser: POINT/LINE/LWPOLYLINE/POLYLINE/CIRCLE/ARC)", True, True, True),
+    ("mvt", "Mapbox Vector Tiles 2.1 (native protobuf codec; .mvt / .vector.pbf, gzip-transparent)", True, True, True),
+    ("topojson", "TopoJSON (native arc-topology decoder; read-only like OGR's driver)", True, False, False),
+    ("xlsx", "Office Open XML spreadsheet (native zip+XML reader)", True, False, True),
+    ("gml", "GML 2/3 (native XML reader)", True, False, True),
+    ("zip", "Zip containers (/vsizip/ analog: x.zip/inner.shp)", True, False, False),
+    ("shp", "ESRI Shapefile (native codec)", True, True, True),
+]
+DRIVERS_DDL = ("short_name string, description string, "
+               "can_open boolean, can_create boolean, can_copy boolean")
+
+
+def _has_ogr() -> bool:
     try:
         import pyogrio  # noqa: F401
-
-        has_ogr = True
     except ImportError:
-        has_ogr = False
-    rows = [
-        ("parquet", "Apache Parquet (+GeoParquet WKB)", True, True, True),
-        ("csv", "CSV (+WKT geometry column)", True, True, True),
-        ("json", "JSON lines", True, True, True),
-        ("orc", "Apache ORC", True, True, True),
-        ("geojson", "GeoJSON FeatureCollection", True, True, True),
-        ("osm.pbf", "OpenStreetMap PBF (native protobuf decoder)", True, False, False),
-        ("gpkg", "GeoPackage (native stdlib-sqlite reader/writer)", True, True, True),
-        ("kml", "KML / KMZ (native XML reader/writer)", True, True, True),
-        ("fgb", "FlatGeobuf (native flatbuffers codec)", True, True, True),
-        ("gdb", "ESRI OpenFileGDB (native .gdbtable codec)", True, True, False),
-        ("mif", "MapInfo Interchange MIF/MID (native text codec)", True, True, True),
-        ("tab", "MapInfo TAB (native .map/.id/.dat binary codec)", True, True, True),
-        ("gpx", "GPS Exchange GPX 1.1 (native XML, OGR 5-layer model)", True, True, True),
-        ("arrow", "Apache Arrow IPC / Feather V2 (batch-range parallel scan, distributed sink)", True, True, True),
-        ("sqlite", "SpatiaLite (native BLOB-geometry codec, stdlib sqlite3)", True, True, True),
-        ("dxf", "AutoCAD DXF (native group-code parser: POINT/LINE/LWPOLYLINE/POLYLINE/CIRCLE/ARC)", True, True, True),
-        ("mvt", "Mapbox Vector Tiles 2.1 (native protobuf codec; .mvt / .vector.pbf, gzip-transparent)", True, True, True),
-        ("topojson", "TopoJSON (native arc-topology decoder; read-only like OGR's driver)", True, False, False),
-        ("xlsx", "Office Open XML spreadsheet (native zip+XML reader)", True, False, True),
-        ("gml", "GML 2/3 (native XML reader)", True, False, True),
-        ("zip", "Zip containers (/vsizip/ analog: x.zip/inner.shp)", True, False, False),
-        ("shp", "ESRI Shapefile (native codec)", True, True, True),
-        ("ogr", f"OGR formats via pyogrio ({'available' if has_ogr else 'NOT INSTALLED'})",
-         has_ogr, False, has_ogr),
-    ]
-    return local_relation(
-        spark, rows, "short_name string, description string, "
-        "can_open boolean, can_create boolean, can_copy boolean")
+        return False
+    return True
+
+
+def driver_rows() -> List[tuple]:
+    """:data:`DRIVERS` and the row of the optional pyogrio gate."""
+    ogr = _has_ogr()
+    return DRIVERS + [("ogr", "OGR formats via pyogrio ("
+                       f"{'available' if ogr else 'NOT INSTALLED'})",
+                       ogr, False, ogr)]
+
+
+def st_drivers(spark: SparkSession) -> DataFrame:
+    """Supported format drivers (analog of ST_Drivers, st_drivers.cpp)."""
+    return local_relation(spark, driver_rows(), DRIVERS_DDL)
 
 
 GEOJSON_SCHEMA = T.StructType(
@@ -136,18 +149,123 @@ def _parse_geojson(p: str, data: bytes) -> List[tuple]:
     return rows
 
 
+def geojson_scan(path: str) -> Scan:
+    # the distributed geojson sink emits newline-delimited features as
+    # Spark text part files (part-*.txt): a directory without *.json /
+    # *.geojson files reads those, so a sink directory roundtrips
+    return Scan(GEOJSON_SCHEMA, _parse_geojson, path=path,
+                globs=("*.{json,geojson}", "part-*"), recursive=True)
+
+
 def read_geojson(spark: SparkSession, path: str) -> DataFrame:
     """Distributed GeoJSON reader: each task parses its files
     (FeatureCollection | single Feature | bare geometry | newline-delimited
     features). A directory is scanned recursively for ``*.json`` /
     ``*.geojson``, else for the ``part-*`` files of the geojson sink."""
-    files = binary_files(spark, path, "*.{json,geojson}", recursive=True)
-    if not files.inputFiles():
-        # the distributed geojson sink emits newline-delimited features as
-        # Spark text part files (part-*.txt) — pick those up so a sink
-        # directory roundtrips through the reader
-        files = binary_files(spark, path, "part-*")
-    return scan_files(files, _parse_geojson, GEOJSON_SCHEMA)
+    return run(spark, geojson_scan(path))
+
+
+def osm_scan(path: str) -> Scan:
+    """Bind: the file's blob directory — 4-byte lengths + BlobHeaders only,
+    no decompression. Scan: one range per OSMData blob, zlib + hand-rolled
+    protobuf wire decode (the parallel block scan of st_read_osm.cpp:169;
+    decoder in ..geom.pbf)."""
+    from ..geom import pbf as PBF
+
+    blobs = [(path, off, size) for btype, off, size in PBF.scan_blobs(path)
+             if btype == "OSMData"]
+    return Scan(OSM_SCHEMA, PBF.read_blob_rows, ranges=blobs,
+                ddl="path string, offset long, size long")
+
+
+def st_read_osm(spark: SparkSession, path: str) -> DataFrame:
+    """OSM PBF reader — fixed 8-column schema (st_read_osm.cpp:39-90), one
+    task per OSMData blob."""
+    return run(spark, osm_scan(path))
+
+
+_LAYERED = ("layer", "columns", "bbox", "geom_col")
+_PUSHED = ("columns", "bbox", "geom_col")
+
+#: The native readers, one per format: (extensions, DataFrame reader,
+#: session-free Scan plan, the st_read options the reader applies itself).
+#: st_read runs the reader and applies the other options after it; the SQL
+#: ST_Read runs the plan in process with ``layer`` only. A .sqlite / .db
+#: file is sniffed as SpatiaLite or GeoPackage.
+_NATIVE = {
+    "osm": ((".osm.pbf",), st_read_osm, osm_scan, ()),
+    "gdb": ((".gdb",), gdb.st_read_gdb, gdb.gdb_scan, _LAYERED),
+    "geojson": ((".geojson", ".geojson.gz", ".json.gz", ".geojsonl",
+                 ".geojsons"), read_geojson, geojson_scan, ()),
+    "shp": ((".shp",), shapefile.st_read_shp, shapefile.shp_scan,
+            ("geom_col",)),
+    "gpkg": ((".gpkg",), gpkg.st_read_gpkg, gpkg.gpkg_scan, _LAYERED),
+    "spatialite": ((), spatialite.st_read_spatialite,
+                   spatialite.spatialite_scan, _LAYERED),
+    "kml": ((".kml",), kml.st_read_kml, kml.kml_scan, ("geom_col",)),
+    "gml": ((".gml",), gml.st_read_gml, gml.gml_scan, ("geom_col",)),
+    "topojson": ((".topojson",), topojson.st_read_topojson,
+                 topojson.topojson_scan, ("layer", "geom_col")),
+    "dxf": ((".dxf",), dxf.st_read_dxf, dxf.dxf_scan, ("geom_col",)),
+    "mvt": ((".mvt", ".vector.pbf"), mvt.st_read_mvt, mvt.mvt_scan,
+            ("layer", "geom_col")),
+    "gpx": ((".gpx",), gpx.st_read_gpx, gpx.gpx_scan, ("layer", "geom_col")),
+    "mif": ((".mif",), mif.st_read_mif, mif.mif_scan, ("geom_col",)),
+    "tab": ((".tab",), tab.st_read_tab, tab.tab_scan, _PUSHED),
+    "fgb": ((".fgb",), fgb.st_read_fgb, fgb.fgb_scan, _PUSHED),
+}
+
+
+def _native_reader(path: str, wkt_col: Optional[str] = None):
+    """``(read, plan, options)`` of the native reader for ``path``, or
+    None. A ``.json`` file is GeoJSON when its head says so and no
+    ``wkt_col`` asks for JSON lines."""
+    low = path.lower().rstrip("/")
+    if low.endswith((".sqlite", ".db")):
+        fmt = "spatialite" if spatialite.is_spatialite(path) else "gpkg"
+    elif low.endswith(".json") and wkt_col is None and _looks_geojson(path):
+        fmt = "geojson"
+    else:
+        fmt = next((f for f, r in _NATIVE.items() if low.endswith(r[0])),
+                   None)
+    return None if fmt is None else _NATIVE[fmt][1:]
+
+
+def _unzip(path: str) -> str:
+    """``path``, or for a zip container (the reference's /vsizip/ paths,
+    st_read.cpp: 'x.zip', 'x.zip/inner.shp', or 'x.kmz', zipped KML) the
+    inner file, extracted to a temp dir. (On a multi-node cluster the
+    extraction directory must be on a shared filesystem.)"""
+    low = path.lower()
+    if not (low.endswith((".zip", ".kmz")) or ".zip/" in low):
+        return path
+    import tempfile
+    import zipfile
+
+    if ".zip/" in low:
+        idx = low.index(".zip/") + 4
+        zpath, inner = path[:idx], path[idx + 1:]
+    else:
+        zpath, inner = path, None
+    tmpd = tempfile.mkdtemp(prefix="dss_zip_")
+    with zipfile.ZipFile(zpath) as zf:
+        zf.extractall(tmpd)
+        names = zf.namelist()
+    if inner is None:
+        if low.endswith(".kmz"):
+            cand = [n for n in names if n.lower().endswith(".kml")]
+        else:
+            cand = [n for n in names
+                    if n.lower().endswith((".shp", ".gpkg", ".kml", ".fgb",
+                                           ".geojson", ".json", ".csv",
+                                           ".parquet"))]
+        if len(cand) != 1:
+            raise ValueError(
+                f"{path}: specify the inner file ('{path}/<name>'); "
+                f"candidates: {cand}"
+            )
+        inner = cand[0]
+    return os.path.join(tmpd, inner)
 
 
 def st_read(
@@ -225,63 +343,30 @@ def _st_read_dispatch(
 
         return df.filter(S.st_intersects(_F.col(geom_col),
                                          _F.lit(bytes(spatial_filter))))
+    inner = _unzip(path)
+    if inner != path:
+        return st_read(spark, inner, layer=layer, columns=columns, bbox=bbox,
+                       geom_col=geom_col, wkt_col=wkt_col, keep_wkb=keep_wkb)
     low = path.lower()
-    # zip containers (the reference's /vsizip/ paths, st_read.cpp): extract
-    # driver-side to a temp dir and recurse. 'x.zip' or 'x.zip/inner.shp';
-    # .kmz is zipped KML. (Local-mode path — on a multi-node cluster the
-    # extraction directory must be on a shared filesystem.)
-    if low.endswith((".zip", ".kmz")) or ".zip/" in low:
-        import tempfile
-        import zipfile
-
-        if ".zip/" in low:
-            idx = low.index(".zip/") + 4
-            zpath, inner = path[:idx], path[idx + 1:]
-        else:
-            zpath, inner = path, None
-        tmpd = tempfile.mkdtemp(prefix="dss_zip_")
-        with zipfile.ZipFile(zpath) as zf:
-            zf.extractall(tmpd)
-            names = zf.namelist()
-        if inner is None:
-            if low.endswith(".kmz"):
-                cand = [n for n in names if n.lower().endswith(".kml")]
-            else:
-                cand = [n for n in names
-                        if n.lower().endswith((".shp", ".gpkg", ".kml", ".fgb",
-                                               ".geojson", ".json", ".csv",
-                                               ".parquet"))]
-            if len(cand) != 1:
-                raise ValueError(
-                    f"{path}: specify the inner file ('{path}/<name>'); "
-                    f"candidates: {cand}"
-                )
-            inner = cand[0]
-        return st_read(spark, os.path.join(tmpd, inner), layer=layer,
-                       columns=columns, bbox=bbox, geom_col=geom_col,
-                       wkt_col=wkt_col, keep_wkb=keep_wkb)
-    if low.endswith(".osm.pbf"):
-        return st_read_osm(spark, path)
-    if low.rstrip("/").endswith(".gdb"):
-        # OpenFileGDB directory — must dispatch before the parquet isdir
-        # branch; native .gdbtable codec (geom/gdbtable.py)
-        from .gdb import st_read_gdb
-
-        return st_read_gdb(spark, path.rstrip("/"), layer=layer,
-                           columns=columns, bbox=bbox, geom_col=geom_col)
-    if low.endswith((".geojson", ".geojson.gz", ".json.gz",
-                     ".geojsonl", ".geojsons")) or (
-            low.endswith(".json") and wkt_col is None and _looks_geojson(path)):
-        df = read_geojson(spark, path)
+    reader = _native_reader(path, wkt_col)
+    if reader is not None:
+        read_fn, _plan, takes = reader
+        opts = {"layer": layer, "columns": columns, "bbox": bbox,
+                "geom_col": geom_col}
+        df = read_fn(spark, path, **{k: v for k, v in opts.items()
+                                     if k in takes and v is not None})
+        # pushed into the reader's scan
+        columns = None if "columns" in takes else columns
+        bbox = None if "bbox" in takes else bbox
     elif low.endswith((".parquet", ".pq")) or (
             # extension-less directory → parquet dataset; a directory whose
-            # NAME carries a format extension (x.csv/x.arrow/x.geojson part
+            # NAME carries a format extension (x.csv/x.arrow part
             # directories from the distributed sinks) must fall through to
             # that format's reader, not be force-read as parquet
             os.path.isdir(path)
             and not low.rstrip("/").endswith((
                 ".csv", ".json", ".ndjson", ".jsonl", ".orc", ".arrow",
-                ".feather", ".ipc", ".geojson", ".geojsonl", ".geojsons"))):
+                ".feather", ".ipc"))):
         from .geoparquet import geoparquet_meta
 
         df = spark.read.parquet(path)
@@ -316,92 +401,28 @@ def _st_read_dispatch(
         df = spark.read.json(path)
     elif low.endswith(".orc"):
         df = spark.read.orc(path)
-    elif low.endswith(".shp"):
-        # native shapefile path (read_shapefile.cpp analog) — no GDAL needed
-        from .shapefile import st_read_shp
-
-        df = st_read_shp(spark, path, geom_col=geom_col)
-    elif low.endswith(".gpkg"):
-        # native GeoPackage path (stdlib sqlite3) — pushdown happens inside
-        from .gpkg import st_read_gpkg
-
-        return st_read_gpkg(spark, path, layer=layer, columns=columns,
-                            bbox=bbox, geom_col=geom_col)
-    elif low.endswith(".kml"):
-        from .kml import st_read_kml
-
-        df = st_read_kml(spark, path, geom_col=geom_col)
-    elif low.endswith(".gml"):
-        from .gml import st_read_gml
-
-        df = st_read_gml(spark, path, geom_col=geom_col)
-    elif low.endswith((".sqlite", ".db")):
-        # sniff the sqlite container flavor: GeoPackage vs SpatiaLite
-        from .gpkg import st_read_gpkg
-        from .spatialite import is_spatialite, st_read_spatialite
-
-        if is_spatialite(path):
-            return st_read_spatialite(spark, path, layer=layer,
-                                      columns=columns, bbox=bbox,
-                                      geom_col=geom_col)
-        return st_read_gpkg(spark, path, layer=layer, columns=columns,
-                            bbox=bbox, geom_col=geom_col)
     elif low.endswith((".arrow", ".feather", ".ipc")):
         from .arrow import st_read_arrow
 
         df = st_read_arrow(spark, path, columns=columns)
         columns = None  # pushdown already applied inside the scan
-    elif low.endswith(".topojson"):
-        from .topojson import st_read_topojson
-
-        df = st_read_topojson(spark, path, layer=layer, geom_col=geom_col)
-    elif low.endswith(".dxf"):
-        from .dxf import st_read_dxf
-
-        df = st_read_dxf(spark, path, geom_col=geom_col)
-    elif low.endswith((".mvt", ".vector.pbf")):
-        from .mvt import st_read_mvt
-
-        df = st_read_mvt(spark, path, layer=layer, geom_col=geom_col)
-    elif low.endswith(".gpx"):
-        from .gpx import st_read_gpx
-
-        df = st_read_gpx(spark, path, layer=layer or "waypoints",
-                         geom_col=geom_col)
-    elif low.endswith(".mif"):
-        from .mif import st_read_mif
-
-        df = st_read_mif(spark, path, geom_col=geom_col)
-    elif low.endswith(".tab"):
-        # native MapInfo TAB binary container (geom/tabmap.py)
-        from .tab import st_read_tab
-
-        return st_read_tab(spark, path, columns=columns, bbox=bbox,
-                           geom_col=geom_col)
     elif low.endswith((".xlsx",)):
         from .xlsx import st_read_xlsx
 
         df = st_read_xlsx(spark, path, sheet=layer, wkt_col=wkt_col,
                           geom_col=geom_col)
         wkt_col = None  # already applied
-    elif low.endswith(".fgb"):
-        from .fgb import st_read_fgb
-
-        return st_read_fgb(spark, path, columns=columns, bbox=bbox,
-                           geom_col=geom_col)
-    else:
+    elif not _has_ogr():
         # GDAL long tail (S-57, DGN, TIGER, GMT, …): every extension
         # without a native driver falls through to the optional pyogrio
         # gate — the analog of the reference linking GDAL for formats it
         # has no specialized path for (docs/internals.md:25-78).
-        try:
-            import pyogrio  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                f"no native driver for {os.path.splitext(path)[1] or path!r} "
-                "and pyogrio (the optional GDAL long-tail gate) is not "
-                "installed; see st_drivers() for the 23 native formats"
-            ) from e
+        raise NotImplementedError(
+            f"no native driver for {os.path.splitext(path)[1] or path!r} "
+            "and pyogrio (the optional GDAL long-tail gate) is not "
+            "installed; see st_drivers() for the 23 native formats"
+        )
+    else:
         return _st_read_ogr(spark, path, layer, columns, bbox, geom_col)
 
     if wkt_col is not None:
@@ -557,24 +578,6 @@ def st_read_meta(spark: SparkSession, path: str) -> DataFrame:
     return local_relation(
         spark, rows, "path string, driver string, num_rows long, "
         "num_row_groups long, schema_json string")
-
-
-def st_read_osm(spark: SparkSession, path: str) -> DataFrame:
-    """OSM PBF reader — fixed 8-column schema (st_read_osm.cpp:39-90).
-
-    Bind (driver): scan the file's blob directory — 4-byte lengths +
-    BlobHeaders only, no decompression. Scan (executors): one task per
-    OSMData blob, zlib + hand-rolled protobuf wire decode (the parallel
-    block scan of st_read_osm.cpp:169; decoder in ..geom.pbf)."""
-    from ..geom import pbf as PBF
-
-    blobs = [
-        (path, off, size)
-        for btype, off, size in PBF.scan_blobs(path)
-        if btype == "OSMData"
-    ]
-    return scan_ranges(spark, blobs, "path string, offset long, size long",
-                       PBF.read_blob_rows, OSM_SCHEMA)
 
 
 def read(spark: SparkSession, path: str, **opts) -> DataFrame:
@@ -824,191 +827,35 @@ _ARROW_TO_SPARK = {
 }
 
 
-def local_read_rows(path: str, layer: Optional[str] = None,
-                    geom_col: str = "geom"):
-    """Session-free single-process decode: ``(StructType, row-iterator)``.
+def local_read_rows(path: str, layer: Optional[str] = None):
+    """Session-free read of ``path`` in this process: ``(StructType,
+    row iterator)``, the schema eager and the rows lazy.
 
-    Backs the SQL UDTF surface (``SELECT * FROM ST_Read('x.gpkg')``,
+    Backs the SQL table functions (``SELECT * FROM ST_Read('x.gpkg')``,
     st_read.cpp:538-545's replacement scan made SQL-callable): the UDTF's
     ``analyze`` needs a schema and its ``eval`` runs on an executor with no
-    SparkSession, so both sides call this. The schema is computed eagerly,
-    the row iterator lazily. The DataFrame API (``st_read``) remains the
-    distributed scale path; this is the single-task convenience form.
+    SparkSession. A native reader runs the same Scan that ``st_read`` runs,
+    one unit after another; Parquet reads through pyarrow.
     """
-    low = path.lower()
-    if low.endswith(".kmz"):
-        import io
-        import zipfile
+    path = _unzip(path)
+    reader = _native_reader(path)
+    if reader is not None:
+        _read, plan, takes = reader
+        scan = plan(path, **({"layer": layer} if layer is not None
+                             and "layer" in takes else {}))
+        return scan.schema, rows(scan)
+    if path.lower().endswith((".parquet", ".pq")):
+        import pyarrow.dataset as pads
 
-        with zipfile.ZipFile(path) as zf:
-            inner = [n for n in zf.namelist() if n.lower().endswith(".kml")]
-            if not inner:
-                raise ValueError(f"{path}: no .kml inside")
-            data = zf.read(inner[0])
-        from .kml import KML_SCHEMA, parse_kml_bytes
-
-        return KML_SCHEMA, iter(parse_kml_bytes(data, path))
-    if low.endswith(".kml"):
-        from .kml import KML_SCHEMA, parse_kml_bytes
-
-        with open(path, "rb") as fh:
-            rows = parse_kml_bytes(fh.read(), path)
-        return KML_SCHEMA, iter(rows)
-    if low.endswith(".gml"):
-        from .gml import parse_gml_bytes
-
-        with open(path, "rb") as fh:
-            feats, props = parse_gml_bytes(fh.read(), path)
-        fields = [T.StructField("source_file", T.StringType())]
-        fields += [T.StructField(p, T.StringType()) for p in props]
-        fields.append(T.StructField(geom_col, T.BinaryType()))
-        rows = (tuple([f["__source"]] + [f.get(c) for c in props] + [f["geom"]])
-                for f in feats)
-        return T.StructType(fields), rows
-    if low.endswith(".shp"):
-        from . import shapefile as SHPMOD
-        from ..geom import shp as SHP
-
-        schema = SHPMOD.shp_schema(path, geom_col)
-        with open(path, "rb") as fh:
-            geoms = SHP.parse_shp(fh.read())
-        dbf = os.path.splitext(path)[0] + ".dbf"
-        if os.path.exists(dbf):
-            with open(dbf, "rb") as fh:
-                _, recs = SHP.parse_dbf(fh.read())
-        else:
-            recs = [() for _ in geoms]
-        n = min(len(geoms), len(recs)) if recs else len(geoms)
-        nattr = len(schema.fields) - 1
-
-        def _shp_rows():
-            for i in range(n):
-                attrs = tuple(recs[i][j] if j < len(recs[i]) else None
-                              for j in range(nattr))
-                g = geoms[i]
-                yield attrs + (None if g is None else to_wkb(g),)
-
-        return schema, _shp_rows()
-    if low.endswith(".gpkg"):
-        import sqlite3
-
-        from .gpkg import (_spark_type, gpkg_blob_to_wkb, gpkg_layers)
-
-        layers = gpkg_layers(path)
-        if not layers:
-            raise ValueError(f"{path}: no feature layers")
-        meta = layers[0] if layer is None else next(
-            (m for m in layers if m["layer"] == layer), None)
-        if meta is None:
-            raise ValueError(f"{path}: no layer {layer!r}")
-        lname, gcol = meta["layer"], meta["geom_column"]
-        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        info = con.execute(f'PRAGMA table_info("{lname}")').fetchall()
-        attr_cols = [r[1] for r in info if r[1] != gcol]
-        fields = [T.StructField(r[1], _spark_type(r[2]))
-                  for r in info if r[1] != gcol]
-        fields.append(T.StructField(geom_col, T.BinaryType()))
-        sel = ", ".join(f'"{c}"' for c in attr_cols + [gcol])
-
-        def _gpkg_rows():
-            try:
-                for row in con.execute(f'SELECT {sel} FROM "{lname}"'):
-                    yield row[:-1] + (gpkg_blob_to_wkb(row[-1]),)
-            finally:
-                con.close()
-
-        return T.StructType(fields), _gpkg_rows()
-    if low.endswith(".fgb"):
-        from ..geom import fgb as FGB
-        from .fgb import _CT_TO_SPARK, _read_header
-
-        hdr, idx, data_start = _read_header(path)
-        cols = hdr["columns"]
-        fields = [T.StructField(c["name"],
-                                _CT_TO_SPARK.get(c["type"], T.StringType()))
-                  for c in cols]
-        fields.append(T.StructField(geom_col, T.BinaryType()))
-        names = [c["name"] for c in cols]
-
-        def _fgb_rows():
-            for geom, props in FGB.scan_features(
-                    path, data_start, None, cols, hdr["geometry_type"]):
-                yield (tuple(props.get(c) for c in names)
-                       + (None if geom is None else to_wkb(geom),))
-
-        return T.StructType(fields), _fgb_rows()
-    if low.rstrip("/").endswith(".gdb"):
-        from .gdb import local_gdb_rows
-
-        return local_gdb_rows(path.rstrip("/"), layer, geom_col)
-    if low.endswith(".mif"):
-        from .mif import read_mif_pair
-
-        schema, rows = read_mif_pair(path)
-        return schema, iter(rows)
-    if low.endswith(".osm.pbf"):
-        from ..geom import pbf as PBF
-
-        # read_blob_rows yields dicts keyed by OSM_SCHEMA names
-        def _osm_rows():
-            for btype, off, size in PBF.scan_blobs(path):
-                if btype != "OSMData":
-                    continue
-                for r in PBF.read_blob_rows(path, off, size):
-                    if isinstance(r, dict):
-                        yield tuple(r.get(f.name) for f in OSM_SCHEMA.fields)
-                    else:
-                        yield tuple(r)
-
-        return OSM_SCHEMA, _osm_rows()
-    if low.endswith((".geojson",)) or (low.endswith(".json")
-                                       and _looks_geojson(path)):
-        with open(path) as fh:
-            txt = fh.read().strip()
-        try:
-            obj = json.loads(txt)
-            t = obj.get("type")
-            if t == "FeatureCollection":
-                feats = obj.get("features", [])
-            elif t == "Feature":
-                feats = [obj]
-            else:
-                feats = [{"type": "Feature", "geometry": obj, "properties": {}}]
-        except json.JSONDecodeError:
-            feats = [json.loads(ln) for ln in txt.splitlines() if ln.strip()]
-
-        def _gj_rows():
-            for ft in feats:
-                g = ft.get("geometry")
-                props = ft.get("properties") or {}
-                yield (
-                    to_wkb(geojson_to_geometry(g)) if g else None,
-                    {str(k): (json.dumps(v) if isinstance(v, (dict, list))
-                              else str(v)) for k, v in props.items()},
-                    path,
-                )
-
-        return GEOJSON_SCHEMA, _gj_rows()
-    if low.endswith((".parquet", ".pq")):
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(path)
-        a_schema = pf.schema_arrow
+        data = pads.dataset(path, format="parquet")
         fields = [
             T.StructField(f.name,
                           _ARROW_TO_SPARK.get(str(f.type), T.StringType()))
-            for f in a_schema
+            for f in data.schema
         ]
-
-        def _pq_rows():
-            for batch in pf.iter_batches():
-                for rec in batch.to_pylist():
-                    yield tuple(
-                        v if not isinstance(v, float) or v == v else v
-                        for v in (rec.get(f.name) for f in a_schema)
-                    )
-
-        return T.StructType(fields), _pq_rows()
+        return T.StructType(fields), (
+            tuple(rec.values()) for batch in data.to_batches()
+            for rec in batch.to_pylist())
     raise NotImplementedError(
-        f"local_read_rows: unsupported extension for {path!r}"
-    )
+        f"SQL ST_Read reads the native formats and Parquet; read {path!r} "
+        "with st_read(spark, path)")

@@ -21,7 +21,7 @@ from pyspark.sql import types as T
 
 from ..geom import shp as SHP
 from ..geom.wkb import to_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _DBF_SPARK_TYPES = {
     "C": T.StringType(),
@@ -51,14 +51,8 @@ def shp_schema(path: str, geom_col: str = "geom") -> T.StructType:
     return T.StructType(fields)
 
 
-def st_read_shp(
-    spark: SparkSession,
-    path: str,
-    geom_col: str = "geom",
-    encoding: str = "utf-8",
-) -> DataFrame:
-    """Read .shp (+sidecar .dbf) into a DataFrame: DBF attributes + WKB
-    geometry column appended last."""
+def shp_scan(path: str, geom_col: str = "geom",
+             encoding: str = "utf-8") -> Scan:
     files = sorted(_glob.glob(path)) if any(c in path for c in "*?[") else [path]
     if not files:
         raise FileNotFoundError(path)
@@ -86,8 +80,18 @@ def st_read_shp(
                        + (None if g is None else to_wkb(g),))
         return out
 
-    return scan_ranges(spark, [(f,) for f in files], "path string", parse,
-                       schema)
+    return Scan(schema, parse, ranges=[(f,) for f in files], ddl="path string")
+
+
+def st_read_shp(
+    spark: SparkSession,
+    path: str,
+    geom_col: str = "geom",
+    encoding: str = "utf-8",
+) -> DataFrame:
+    """Read .shp (+sidecar .dbf) into a DataFrame: DBF attributes + WKB
+    geometry column appended last."""
+    return run(spark, shp_scan(path, geom_col, encoding))
 
 
 def st_write_shp(df: DataFrame, path: str, geom_col: str = "geom",

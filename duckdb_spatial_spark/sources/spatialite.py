@@ -31,7 +31,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geom.wkb import from_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
+from .gpkg import _connect_ro, _spark_type
 
 _MARK_START, _MARK_MBR, _MARK_ENTITY, _MARK_END = 0x00, 0x7C, 0x69, 0xFE
 
@@ -153,10 +154,6 @@ def wkb_to_spatialite_blob(wkb: Optional[bytes], srid: int = 4326
 
 # ------------------------------------------------------------------- scan
 
-def _connect_ro(path: str) -> sqlite3.Connection:
-    return sqlite3.connect(f"file:{path}?mode=ro&immutable=1", uri=True)
-
-
 def is_spatialite(path: str) -> bool:
     try:
         with _connect_ro(path) as con:
@@ -188,33 +185,14 @@ def spatialite_layers(path: str) -> List[dict]:
         return out
 
 
-_AFFINITY = (
-    ("INT", T.LongType()), ("CHAR", T.StringType()), ("CLOB", T.StringType()),
-    ("TEXT", T.StringType()), ("BLOB", T.BinaryType()),
-    ("REAL", T.DoubleType()), ("FLOA", T.DoubleType()),
-    ("DOUB", T.DoubleType()),
-)
-
-
-def _spark_type(decl: str) -> T.DataType:
-    d = (decl or "").upper()
-    for pat, t in _AFFINITY:
-        if pat in d:
-            return t
-    return T.StringType()
-
-
-def st_read_spatialite(
-    spark: SparkSession,
+def spatialite_scan(
     path: str,
     layer: Optional[str] = None,
     columns: Optional[List[str]] = None,
     bbox: Optional[Tuple[float, float, float, float]] = None,
     geom_col: str = "geom",
     num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Distributed SpatiaLite read: rowid-range parallel scan, R*Tree
-    (idx_<table>_<geom>) bbox prefilter, blob→WKB conversion per batch."""
+) -> Scan:
     layers = spatialite_layers(path)
     if not layers:
         raise ValueError(f"{path}: no layers in geometry_columns")
@@ -287,8 +265,23 @@ def st_read_spatialite(
             out.append(tuple(attrs) + (wkb,))
         return out
 
-    return scan_ranges(spark, ranges, "path string, lo long, hi long", parse,
-                       schema)
+    return Scan(schema, parse, ranges=ranges,
+                ddl="path string, lo long, hi long")
+
+
+def st_read_spatialite(
+    spark: SparkSession,
+    path: str,
+    layer: Optional[str] = None,
+    columns: Optional[List[str]] = None,
+    bbox: Optional[Tuple[float, float, float, float]] = None,
+    geom_col: str = "geom",
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """Distributed SpatiaLite read: rowid-range parallel scan, R*Tree
+    (idx_<table>_<geom>) bbox prefilter, blob→WKB conversion per batch."""
+    return run(spark, spatialite_scan(path, layer, columns, bbox, geom_col,
+                                      num_partitions))
 
 
 # ------------------------------------------------------------------- sink

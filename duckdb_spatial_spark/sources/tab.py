@@ -31,7 +31,7 @@ from pyspark.sql import types as T
 from ..geom import shp as SHP
 from ..geom import tabmap as TM
 from ..geom.wkb import from_wkb, to_wkb
-from .filescan import scan_ranges
+from .filescan import Scan, run
 
 _DBF_SPARK = {"C": T.StringType(), "N": T.LongType(), "F": T.DoubleType(),
               "L": T.BooleanType(), "D": T.StringType()}
@@ -73,15 +73,13 @@ def _read_dat_range(dat_path: str, hdr: bytes, rec_size: int,
     return rows
 
 
-def st_read_tab(
-    spark: SparkSession,
+def tab_scan(
     path: str,
     columns: Optional[List[str]] = None,
     bbox: Optional[tuple] = None,
     geom_col: str = "geom",
     num_partitions: Optional[int] = None,
-) -> DataFrame:
-    """Distributed MapInfo TAB read → attribute columns + WKB geometry."""
+) -> Scan:
     base = os.path.splitext(path)[0]
     fields, nrec, hdr_size, rec_size, hdr = _dat_header(base + ".dat")
     schema = tab_schema(path, geom_col)
@@ -114,8 +112,20 @@ def st_read_tab(
             out.append(tuple(vals[i] for i in keep_idx))
         return out
 
-    return scan_ranges(spark, ranges, "base string, lo long, hi long", parse,
-                       schema)
+    return Scan(schema, parse, ranges=ranges,
+                ddl="base string, lo long, hi long")
+
+
+def st_read_tab(
+    spark: SparkSession,
+    path: str,
+    columns: Optional[List[str]] = None,
+    bbox: Optional[tuple] = None,
+    geom_col: str = "geom",
+    num_partitions: Optional[int] = None,
+) -> DataFrame:
+    """Distributed MapInfo TAB read → attribute columns + WKB geometry."""
+    return run(spark, tab_scan(path, columns, bbox, geom_col, num_partitions))
 
 
 _MAX_SINGLE_WRITER = 1 << 30

@@ -22,7 +22,7 @@ from ..geom.core import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
                          MULTIPOINT, MULTIPOLYGON, POINT, POLYGON, Geometry,
                          collect)
 from ..geom.wkb import to_wkb
-from .filescan import binary_files, scan_files
+from .filescan import Scan, run
 
 TOPOJSON_SCHEMA = T.StructType([
     T.StructField("source_file", T.StringType()),
@@ -142,13 +142,17 @@ def topojson_layers(path: str) -> List[str]:
     return sorted((topo.get("objects") or {}).keys())
 
 
+def topojson_scan(path: str, layer: Optional[str] = None) -> Scan:
+    return Scan(
+        TOPOJSON_SCHEMA,
+        lambda p, data: parse_topojson_text(data.decode("utf-8"), p, layer),
+        path=path, globs=("*.{topojson,json}",))
+
+
 def st_read_topojson(
     spark: SparkSession,
     path: str,
     layer: Optional[str] = None,
     geom_col: str = "geom",
 ) -> DataFrame:
-    return scan_files(
-        binary_files(spark, path, "*.{topojson,json}"),
-        lambda p, data: parse_topojson_text(data.decode("utf-8"), p, layer),
-        TOPOJSON_SCHEMA, geom_col)
+    return run(spark, topojson_scan(path, layer), geom_col)

@@ -422,3 +422,38 @@ def test_centroid_agg_matches_collect_centroid(spark):
         b[r["g"]] = (round(float(g2.coords[0]), 9),
                      round(float(g2.coords[1]), 9))
     assert a == b
+
+
+def test_sql_drivers_equal_st_drivers(spark):
+    from duckdb_spatial_spark.sources import st_drivers
+
+    register_sql_functions(spark)
+    assert (spark.sql("SELECT * FROM ST_Drivers()").collect()
+            == st_drivers(spark).collect())
+
+
+_TWIN_POLYS = ("POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))",
+               "POLYGON ((10 10, 10 12, 13 12, 10 10))")
+
+
+@pytest.mark.parametrize("sql,api", [
+    ("SELECT ST_AsText(ST_Collect_Agg(g)) AS v FROM twins",
+     lambda t: t.agg(ST.st_astext(ST.st_collect_agg("g")).alias("v"))),
+    ("SELECT ST_Perimeter_Spheroid(g) AS v FROM twins",
+     lambda t: t.select(ST.st_perimeter_spheroid("g").alias("v"))),
+    # SQL decimal literals reach the UDF as Decimal values
+    ("SELECT ST_AsText(ST_MakeEnvelope(0.5, 1.25, 2, 3.75)) AS v",
+     lambda t: t.limit(1).select(ST.st_astext(
+         ST.st_makeenvelope(0.5, 1.25, 2, 3.75)).alias("v"))),
+], ids=["collect_agg", "perimeter_spheroid", "makeenvelope"])
+def test_sql_twin_udfs_match_api(spark, sql, api):
+    register_sql_functions(spark)
+    twins = spark.createDataFrame([(w,) for w in _TWIN_POLYS], "w string") \
+        .select(ST.st_geomfromtext("w").alias("g"))
+    twins.createOrReplaceTempView("twins")
+    try:
+        got = sorted(r["v"] for r in spark.sql(sql).collect())
+        assert got == sorted(r["v"] for r in api(twins).collect())
+        assert got and None not in got
+    finally:
+        spark.catalog.dropTempView("twins")

@@ -15,8 +15,8 @@ from duckdb_spatial_spark.geom import gdbtable as GT
 from duckdb_spatial_spark.geom.wkb import from_wkb, to_wkb
 from duckdb_spatial_spark.geom.wkt import from_wkt, to_wkt
 from duckdb_spatial_spark.sources import read, st_write
-from duckdb_spatial_spark.sources.gdb import (gdb_layers, local_gdb_rows,
-                                              st_read_gdb, st_write_gdb)
+from duckdb_spatial_spark.sources.gdb import (gdb_layers, st_read_gdb,
+                                              st_write_gdb)
 
 
 # ----------------------------------------------------------- codec units
@@ -148,16 +148,16 @@ def test_layers_and_catalog(spark, tmp_path):
 
 
 def test_distributed_read_matches_local_oracle(spark, tmp_path):
-    """Row count + per-row geometry hash of the distributed mapInPandas
-    scan equal the session-free local decode (the driver-style oracle)."""
+    """Row count + per-row geometry hash of the 7-range distributed scan
+    equal a one-range read of the whole table (the oracle)."""
     import hashlib
 
     gdb = tmp_path / "zones.gdb"
     _write_fixture_gdb(spark, gdb, n=500)
     df = st_read_gdb(spark, str(gdb), num_partitions=7)
     rows = df.orderBy("OBJECTID").collect()
-    schema, local = local_gdb_rows(str(gdb))
-    lrows = list(local)
+    one = st_read_gdb(spark, str(gdb), num_partitions=1)
+    schema, lrows = one.schema, one.orderBy("OBJECTID").collect()
     assert len(rows) == len(lrows) == 500
     assert [f.name for f in df.schema.fields] == [f.name for f in schema.fields]
 
@@ -169,7 +169,7 @@ def test_distributed_read_matches_local_oracle(spark, tmp_path):
 
     assert h(rows, lambda r: (r["OBJECTID"], r["i"], r["name"],
                               round(r["score"], 9), bytes(r["geom"]))) == \
-        h(lrows, lambda r: (r[0], int(r[1]), r[2], round(r[3], 9), r[4]))
+        h(lrows, lambda r: (r[0], int(r[1]), r[2], round(r[3], 9), bytes(r[4])))
 
 
 def test_read_options_columns_bbox(spark, tmp_path):

@@ -123,3 +123,25 @@ def test_spatialite_read_meta(spark, sl_db):
     r = st_read_meta(spark, sl_db).collect()[0]
     assert r["driver"] == "spatialite" and r["num_row_groups"] == 1
     assert "pts" in r["schema_json"]
+
+
+def test_boolean_column_reads_as_bigint(spark, tmp_path):
+    """SQLite stores BOOLEAN as an integer: the column is typed bigint, as
+    the GeoPackage reader types it, and the rows collect."""
+    p = str(tmp_path / "flags.sqlite")
+    con = sqlite3.connect(p)
+    con.execute("CREATE TABLE geometry_columns (f_table_name TEXT, "
+                "f_geometry_column TEXT, geometry_type INTEGER, "
+                "coord_dimension INTEGER, srid INTEGER)")
+    con.execute("INSERT INTO geometry_columns VALUES "
+                "('flags', 'geom', 1, 2, 4326)")
+    con.execute("CREATE TABLE flags (id INTEGER, ok BOOLEAN, geom BLOB)")
+    for i in range(3):
+        blob = wkb_to_spatialite_blob(to_wkb(from_wkt(f"POINT ({i} 0)")))
+        con.execute("INSERT INTO flags VALUES (?, ?, ?)", (i, i % 2 == 0, blob))
+    con.commit()
+    con.close()
+    df = st_read_spatialite(spark, p)
+    assert dict(df.dtypes)["ok"] == "bigint"
+    assert sorted((r["id"], r["ok"]) for r in df.collect()) == [
+        (0, 1), (1, 0), (2, 1)]
