@@ -14,7 +14,6 @@ hashing).
 
 from __future__ import annotations
 
-import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,11 +23,9 @@ import duckdb_spatial_spark.functions as ST
 from duckdb_spatial_spark.operators import (
     ann_bruteforce_topk,
     exact_dedup,
-    minhash_signature,
     minhash_table,
     ngram_jaccard_join,
     simhash,
-    st_join,
     st_join_points,
     textops,
 )
@@ -4546,36 +4543,20 @@ _Q157_ORACLE = """
 
 
 def q158_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
-    """Breadth-first hop distances from a source node over the
-    undirected part-supplier graph (the shortest-path surface DuckDB
-    gets from recursive CTEs and Spark expresses as iterative
-    frontier joins — §2 graph family next to PageRank/components/
-    triangles): 4 unrolled rounds of (dist join edges → min-relax),
-    each ONE equi-join + one min-aggregate with per-round persist for
-    O(1) lineage (the PageRank discipline — without it the union's
-    double reference to dist re-evaluates the whole prefix,
-    2^rounds). Output: node count + id checksum per distance. The
-    oracle unrolls the same 4 relaxations as chained CTEs."""
+    """Breadth-first hop distances from node 0 over the undirected
+    part-supplier graph (the shortest-path surface DuckDB gets from
+    recursive CTEs — §2 graph family next to PageRank/components/
+    triangles): 4 rounds of ``graph.bfs_hops``. Output: node count +
+    id checksum per distance. The oracle unrolls the same 4
+    relaxations as chained CTEs."""
+    from duckdb_spatial_spark.operators.graph import bfs_hops
+
     li = load_table(spark, sf, "lineitem", fan_out=False)
-    e0 = li.select((F.col("l_partkey") % 300).alias("src"),
-                   (F.col("l_suppkey") % 300).alias("dst")).distinct()
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()  # reused by every round — 4 lineitem scans otherwise;
-    # like q115's wf it stays in the CacheManager until an unpersist or
-    # clearCache(): dropping the last reference does not free it
-    dist = spark.range(1).select(
-        F.lit(0).cast("long").alias("node"),
-        F.lit(0).cast("int").alias("d"))
-    for r in range(1, 5):
-        nxt = (dist.join(edges, dist["node"] == edges["src"])
-               .select(F.col("dst").alias("node"),
-                       F.lit(r).cast("int").alias("d")))
-        dist = (dist.unionByName(nxt)
-                .groupBy("node").agg(F.min("d").alias("d"))
-                .persist())
+    edges = li.select((F.col("l_partkey") % 300).alias("src"),
+                      (F.col("l_suppkey") % 300).alias("dst"))
     return (
-        dist.groupBy("d")
+        bfs_hops(edges, 0, 4)
+        .groupBy("d")
         .agg(F.count("*").cast("long").alias("n_nodes"),
              F.sum("node").cast("long").alias("node_sum"))
         .transform(_ssort, "d")

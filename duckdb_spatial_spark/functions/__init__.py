@@ -627,24 +627,23 @@ def register_sql_table_functions(spark: SparkSession) -> None:
     # analyze() derives the output schema from the file (the reference's
     # bind phase, st_read.cpp:105-240 made SQL-callable). eval() runs on an
     # executor with no SparkSession, so both sides plan the native
-    # reader's session-free Scan (sources.read.local_read_rows) and eval()
-    # runs it in one task — st_read() runs the same Scan distributed.
+    # reader's session-free Scan (sources.read.local_read_schema /
+    # local_read_rows) and eval() runs it in one task — st_read() runs the
+    # same Scan distributed.
     from pyspark.sql.udtf import AnalyzeArgument, AnalyzeResult
 
     class _ReadUDTF:
         @staticmethod
         def analyze(path: AnalyzeArgument, layer: AnalyzeArgument = None):
-            from ..sources.read import local_read_rows
+            from ..sources.read import local_read_schema
 
-            schema, _rows = local_read_rows(
-                path.value, None if layer is None else layer.value)
-            return AnalyzeResult(schema=schema)
+            return AnalyzeResult(schema=local_read_schema(
+                path.value, None if layer is None else layer.value))
 
         def eval(self, path, layer=None):
             from ..sources.read import local_read_rows
 
-            _schema, rows = local_read_rows(path, layer)
-            yield from rows
+            yield from local_read_rows(path, layer)
 
     class _ReadOSMUDTF:
         @staticmethod

@@ -10,8 +10,6 @@ matches TRY_CAST semantics)."""
 
 from __future__ import annotations
 
-from typing import Optional
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column

@@ -20,7 +20,7 @@ conventions: ``struct<x,y>`` / ``struct<xmin,ymin,xmax,ymax>`` (SURVEY §1.1).
 from __future__ import annotations
 
 import math
-from typing import Iterable, List, Optional, Union
+from typing import List, Optional, Union
 
 import numpy as np
 import pandas as pd
@@ -33,7 +33,6 @@ from ..geom import kernels as K
 from ..geom import vec as V
 from ..geom.core import Geometry
 from ..geom import wkb as Wkb
-from ..geom import wkt as Wkt
 from ..geom.wkb import from_wkb, to_wkb
 from ..geom.wkt import from_wkt, to_wkt
 

@@ -15,7 +15,7 @@ environment, so kernels (see ``kernels.py``) are NumPy implementations.
 from __future__ import annotations
 
 import math
-from typing import Iterator, List, Optional, Sequence, Tuple, Union
+from typing import Iterator, List, Optional, Sequence, Tuple
 
 import numpy as np
 

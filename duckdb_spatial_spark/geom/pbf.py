@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import struct
 import zlib
-from typing import Dict, Iterator, List, Optional, Tuple
+from typing import Dict, Iterator, List, Tuple
 
 
 # ------------------------------------------------------------ wire reading

@@ -36,8 +36,6 @@ wrote, and readers tolerate their absence.
 
 from __future__ import annotations
 
-import math
-import os
 import struct
 from typing import List, Optional, Tuple
 

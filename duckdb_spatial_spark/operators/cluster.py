@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from typing import Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import scalar as S

@@ -532,7 +532,7 @@ def connected_components(
     nodes: Optional[DataFrame] = None,
     id_col: str = "id",
     max_iter: int = 25,
-    driver_node_limit: int = 2_000_000,
+    driver_node_limit: Optional[int] = None,
 ) -> DataFrame:
     """Candidate pairs → duplicate clusters: (node, comp) where ``comp``
     is the smallest member id of the node's connected component.
@@ -547,9 +547,11 @@ def connected_components(
     2. **Guarded finish on the driver**: the contracted star has one row
        per edge-TOUCHED node — in an LSH pipeline that's ~0.1% of the
        corpus (that is the point of LSH). When it fits under
-       ``driver_node_limit`` rows (~tens of MB), union-find the stars on
-       the driver and broadcast-join the label map back: total cost is
-       one narrow collect + one broadcast join, zero iterative rounds.
+       ``driver_node_limit`` rows (default ``runtime.LOCAL_ROW_LIMIT``,
+       the guard of every in-process tier), read it as Arrow columns,
+       union-find the stars on the driver and broadcast-join the label
+       map back: total cost is one probe job + one broadcast join, zero
+       iterative rounds.
        This is the same small-side pattern as a broadcast hash join, with
        the same explicit size guard.
     3. **Iterative min-label propagation** (the scale path, when the star
@@ -571,34 +573,30 @@ def connected_components(
     star_schema = T.StructType([
         T.StructField("src", node_t), T.StructField("dst", node_t)])
     # Tier 1: per-partition union-find contraction (no shuffle).
-    # Lazy persist, not eager localCheckpoint: the guard count below is
-    # the materializing action (compute + cache in ONE pass/job); the
-    # tier-2 collect then reads the cache. An eager checkpoint spent a
-    # dedicated job materializing and the count scanned it again —
-    # 3 jobs/passes where 2 suffice. Tier 2 unpersists after its
-    # collect; tier 3 unpersists after checkpointing its edge frame.
+    # Lazy persist, not eager localCheckpoint: the guard probe below is
+    # the materializing action (compute + cache in ONE pass/job). An
+    # eager checkpoint spent a dedicated job materializing and the probe
+    # scanned it again. Tier 2 unpersists after its probe; tier 3
+    # unpersists after checkpointing its edge frame.
     from pyspark import StorageLevel
 
     star = raw.mapInPandas(
         lambda it: _local_union_find(it, "src", "dst"), schema=star_schema
     ).persist(StorageLevel.MEMORY_AND_DISK)
     # ONE job decides the tier AND (in the common tier-2 case) returns
-    # the rows: a single-wave limit-collect of at most guard+1 rows
-    # (the q02 probe pattern — CollectLimit's default escalation would
-    # re-run the child per wave, and the old count()+collect() pair was
-    # two driver job barriers). When tier 2 applies the transfer equals
-    # the old collect's (every star row, <= guard); when the star is
-    # over the guard, the worst case is min(partition_rows, guard+1)
-    # rows per task — the documented P x limit bound, and the probe
-    # job doubles as the cache materializer tier 3 reads.
-    from ..runtime import probe_limit_collect
+    # the star as Arrow columns (the old count()+collect() pair was two
+    # driver job barriers). When the star is over the guard, the worst
+    # case is min(partition_rows, guard+1) rows per task — the
+    # documented P x limit bound, and the probe job doubles as the cache
+    # materializer tier 3 reads.
+    from ..runtime import probe_arrow
 
-    rows = probe_limit_collect(star, driver_node_limit + 1)
+    table = probe_arrow(star, driver_node_limit)
 
-    if len(rows) <= driver_node_limit:
+    if table is not None:
         # Tier 2: the star mapping is one row per edge-touched node and
-        # under the guard — finish with one union-find over the collected
-        # stars and broadcast the labels back (collect is of the REDUCED
+        # under the guard — finish with one union-find over the probed
+        # stars and broadcast the labels back (the probe reads the REDUCED
         # mapping, never the corpus or the raw edge list).
         parent: dict = {}
 
@@ -611,18 +609,17 @@ def connected_components(
             return r
 
         star.unpersist()
-        for row in rows:
-            a, b = row["src"], row["dst"]
+        srcs = table.column("src").to_pylist()
+        for a, b in zip(srcs, table.column("dst").to_pylist()):
             ra, rb = find(a), find(b)
             if ra != rb:
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
         # a node that appears in several partitions' stars shows up in
-        # several collected rows — labels must be UNIQUE per node or the
+        # several probed rows — labels must be UNIQUE per node or the
         # final left-join fans out duplicate rows
-        label_rows = sorted(
-            (n, find(n)) for n in {row["src"] for row in rows})
+        label_rows = sorted((n, find(n)) for n in set(srcs))
         clustered = local_relation(
             pairs.sparkSession, label_rows,
             T.StructType([T.StructField(id_col, node_t),

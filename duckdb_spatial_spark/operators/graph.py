@@ -1,5 +1,6 @@
 """Graph analytics over edge DataFrames — PageRank (domain authority over
-a web link graph, the ranking signal next to the URL tier) plus the
+a web link graph, the ranking signal next to the URL tier), HITS,
+triangles, label propagation, k-core and BFS hop distances, plus the
 connected-components operator living in dedup.py.
 
 PageRank is THE canonical iterative Spark workload: each iteration is one
@@ -13,15 +14,64 @@ the SQL oracle unroll the same recurrence as chained CTEs.
 where D_t is the total rank mass on dangling (no-outlink) nodes. Ranks are
 persisted per iteration and the previous generation unpersisted — lineage
 stays O(1) deep instead of growing by one join per iteration.
+
+The three integer-only loops (:func:`k_core`, :func:`label_propagation`,
+:func:`bfs_hops`) have two tiers, like connected components. One
+:func:`~duckdb_spatial_spark.runtime.probe_arrow` job reads the
+deduplicated edge set; when it holds at most
+``runtime.LOCAL_ROW_LIMIT`` edges (2M), the rounds run in NumPy in the
+driver and the result comes back as a LocalRelation, so a graph that fits
+in memory pays no job per round ("Scalability! But at what COST?",
+McSherry et al. 2015). A larger edge set runs the distributed loop, one
+materializing job per round, over the edge cache the probe job filled
+(the edge set is persisted before the probe). Both tiers compute the same recurrence, so
+the unrolled SQL twins check either.
 """
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import runtime
+from ..sources.tables import local_relation
+
 __all__ = ["pagerank", "triangle_count", "label_propagation",
-           "label_propagation_sql", "k_core", "k_core_sql",
+           "label_propagation_sql", "k_core", "k_core_sql", "bfs_hops",
            "hits", "hits_sql"]
+
+
+def _probe_graph(edges: DataFrame, src_col: str, dst_col: str):
+    """Probe the simple edge set of ``edges`` — (src, dst) as longs, null
+    endpoints and self-loops dropped, each directed edge once — for the
+    in-process tier. Returns ``(e0, graph)``.
+
+    ``graph`` is ``(nodes, src, dst)``: the sorted distinct endpoints,
+    and the undirected edge set with each direction once as index arrays
+    into ``nodes``, sorted by (src, dst). It is None when ``e0`` holds
+    more than ``runtime.LOCAL_ROW_LIMIT`` edges; ``e0`` is then returned
+    persisted, its cache filled by the probe job, so the distributed
+    loop reads it instead of computing it again, and the caller
+    unpersists it. Under the guard ``e0`` is already unpersisted."""
+    e0 = (edges.select(F.col(src_col).cast("long").alias("src"),
+                       F.col(dst_col).cast("long").alias("dst"))
+          .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
+                  & (F.col("src") != F.col("dst")))
+          .distinct().persist())
+    t = runtime.probe_arrow(e0)
+    if t is None:
+        return e0, None
+    e0.unpersist()
+    a = t.column("src").to_numpy()
+    b = t.column("dst").to_numpy()
+    nodes, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    n = len(nodes)
+    s, d = idx[:len(a)], idx[len(a):]
+    # one int64 key per directed pair: n <= 2 * LOCAL_ROW_LIMIT, so n * n
+    # stays far below 2**63
+    key = np.unique(np.concatenate([s * n + d, d * n + s]))
+    return e0, (nodes, key // n, key % n)
 
 
 def pagerank(
@@ -280,9 +330,15 @@ def label_propagation(
     classic LPA caveat); with fixed iterations that is still a
     deterministic, checkable answer.
 
-    Plan per iteration: one CO-PARTITIONED equi-join (labels ⋈ edges on
-    src — the edge cache is hash(src)-partitioned once up front and
-    every label generation comes out of its join/groupBy hash(node)
+    Two tiers (module docstring). In process, when the deduplicated edge
+    set has at most ``runtime.LOCAL_ROW_LIMIT`` rows: per iteration one
+    ``np.unique`` counts the (node, neighbor label) votes and one
+    ``lexsort`` picks (count DESC, label ASC) per node — one probe job
+    in all, and the result is a LocalRelation.
+
+    Distributed, per iteration: one CO-PARTITIONED equi-join (labels ⋈
+    edges on src — the edge cache is hash(src)-partitioned once up front
+    and every label generation comes out of its join/groupBy hash(node)
     partitioned, so the join needs no exchange and no broadcast; a
     per-iteration broadcast of the derived labels frame was its own
     build-job barrier, trap 13 — the same fix measured ~2× on the HITS
@@ -290,16 +346,28 @@ def label_propagation(
     min-struct argmax. Labels persist per generation, previous
     generation unpersisted — O(1) lineage. Returns (node, lab).
     """
-    e0 = (edges.select(F.col(src_col).cast("long").alias("src"),
-                       F.col(dst_col).cast("long").alias("dst"))
-          .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst")))
-          .distinct())
+    e0, g = _probe_graph(edges, src_col, dst_col)
+    if g is not None:
+        nodes, src, dst = g
+        n = len(nodes)
+        # a label is the index of its node: nodes are sorted, so index
+        # order is id order and the smallest index is the smallest label
+        lab = np.arange(n)
+        for _ in range(iters):
+            key, c = np.unique(dst * n + lab[src], return_counts=True)
+            o = np.lexsort((key % n, -c, key // n))
+            v, w = key[o] // n, key[o] % n
+            first = np.diff(v, prepend=-1) != 0   # each node's winner
+            lab[v[first]] = w[first]
+        return local_relation(edges.sparkSession,
+                              pa.table([nodes, nodes[lab]], ["node", "lab"]),
+                              "node long, lab long")
     e = (e0.union(e0.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst")))
          .distinct().repartition("src").persist())
     nodes = e.select(F.col("src").alias("node")).distinct().persist()
     n = nodes.count()
+    e0.unpersist()     # e's cache is filled
     if n == 0:
         e.unpersist()
         nodes.unpersist()
@@ -423,19 +491,35 @@ def k_core(
     doubled per round (hundreds of MB after 16 rounds). The alive set
     persists per generation, previous unpersisted. Returns (node) — the
     surviving set.
+
+    That loop is the distributed tier. When the deduplicated edge set
+    has at most ``runtime.LOCAL_ROW_LIMIT`` rows, the same peel runs in
+    process instead (module docstring): each round is one
+    ``np.bincount`` of alive neighbors, the stop rule is the same fixed
+    point, and the surviving set is a LocalRelation — one probe job in
+    all.
     """
     if k < 1:
         raise ValueError("k_core: k must be >= 1")
-    e0 = (edges.select(F.col(src_col).cast("long").alias("src"),
-                       F.col(dst_col).cast("long").alias("dst"))
-          .filter(F.col("src").isNotNull() & F.col("dst").isNotNull()
-                  & (F.col("src") != F.col("dst")))
-          .distinct())
+    e0, g = _probe_graph(edges, src_col, dst_col)
+    if g is not None:
+        nodes, src, dst = g
+        alive = np.ones(len(nodes), dtype=bool)
+        for _ in range(rounds):
+            new_alive = np.bincount(src[alive[dst]],
+                                    minlength=len(nodes)) >= k
+            if new_alive.sum() == alive.sum():   # fixed point
+                break
+            alive = new_alive
+        return local_relation(edges.sparkSession,
+                              pa.table([nodes[alive]], ["node"]),
+                              "node long")
     e = (e0.union(e0.select(F.col("dst").alias("src"),
                             F.col("src").alias("dst")))
          .distinct().repartition("dst").persist())
     alive = e.select(F.col("src").alias("node")).distinct().persist()
     n = alive.count()
+    e0.unpersist()     # e's cache is filled
     if n == 0:
         e.unpersist()
         return alive
@@ -484,6 +568,69 @@ def k_core_sql(edges_cte: str, k: int, rounds: int = 16) -> str:
         )""")
         prev = f"a{i}"
     return "WITH " + ",\n".join(parts) + f"\nSELECT node FROM {prev}"
+
+
+def bfs_hops(
+    edges: DataFrame,
+    source: int,
+    rounds: int,
+    src_col: str = "src",
+    dst_col: str = "dst",
+) -> DataFrame:
+    """Breadth-first hop distances from ``source`` over the undirected
+    graph of ``edges`` (null endpoints and self-loops dropped): every
+    node within ``rounds`` hops, with its hop count — the shortest-path
+    surface DuckDB gets from recursive CTEs. ``source`` is always at
+    ``d = 0``, even when no edge touches it. Integer-only, so an
+    unrolled CTE twin (q158's oracle) replays it exactly.
+
+    Two tiers (module docstring). In process, each round marks the
+    unreached neighbors of the last frontier. Distributed, each round is
+    one equi-join of the distances with the edges and one min-aggregate,
+    persisted with the previous generation unpersisted (O(1) lineage).
+    Both stop early at a fixed point, which leaves the result unchanged.
+    Returns (node long, d int).
+    """
+    spark = edges.sparkSession
+    source = int(source)
+    e0, g = _probe_graph(edges, src_col, dst_col)
+    if g is not None:
+        nodes, src, dst = g
+        dist = np.full(len(nodes), -1, dtype=np.int32)
+        i = np.searchsorted(nodes, source)
+        if i == len(nodes) or nodes[i] != source:
+            return local_relation(spark, [(source, 0)], "node long, d int")
+        dist[i] = 0
+        for r in range(1, rounds + 1):
+            reached = dst[dist[src] == r - 1]
+            reached = reached[dist[reached] < 0]
+            if not len(reached):
+                break
+            dist[reached] = r
+        keep = dist >= 0
+        return local_relation(spark, pa.table([nodes[keep], dist[keep]],
+                                              ["node", "d"]),
+                              "node long, d int")
+    # both directions, read from e0's cache each round
+    e = e0.unionByName(
+        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    dist = local_relation(spark, [(source, 0)], "node long, d int")
+    n = 1
+    for r in range(1, rounds + 1):
+        nxt = (dist.join(e, dist["node"] == e["src"])
+               .select(F.col("dst").alias("node"),
+                       F.lit(r).cast("int").alias("d")))
+        new_dist = (dist.unionByName(nxt)
+                    .groupBy("node").agg(F.min("d").alias("d"))
+                    .persist())
+        n_new = new_dist.count()
+        dist.unpersist()
+        dist = new_dist
+        if n_new == n:       # fixed point: no node reached this round
+            break
+        n = n_new
+    e0.unpersist()
+    return dist
 
 
 def hits(

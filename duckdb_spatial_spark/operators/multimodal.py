@@ -19,7 +19,7 @@ plumbing tests.
 from __future__ import annotations
 
 import hashlib
-from typing import Callable, Iterator, Optional
+from typing import Callable, Optional
 
 import numpy as np
 import pandas as pd

@@ -38,7 +38,7 @@ from typing import Iterable, Optional
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 __all__ = ["train_pq", "pq_encode", "pq_codebook_df", "ann_pq_topk",

@@ -28,8 +28,7 @@ oracle-checkable variant exists; use either at scale.)
 
 from __future__ import annotations
 
-import math
-from typing import List, Optional, Sequence
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F

@@ -2,6 +2,11 @@
 counts, the one-job bounded probes, the small-result sort and
 timezone-free event time.
 
+:data:`LOCAL_ROW_LIMIT` is the one guard between an operator's in-process
+tier and its distributed tier: :func:`probe_arrow` hands an input of at
+most that many rows to the driver as a ``pyarrow.Table``, and a larger
+one stays in Spark. Tests force the distributed tiers by setting it to 0.
+
 Session conf is shared by every thread of a SparkSession. The engine
 changes it only inside :func:`scoped_conf`, and only for the span of one
 driver-side action or stream drain, so it assumes one query is built and
@@ -11,14 +16,23 @@ run at a time per session.
 from __future__ import annotations
 
 import contextlib
-from typing import Union
+from typing import Optional, Union
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["adaptive_partitions", "epoch_micros", "probe_limit_collect",
-           "probe_pairs", "probe_sorted", "scoped_conf", "small_sort",
-           "utc_timestamp"]
+__all__ = ["LOCAL_ROW_LIMIT", "adaptive_partitions", "epoch_micros",
+           "probe_arrow", "probe_limit_collect", "probe_pairs",
+           "probe_sorted", "scoped_conf", "small_sort", "utc_timestamp"]
+
+# Rows an operator may finish in the driver process. Read at call time, so
+# tests can patch it. Set from random graphs of 0.25M-4M edges, local[4]:
+# the in-process k-core and label propagation take 2-5x less CPU and
+# 1.7-3x less wall time than the distributed loops at every size, and
+# in-process BFS's wall time meets the distributed one at about 2M edges.
+# At 2M edges the driver's Python RSS peaks ~0.42 GB higher (label
+# propagation), and it grows ~0.2 GB per further 1M edges.
+LOCAL_ROW_LIMIT = 2_000_000
 
 
 @contextlib.contextmanager
@@ -69,6 +83,18 @@ def probe_limit_collect(df: DataFrame, n: int):
     with scoped_conf(df.sparkSession,
                      {"spark.sql.limit.initialNumPartitions": 1 << 30}):
         return df.limit(n).collect()
+
+
+def probe_arrow(df: DataFrame, limit: Optional[int] = None):
+    """``df`` as a ``pyarrow.Table`` when it has at most ``limit`` rows
+    (default :data:`LOCAL_ROW_LIMIT`), else None. One job: the
+    ``limit + 1`` rows are collected through ``toArrow``, whose plan
+    executes the limit over every partition at once (no CollectLimit
+    escalation waves), and no value passes through a Python ``Row``."""
+    if limit is None:
+        limit = LOCAL_ROW_LIMIT
+    table = df.limit(limit + 1).toArrow()
+    return table if table.num_rows <= limit else None
 
 
 def probe_pairs(df: DataFrame, key: str, col: str) -> list:

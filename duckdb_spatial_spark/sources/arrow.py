@@ -27,7 +27,6 @@ from typing import Iterator, List, Optional
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from .filescan import _range_table
 

@@ -33,8 +33,7 @@ from pyspark.sql import types as T
 
 from ..geom.core import (Geometry, LINESTRING, MULTILINESTRING, MULTIPOINT,
                          MULTIPOLYGON, POINT, POLYGON)
-from ..geom.pbf import (_enc_field, _enc_varint, _fields, _packed_varints,
-                        _varint)
+from ..geom.pbf import _enc_field, _enc_varint, _fields, _packed_varints
 from ..geom.wkb import from_wkb, to_wkb
 from .filescan import Scan, run
 

@@ -30,6 +30,7 @@ Tiering:
 
 from __future__ import annotations
 
+import contextlib
 import gzip
 import json
 import os
@@ -231,23 +232,29 @@ def _native_reader(path: str, wkt_col: Optional[str] = None):
     return None if fmt is None else _NATIVE[fmt][1:]
 
 
-def _unzip(path: str) -> str:
+def _is_container(path: str) -> bool:
+    low = path.lower()
+    return low.endswith((".zip", ".kmz")) or ".zip/" in low
+
+
+def _unzip(path: str, tmpd: Optional[str] = None) -> str:
     """``path``, or for a zip container (the reference's /vsizip/ paths,
     st_read.cpp: 'x.zip', 'x.zip/inner.shp', or 'x.kmz', zipped KML) the
-    inner file, extracted to a temp dir. (On a multi-node cluster the
-    extraction directory must be on a shared filesystem.)"""
-    low = path.lower()
-    if not (low.endswith((".zip", ".kmz")) or ".zip/" in low):
+    inner file, extracted to ``tmpd`` or else a new ``dss_zip_*`` temp
+    dir. (On a multi-node cluster the extraction directory must be on a
+    shared filesystem.)"""
+    if not _is_container(path):
         return path
     import tempfile
     import zipfile
 
+    low = path.lower()
     if ".zip/" in low:
         idx = low.index(".zip/") + 4
         zpath, inner = path[:idx], path[idx + 1:]
     else:
         zpath, inner = path, None
-    tmpd = tempfile.mkdtemp(prefix="dss_zip_")
+    tmpd = tmpd or tempfile.mkdtemp(prefix="dss_zip_")
     with zipfile.ZipFile(zpath) as zf:
         zf.extractall(tmpd)
         names = zf.namelist()
@@ -343,6 +350,8 @@ def _st_read_dispatch(
 
         return df.filter(S.st_intersects(_F.col(geom_col),
                                          _F.lit(bytes(spatial_filter))))
+    # The extraction dir stays: the lazy frame re-reads its files on every
+    # action, and no hook runs when the last action is done.
     inner = _unzip(path)
     if inner != path:
         return st_read(spark, inner, layer=layer, columns=columns, bbox=bbox,
@@ -827,17 +836,23 @@ _ARROW_TO_SPARK = {
 }
 
 
-def local_read_rows(path: str, layer: Optional[str] = None):
-    """Session-free read of ``path`` in this process: ``(StructType,
-    row iterator)``, the schema eager and the rows lazy.
+@contextlib.contextmanager
+def _extracted(path: str):
+    """``path``, or a zip container's inner file extracted into a temp
+    dir that is removed when the ``with`` block ends."""
+    if not _is_container(path):
+        yield path
+        return
+    import tempfile
 
-    Backs the SQL table functions (``SELECT * FROM ST_Read('x.gpkg')``,
-    st_read.cpp:538-545's replacement scan made SQL-callable): the UDTF's
-    ``analyze`` needs a schema and its ``eval`` runs on an executor with no
-    SparkSession. A native reader runs the same Scan that ``st_read`` runs,
-    one unit after another; Parquet reads through pyarrow.
-    """
-    path = _unzip(path)
+    with tempfile.TemporaryDirectory(prefix="dss_zip_") as tmpd:
+        yield _unzip(path, tmpd)
+
+
+def _local_scan(path: str, layer: Optional[str]):
+    """``(StructType, row iterator)`` of an unzipped ``path`` read in this
+    process: a native reader runs the same Scan that ``st_read`` runs, one
+    unit after another; Parquet reads through pyarrow."""
     reader = _native_reader(path)
     if reader is not None:
         _read, plan, takes = reader
@@ -859,3 +874,21 @@ def local_read_rows(path: str, layer: Optional[str] = None):
     raise NotImplementedError(
         f"SQL ST_Read reads the native formats and Parquet; read {path!r} "
         "with st_read(spark, path)")
+
+
+def local_read_schema(path: str, layer: Optional[str] = None) -> T.StructType:
+    """Session-free schema of ``path``: what the SQL table functions'
+    ``analyze`` returns (``SELECT * FROM ST_Read('x.gpkg')``,
+    st_read.cpp:538-545's replacement scan made SQL-callable). A zip
+    container is extracted for the call and removed after it."""
+    with _extracted(path) as p:
+        return _local_scan(p, layer)[0]
+
+
+def local_read_rows(path: str, layer: Optional[str] = None) -> Iterator[tuple]:
+    """The rows of ``path`` read in this process, lazily: what the SQL
+    table functions' ``eval`` yields on an executor with no SparkSession.
+    A zip container is extracted on the first row and removed once the
+    rows are exhausted (or the iterator is closed)."""
+    with _extracted(path) as p:
+        yield from _local_scan(p, layer)[1]

@@ -23,7 +23,6 @@ import os
 import struct
 from typing import List, Optional
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

@@ -48,16 +48,22 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
     in field order. Values go through the field types' ``toInternal``, as
     in ``createDataFrame(list)``, so a naive datetime in a TIMESTAMP
     column is read in the process's local zone (what ``collect()``
-    returns). All fields come back nullable: Arrow cannot cast a nullable
-    struct field to the non-nullable one a plan's schema may carry. A row
-    of the wrong length or an integer outside its column's range raises
-    ValueError."""
+    returns). ``rows`` may also be a ``pyarrow.Table`` whose columns are
+    in field order: it is cast to the schema's Arrow types as a whole,
+    with no per-value Python work. All fields come back nullable: Arrow
+    cannot cast a nullable struct field to the non-nullable one a plan's
+    schema may carry. A row of the wrong length or an integer outside its
+    column's range raises ValueError."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     schema = schema.toNullable()
+    arrow = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(
+            rows.rename_columns(arrow.names).cast(arrow), schema)
     rows = list(rows)
     width = len(schema.fields)
     for i, r in enumerate(rows):
@@ -65,7 +71,6 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
             raise ValueError(
                 f"local_relation: row {i} has {len(r)} values, the schema "
                 f"has {width} fields")
-    arrow = to_arrow_schema(schema)
     cols = []
     for j, (f, af) in enumerate(zip(schema.fields, arrow)):
         vals = [r[j] for r in rows]

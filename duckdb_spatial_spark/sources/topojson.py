@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..geom.core import (GEOMETRYCOLLECTION, LINESTRING, MULTILINESTRING,
-                         MULTIPOINT, MULTIPOLYGON, POINT, POLYGON, Geometry,
-                         collect)
+                         MULTIPOINT, MULTIPOLYGON, POLYGON, Geometry, collect)
 from ..geom.wkb import to_wkb
 from .filescan import Scan, run
 

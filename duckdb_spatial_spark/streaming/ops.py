@@ -18,7 +18,6 @@ from typing import Tuple
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..runtime import scoped_conf
 

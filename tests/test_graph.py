@@ -1,9 +1,16 @@
-"""PageRank: Spark iterative implementation vs an independent pure-Python
-reference and the unrolled-SQL (DuckDB) replica."""
+"""The graph operators: Spark implementations vs independent pure-Python
+references and the unrolled-SQL (DuckDB) replicas.
+
+k-core, label propagation and BFS have an in-process tier and a
+distributed one; their tests run each tier in turn (:func:`tiers`)."""
+import os
+import sys
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_spatial_spark import runtime
 from duckdb_spatial_spark.operators.graph import pagerank, pagerank_sql
 
 EDGES = [
@@ -11,6 +18,16 @@ EDGES = [
     (6, 7),  # 7 is dangling
     (1, 2),  # duplicate edge — must count once
 ]
+
+
+def tiers(monkeypatch):
+    """Yield each tier's name with the guard set to force it: the default
+    guard keeps small graphs in process, a zero guard sends every graph
+    to the distributed loop."""
+    for name, limit in (("in-process", runtime.LOCAL_ROW_LIMIT),
+                        ("distributed", 0)):
+        monkeypatch.setattr(runtime, "LOCAL_ROW_LIMIT", limit)
+        yield name
 
 
 def ref_pagerank(edges, iters, d=0.85):
@@ -136,26 +153,27 @@ def ref_lpa(edges, iters):
     return lab
 
 
-def test_label_propagation_vs_reference_fuzz(spark):
+def test_label_propagation_vs_reference_fuzz(spark, monkeypatch):
     import random
 
     from duckdb_spatial_spark.operators.graph import label_propagation
 
-    rng = random.Random(13)
-    for trial in range(6):
-        n = rng.randint(5, 35)
-        m = rng.randint(n, 4 * n)
-        edges = [(rng.randint(0, n), rng.randint(0, n)) for _ in range(m)]
-        iters = rng.randint(1, 5)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {r["node"]: r["lab"]
-               for r in label_propagation(df, iters=iters).collect()}
-        want = ref_lpa(edges, iters)
-        assert got == want, (trial, iters)
+    for tier in tiers(monkeypatch):
+        rng = random.Random(13)
+        for trial in range(6):
+            n = rng.randint(5, 35)
+            m = rng.randint(n, 4 * n)
+            edges = [(rng.randint(0, n), rng.randint(0, n))
+                     for _ in range(m)]
+            iters = rng.randint(1, 5)
+            df = spark.createDataFrame(edges, "src long, dst long")
+            got = {r["node"]: r["lab"]
+                   for r in label_propagation(df, iters=iters).collect()}
+            want = ref_lpa(edges, iters)
+            assert got == want, (tier, trial, iters)
 
 
-def test_label_propagation_sql_twin(spark):
-    import duckdb
+def test_label_propagation_sql_twin(spark, monkeypatch):
     import random
 
     from duckdb_spatial_spark.operators.graph import (label_propagation,
@@ -164,16 +182,17 @@ def test_label_propagation_sql_twin(spark):
     rng = random.Random(99)
     edges = [(rng.randint(0, 60), rng.randint(0, 60)) for _ in range(180)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["lab"]
-           for r in label_propagation(df, iters=4).collect()}
     vals = ", ".join(f"({a}, {b})" for a, b in edges)
     sql = label_propagation_sql(
         f"SELECT * FROM (VALUES {vals}) v(src, dst)", iters=4)
     want = dict(duckdb.connect().execute(sql).fetchall())
-    assert got == want
+    for tier in tiers(monkeypatch):
+        got = {r["node"]: r["lab"]
+               for r in label_propagation(df, iters=4).collect()}
+        assert got == want, tier
 
 
-def test_label_propagation_two_cliques(spark):
+def test_label_propagation_two_cliques(spark, monkeypatch):
     """Two cliques joined by one bridge edge: labels converge to each
     clique's minimum id."""
     import itertools
@@ -184,23 +203,25 @@ def test_label_propagation_two_cliques(spark):
     c2 = list(itertools.combinations([10, 11, 12, 13], 2))
     edges = c1 + c2 + [(3, 10)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["lab"]
-           for r in label_propagation(df, iters=5).collect()}
-    assert got == ref_lpa(edges, 5)
-    assert {got[v] for v in (0, 1, 2)} == {0}
-    assert {got[v] for v in (11, 12, 13)} == {10}
+    for tier in tiers(monkeypatch):
+        got = {r["node"]: r["lab"]
+               for r in label_propagation(df, iters=5).collect()}
+        assert got == ref_lpa(edges, 5), tier
+        assert {got[v] for v in (0, 1, 2)} == {0}, tier
+        assert {got[v] for v in (11, 12, 13)} == {10}, tier
 
 
-def test_label_propagation_empty(spark):
+def test_label_propagation_empty(spark, monkeypatch):
     from duckdb_spatial_spark.operators.graph import label_propagation
 
     empty = spark.createDataFrame([], "src long, dst long")
-    out = label_propagation(empty, iters=3)
-    assert out.columns == ["node", "lab"]
-    assert out.count() == 0
+    for tier in tiers(monkeypatch):
+        out = label_propagation(empty, iters=3)
+        assert out.columns == ["node", "lab"], tier
+        assert out.count() == 0, tier
 
 
-def test_label_propagation_negative_ids(spark):
+def test_label_propagation_negative_ids(spark, monkeypatch):
     """Tie-break must stay (count DESC, label ASC) for NEGATIVE node
     ids too — the min(struct(-c, lab)) aggregate is sign-safe where a
     label negation would invert ties."""
@@ -208,9 +229,10 @@ def test_label_propagation_negative_ids(spark):
 
     edges = [(-5, 1), (-5, 2), (1, 2), (-9, -5), (3, -9), (3, 1)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["lab"]
-           for r in label_propagation(df, iters=4).collect()}
-    assert got == ref_lpa(edges, 4)
+    for tier in tiers(monkeypatch):
+        got = {r["node"]: r["lab"]
+               for r in label_propagation(df, iters=4).collect()}
+        assert got == ref_lpa(edges, 4), tier
 
 
 def ref_k_core(edges, k):
@@ -230,41 +252,42 @@ def ref_k_core(edges, k):
         alive -= drop
 
 
-def test_k_core_vs_reference_fuzz(spark):
+def test_k_core_vs_reference_fuzz(spark, monkeypatch):
     import random
 
     from duckdb_spatial_spark.operators.graph import k_core
 
-    rng = random.Random(17)
-    for trial in range(5):
-        n = rng.randint(6, 40)
-        m = rng.randint(n, 4 * n)
-        edges = [(rng.randint(0, n), rng.randint(0, n)) for _ in range(m)]
-        k = rng.randint(1, 4)
-        df = spark.createDataFrame(edges, "src long, dst long")
-        got = {r["node"] for r in k_core(df, k).collect()}
-        assert got == ref_k_core(edges, k), (trial, k)
+    for tier in tiers(monkeypatch):
+        rng = random.Random(17)
+        for trial in range(5):
+            n = rng.randint(6, 40)
+            m = rng.randint(n, 4 * n)
+            edges = [(rng.randint(0, n), rng.randint(0, n))
+                     for _ in range(m)]
+            k = rng.randint(1, 4)
+            df = spark.createDataFrame(edges, "src long, dst long")
+            got = {r["node"] for r in k_core(df, k).collect()}
+            assert got == ref_k_core(edges, k), (tier, trial, k)
 
 
-def test_k_core_sql_twin(spark):
+def test_k_core_sql_twin(spark, monkeypatch):
     import random
-
-    import duckdb
 
     from duckdb_spatial_spark.operators.graph import k_core, k_core_sql
 
     rng = random.Random(23)
     edges = [(rng.randint(0, 50), rng.randint(0, 50)) for _ in range(160)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"] for r in k_core(df, 3, rounds=8).collect()}
     vals = ", ".join(f"({a}, {b})" for a, b in edges)
     sql = k_core_sql(f"SELECT * FROM (VALUES {vals}) v(src, dst)",
                      3, rounds=8)
     want = {r[0] for r in duckdb.connect().execute(sql).fetchall()}
-    assert got == want
+    for tier in tiers(monkeypatch):
+        got = {r["node"] for r in k_core(df, 3, rounds=8).collect()}
+        assert got == want, tier
 
 
-def test_k_core_clique_plus_tail(spark):
+def test_k_core_clique_plus_tail(spark, monkeypatch):
     """A 5-clique with a pendant path: the 4-core is exactly the clique,
     the 1-core is everything, k=6 empties the graph."""
     import itertools
@@ -274,11 +297,133 @@ def test_k_core_clique_plus_tail(spark):
     clique = list(itertools.combinations(range(5), 2))
     tail = [(4, 10), (10, 11), (11, 12)]
     df = spark.createDataFrame(clique + tail, "src long, dst long")
-    assert ({r["node"] for r in k_core(df, 4).collect()}
-            == {0, 1, 2, 3, 4})
-    assert ({r["node"] for r in k_core(df, 1).collect()}
-            == {0, 1, 2, 3, 4, 10, 11, 12})
-    assert k_core(df, 6).count() == 0
+    for tier in tiers(monkeypatch):
+        assert ({r["node"] for r in k_core(df, 4).collect()}
+                == {0, 1, 2, 3, 4}), tier
+        assert ({r["node"] for r in k_core(df, 1).collect()}
+                == {0, 1, 2, 3, 4, 10, 11, 12}), tier
+        assert k_core(df, 6).count() == 0, tier
+
+
+def test_k_core_empty(spark, monkeypatch):
+    from duckdb_spatial_spark.operators.graph import k_core
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    for tier in tiers(monkeypatch):
+        out = k_core(empty, 2)
+        assert out.columns == ["node"], tier
+        assert out.count() == 0, tier
+
+
+def ref_bfs(edges, source, rounds):
+    """Independent pure-Python BFS over the undirected simple graph."""
+    adj = {}
+    for a, b in edges:
+        if a is not None and b is not None and a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    dist, frontier = {source: 0}, [source]
+    for r in range(1, rounds + 1):
+        frontier = [w for v in frontier for w in adj.get(v, ())
+                    if w not in dist]
+        for w in frontier:
+            dist[w] = r
+    return dist
+
+
+def test_bfs_hops_vs_reference(spark, monkeypatch):
+    """Duplicate and reversed edges, self-loops and null endpoints, a
+    path longer than ``rounds``, an unreachable component, and random
+    graphs."""
+    import random
+
+    from duckdb_spatial_spark.operators.graph import bfs_hops
+
+    path = [(i, i + 1) for i in range(10)]
+    cases = [
+        (path + [(1, 0), (2, 1), (0, 1), (3, 3), (4, None)], 0, 3),
+        (path + [(20, 21), (21, 22)], 5, 8),
+    ]
+    rng = random.Random(31)
+    for _ in range(3):
+        n = rng.randint(5, 30)
+        cases.append(([(rng.randint(0, n), rng.randint(0, n))
+                       for _ in range(rng.randint(n, 3 * n))],
+                      rng.randint(0, n), rng.randint(1, 5)))
+    for tier in tiers(monkeypatch):
+        for i, (edges, source, rounds) in enumerate(cases):
+            df = spark.createDataFrame(edges, "src long, dst long")
+            out = bfs_hops(df, source, rounds)
+            assert out.columns == ["node", "d"]
+            got = {r["node"]: r["d"] for r in out.collect()}
+            assert got == ref_bfs(edges, source, rounds), (tier, i)
+
+
+def test_bfs_hops_isolated_source(spark, monkeypatch):
+    """The source is at hop 0 when no edge touches it, and on an empty
+    edge set."""
+    from duckdb_spatial_spark.operators.graph import bfs_hops
+
+    df = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
+    empty = spark.createDataFrame([], "a long, b long")
+    for tier in tiers(monkeypatch):
+        for edges in (df, empty):
+            got = [tuple(r) for r in
+                   bfs_hops(edges, 7, 4, src_col="a", dst_col="b").collect()]
+            assert got == [(7, 0)], tier
+
+
+def test_graph_loops_in_process_tier_is_local(spark):
+    """Under the guard the loops return a LocalRelation: the rounds ran
+    in the driver, not as Spark jobs."""
+    from duckdb_spatial_spark.operators.graph import (bfs_hops, k_core,
+                                                      label_propagation)
+
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1)], "src long, dst long")
+    for out in (k_core(df, 2), label_propagation(df, iters=2),
+                bfs_hops(df, 1, 2)):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.lstrip().startswith("LocalRelation"), plan
+
+
+def test_graph_loops_distributed_tier_caches_only_its_result(spark,
+                                                           monkeypatch):
+    """Above the guard the probed edge frame and the loop's edge cache
+    are released: the returned generation is the only cache left."""
+    from duckdb_spatial_spark.operators.graph import (bfs_hops, k_core,
+                                                      label_propagation)
+
+    monkeypatch.setattr(runtime, "LOCAL_ROW_LIMIT", 0)
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (3, 4)],
+                               "src long, dst long")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for run in (lambda: k_core(df, 2), lambda: label_propagation(df, iters=2),
+                lambda: bfs_hops(df, 1, 2)):
+        spark.catalog.clearCache()
+        out = run()
+        assert out.count() > 0
+        out.unpersist()
+        assert cache.isEmpty()
+
+
+def test_graph_queries_leave_nothing_cached(spark):
+    """q158, q161 and q162 leave no CacheManager entry and no persisted
+    RDD behind."""
+    sys.path.insert(0, os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))))
+    import __spark_entry__ as entry
+    from conftest import SF_DIR
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    for name, fn in entry.queries().items():
+        if name.split("_")[0] not in ("q158", "q161", "q162"):
+            continue
+        before = rdds().size()
+        assert fn(spark, SF_DIR).collect(), name
+        assert cache.isEmpty(), name
+        assert rdds().size() <= before, name
 
 
 # ---------------------------------------------------------------------------

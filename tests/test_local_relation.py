@@ -207,3 +207,21 @@ def test_5000_rows_stay_local_relation_zero_jobs(spark):
     got = df.collect()
     assert _jobs(spark) == before
     assert sorted((r.i, r.v, r.s, bytes(r.b)) for r in got) == rows
+
+
+def test_arrow_table_taken_as_is(spark):
+    """A pyarrow.Table is renamed and cast to the schema column by column
+    (int32 data into a long field here), with no per-value conversion,
+    and still plans as a LocalRelation."""
+    import pyarrow as pa
+
+    t = pa.table({"a": pa.array([3, 1, 2], pa.int32()),
+                  "b": ["x", None, "z"]})
+    df = local_relation(spark, t, "k long, s string")
+    assert df.schema == T.StructType.fromDDL("k long, s string")
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.lstrip().startswith("LocalRelation"), plan
+    j0 = _jobs(spark)
+    assert [tuple(r) for r in df.collect()] == [(3, "x"), (1, None),
+                                                (2, "z")]
+    assert _jobs(spark) == j0

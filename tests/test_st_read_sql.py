@@ -7,9 +7,11 @@ fixture of the format's own tests for the read-only GML, TopoJSON and OSM
 through one, the GeoJSON sink's own output directory among them.
 """
 
+import glob
 import json
 import os
 import shutil
+import tempfile
 import zipfile
 
 import pytest
@@ -157,3 +159,17 @@ def test_sql_st_read_equals_st_read(spark, tmp_path, fmt, form):
     rows = _rows(want)
     assert rows, p
     assert _rows(got) == rows
+
+
+@pytest.mark.parametrize("name", list(ZIPPED))
+def test_sql_st_read_of_container_removes_its_extraction(spark, tmp_path,
+                                                         name):
+    """SQL ``ST_Read`` of a KMZ or a zipped shapefile extracts the
+    container for its schema and for its rows, and removes both
+    extraction directories again."""
+    register_sql_functions(spark)
+    p = ZIPPED[name](spark, tmp_path)
+    pattern = os.path.join(tempfile.gettempdir(), "dss_zip_*")
+    before = set(glob.glob(pattern))
+    assert spark.sql(f"SELECT * FROM ST_Read('{p}')").collect()
+    assert set(glob.glob(pattern)) - before == set()
