@@ -114,8 +114,8 @@ def q02_zone_pip_join(spark: SparkSession, sf: str) -> DataFrame:
     the grid-partitioned equi-join; per-zone counts."""
     pts = _events_pts(spark, sf)
     # 15-row LITERAL dim table: parse the WKT driver-side and hand Spark a
-    # LocalRelation of ready WKB — the join's broadcast guard collects it
-    # with no job.
+    # LocalRelation of ready WKB — the join's broadcast guard probes it
+    # in one job with no Python task.
     from duckdb_spatial_spark.geom.wkb import to_wkb as _to_wkb
     from duckdb_spatial_spark.geom.wkt import from_wkt as _from_wkt
 

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..runtime import probe_arrow
 from ..sources.tables import local_relation
 
 
@@ -589,8 +590,6 @@ def connected_components(
     # case is min(partition_rows, guard+1) rows per task — the
     # documented P x limit bound, and the probe job doubles as the cache
     # materializer tier 3 reads.
-    from ..runtime import probe_arrow
-
     table = probe_arrow(star, driver_node_limit)
 
     if table is not None:
@@ -1133,17 +1132,20 @@ def edit_distance_pairs(
     # binds first (n rows imply n·(n−1)/2 cross-tier candidate pairs)
     pair_rows = int((1 + math.isqrt(1 + 8 * max_short_pairs)) // 2)
     row_cap = min(max_short_rows, pair_rows)
-    probe = shorts.limit(row_cap + 1).count()
-    if probe > row_cap:
+    ids = shorts.select("__id")
+    short_ids = probe_arrow(ids, row_cap)
+    if short_ids is None:
         raise ValueError(
             f"edit_distance_pairs: >{row_cap} strings shorter than "
             f"{short_max + 1} chars (row budget {max_short_rows}, pair "
             f"budget {max_short_pairs} ≈ {pair_rows} rows) — the "
             "short-string cross tier would blow up; raise q, pre-filter "
             "trivial strings, or raise the budgets")
-    if probe >= 2:
-        sa = shorts.select(F.col("__id").alias("id_a"))
-        sb = shorts.select(F.col("__id").alias("id_b"))
+    if short_ids.num_rows >= 2:
+        # both sides from the probed ids: s is not evaluated again
+        sid = local_relation(df.sparkSession, short_ids, ids.schema)
+        sa = sid.select(F.col("__id").alias("id_a"))
+        sb = sid.select(F.col("__id").alias("id_b"))
         short_pairs = (
             sa.crossJoin(F.broadcast(sb))
             .filter(F.col("id_a") < F.col("id_b"))

@@ -31,15 +31,18 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from ..geom import kernels as K
 from ..geom import vec as Vec
 from ..geom.wkb import from_wkb
 from ..functions import scalar as S
-from ..runtime import probe_limit_collect
+from ..runtime import probe_arrow
 
 # predicate name → (kernel, needs_swap_for_bulk)
 _KERNELS = {
@@ -280,6 +283,11 @@ def pred_pairs(pred: str, avals, bvals, swap: bool = False) -> np.ndarray:
     return out
 
 
+def _geom_bytes(table: pa.Table, geom: str) -> int:
+    """Total WKB bytes of a probed build side's geometry column."""
+    return pc.sum(pc.binary_length(table.column(geom))).as_py() or 0
+
+
 def _pred_udf(pred: str, swap: bool = False):
     @F.pandas_udf(T.BooleanType())
     def f(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -313,27 +321,19 @@ def st_join(
     if overlap:
         raise ValueError(f"column name collision between sides: {sorted(overlap)}")
 
-    # small right side → broadcast path (prepared-geometry analog).
-    # Probe with limit(threshold+1): a too-big right side stops after the
-    # first threshold+1 rows instead of a full count+sum evaluation of the
-    # whole right plan (expensive for derived/unioned inputs); byte budget
-    # is checked on the sampled rows, which double as the build side — a
-    # 200k-row side of huge polygons is still never broadcast.
+    # small right side → broadcast path (prepared-geometry analog). The
+    # bounded probe stops a too-big right side after threshold+1 rows (no
+    # full count of a derived plan); the byte budget is checked on the
+    # probed table, which doubles as the build side.
     if broadcast_threshold > 0:
-        try:
-            sample = probe_limit_collect(right, broadcast_threshold + 1)
-        except Exception:
-            sample = None
-        if sample is not None and len(sample) <= broadcast_threshold:
-            rgi = right.columns.index(right_geom)
-            geom_bytes = sum(
-                len(r[rgi]) for r in sample if r[rgi] is not None
+        table = probe_arrow(right, broadcast_threshold)
+        if (table is not None and _geom_bytes(table, right_geom)
+                <= broadcast_byte_budget):
+            return st_join_broadcast(
+                left, right, pred, left_geom, right_geom,
+                _prefetched_rows=ArrowTableToRowsConversion.convert(
+                    table, right.schema),
             )
-            if geom_bytes <= broadcast_byte_budget:
-                return st_join_broadcast(
-                    left, right, pred, left_geom, right_geom,
-                    _prefetched_rows=sample,
-                )
 
     L = _with_bbox(left, left_geom, "__bbox")
     R = _with_bbox(right, right_geom, "__bbox")
@@ -644,17 +644,13 @@ def st_join_points(
     if overlap:
         raise ValueError(f"column name collision between sides: {sorted(overlap)}")
 
-    # Broadcast guard, same shape as st_join's: a limit(threshold+1) probe
-    # stops scanning after threshold+1 rows (no full count of a derived
-    # right plan), and the sampled rows double as the build side. An
+    # Broadcast guard, same shape as st_join's: one bounded probe stops
+    # scanning after threshold+1 rows (no full count of a derived right
+    # plan), and the probed table doubles as the build side. An
     # over-budget right side redirects to the grid tier (st_join) instead
     # of OOMing the driver/executors with an unguarded collect.
-    right_rows = probe_limit_collect(right, broadcast_threshold + 1)
-    geom_bytes = sum(
-        len(r[right_geom]) for r in right_rows if r[right_geom] is not None
-    )
-    if (len(right_rows) > broadcast_threshold
-            or geom_bytes > broadcast_byte_budget):
+    table = probe_arrow(right, broadcast_threshold)
+    if table is None or _geom_bytes(table, right_geom) > broadcast_byte_budget:
         raise ValueError(
             f"st_join_points: right side exceeds the broadcast budget "
             f"(>{broadcast_threshold} rows or >{broadcast_byte_budget >> 20}"
@@ -663,9 +659,8 @@ def st_join_points(
     right_cols = right.columns
     geoms = []
     bounds = []
-    for r in right_rows:
-        b = r[right_geom]
-        g = from_wkb(bytes(b)) if b is not None else None
+    for b in table.column(right_geom).to_pylist():
+        g = from_wkb(b) if b is not None else None
         geoms.append(g)
         bd = g.bounds() if g is not None else None
         bounds.append(bd if bd else (np.nan, np.nan, np.nan, np.nan))
@@ -680,14 +675,14 @@ def st_join_points(
     if geoms and all(bx is not None for bx in boxes):
         from ..sources.tables import local_relation
 
-        ss = left.sparkSession
-        rows2 = [tuple(r) + tuple(bx) for r, bx in zip(right_rows, boxes)]
+        box_cols = ("__bx0", "__by0", "__bx1", "__by1")
+        for c, vals in zip(box_cols, zip(*boxes)):
+            table = table.append_column(c, pa.array(vals, pa.float64()))
         schema2 = T.StructType(
             list(right.schema.fields)
-            + [T.StructField(c, T.DoubleType()) for c in
-               ("__bx0", "__by0", "__bx1", "__by1")]
+            + [T.StructField(c, T.DoubleType()) for c in box_cols]
         )
-        bdf = local_relation(ss, rows2, schema2)
+        bdf = local_relation(left.sparkSession, table, schema2)
         px, py = F.col(x), F.col(y)
         if pred == "within":
             cond = (
@@ -702,12 +697,14 @@ def st_join_points(
         return (
             left.crossJoin(F.broadcast(bdf))
             .filter(cond)
-            .drop("__bx0", "__by0", "__bx1", "__by1")
+            .drop(*box_cols)
         )
 
     sc = left.sparkSession.sparkContext
-    bc = sc.broadcast({"rows": [tuple(r) for r in right_rows],
-                       "geoms": geoms, "bounds": bounds})
+    bc = sc.broadcast({
+        "rows": ArrowTableToRowsConversion.convert(
+            table, right.schema, return_as_tuples=True),
+        "geoms": geoms, "bounds": bounds})
 
     out_schema = T.StructType(list(left.schema.fields) + list(right.schema.fields))
     lcols = left.columns

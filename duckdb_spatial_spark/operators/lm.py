@@ -30,6 +30,7 @@ from typing import List, Optional, Tuple
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime import probe_arrow
 from ..sources.tables import local_relation
 
 __all__ = [
@@ -132,24 +133,17 @@ def ngram_lm_train(
         _map_unk(_map_unk(pairs, vocab, "w1"), vocab, "w2")
         .groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     )
-    # the bigram table is bounded by observed pairs over a V+1 alphabet,
-    # but at vocab_size=10k that can still be ~1e8 rows — far too many to
-    # collect as driver tuples. Probe with limit(cap+1).collect(): ONE job
-    # decides the path AND already holds the rows on the small side (a
-    # separate count() pass paid the whole aggregation twice). The plan is
-    # persisted LAZILY first: a bare limit-probe on an aggregate re-runs
-    # the whole aggregation per CollectLimit partition wave (measured
-    # 4.3 s vs 1.7 s elsewhere in this repo); with the cache in place the
-    # first wave fills it and later waves — and the over-cap
-    # localCheckpoint — read cached partitions. Large tables materialize
-    # DISTRIBUTED (localCheckpoint severs the lineage so score-time use
-    # doesn't re-run the corpus pass).
+    # the bigram table can reach ~1e8 rows at vocab_size=10k. ONE bounded
+    # probe decides the path AND holds the table on the small side. The
+    # lazy persist serves only the over-cap side: the probe job fills the
+    # cache, and the localCheckpoint that materializes a large table
+    # DISTRIBUTED (severing the corpus-pass lineage) reads it.
     cap = 200_000
     bi_plan = bi_plan.persist()
     try:
-        probe = bi_plan.limit(cap + 1).collect()
-        if len(probe) <= cap:
-            bi = local_relation(spark, probe, "w1 string, w2 string, c12 long")
+        table = probe_arrow(bi_plan, cap)
+        if table is not None:
+            bi = local_relation(spark, table, "w1 string, w2 string, c12 long")
         else:
             bi = bi_plan.localCheckpoint(eager=True)
     finally:

@@ -32,6 +32,7 @@ from typing import Dict, Iterable, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..runtime import probe_arrow
 from ..sources.generate import _uniform01_portable, portable_uniform_sql
 
 __all__ = [
@@ -181,18 +182,17 @@ def decontaminate(
                 / -_math.log(bloom_fpp)),
             LITERAL_BLOOM_MAX_BITS // 8,
         ))
-        # coalesce(1): one CollectLimit wave (limit-collect on an
-        # aggregate otherwise re-runs reduce partitions wave by wave)
-        head = probe.coalesce(1).limit(cap_items + 1).collect()
-        if len(head) <= cap_items:
+        head = probe_arrow(probe, cap_items)
+        if head is not None:
             # bounded benchmark (the common decontamination case): the
-            # ONE collect the exact broadcast join needs anyway also
+            # ONE probe the exact broadcast join needs anyway also
             # carries xxhash64 pairs, so the filter builds driver-side
             # and rides the plan as a pure-codegen literal — no count
             # job, no distributed build job, no Python worker at scan.
-            m_bits, k = bloom_size(max(len(head), 1), bloom_fpp)
+            m_bits, k = bloom_size(max(head.num_rows, 1), bloom_fpp)
             bit_words = build_bloom_bits_local(
-                [(r["__h1"], r["__h2"]) for r in head], m_bits, k)
+                zip(head.column("__h1").to_pylist(),
+                    head.column("__h2").to_pylist()), m_bits, k)
             hashed = exploded.select(
                 id_col, *carry, "gram",
                 F.xxhash64("gram").alias("__h1"),
@@ -201,7 +201,7 @@ def decontaminate(
             )
             # exact verification as a literal InSet (codegen hash-set
             # probe), with no join against the grams the driver holds
-            gram_set = [r["gram"] for r in head]
+            gram_set = head.column("gram").to_pylist()
             hit = (bloom_expr(bit_words, m_bits, k,
                               F.col("__h1"), F.col("__h2"))
                    & F.col("gram").isin(gram_set))

@@ -3,6 +3,9 @@ on Spark and its oracle_sql() on DuckDB at the same sf, compare row count,
 column names (sorted), and values (sorted rows, rounded floats).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
+
+A query name is a full ``queries()`` key (``q158_bfs_hops``) or its
+``qNN`` prefix (``q158``); a name that matches no query is an error.
 """
 from __future__ import annotations
 
@@ -16,14 +19,23 @@ import duckdb
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-SF = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 \
-    else "/root/testdata/sf0.01"
-ONLY = set(sys.argv[2:])
-
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings",
 ]
+
+
+def resolve_names(names, args):
+    """The ``queries()`` keys ``args`` name (all of ``names`` when
+    ``args`` is empty), in ``names`` order, and the args that name none.
+    An arg is a full key or a ``qNN`` prefix, the part before the first
+    ``_`` (perfbench's ``workloads.query_names`` rule)."""
+    if not args:
+        return list(names), []
+    by_prefix = {k.split("_", 1)[0]: k for k in names}
+    wanted = {a if a in names else by_prefix.get(a) for a in args}
+    unknown = [a for a in args if a not in names and a not in by_prefix]
+    return [k for k in names if k in wanted], unknown
 
 
 def norm(v):
@@ -70,6 +82,13 @@ def main():
 
     import __spark_entry__ as entry
 
+    sf = os.path.abspath(sys.argv[1]) if len(sys.argv) > 1 \
+        else "/root/testdata/sf0.01"
+    qs = entry.queries()
+    run, unknown = resolve_names(list(qs), sys.argv[2:])
+    if unknown:
+        sys.exit(f"no query named {', '.join(unknown)}")
+
     # Python workers start as `python -m pyspark.daemon` in the driver's
     # working directory, which comes first on their sys.path (before
     # PYTHONPATH): run from ROOT so they import this tree's package
@@ -86,17 +105,14 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
 
-    qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
-    for name, fn in qs.items():
-        if ONLY and name not in ONLY:
-            continue
+    for name in run:
         try:
-            df = fn(spark, SF)
+            df = qs[name](spark, sf)
             scols = df.columns
             srows = [tuple(r) for r in df.collect()]
         except Exception as e:
