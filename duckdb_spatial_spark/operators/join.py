@@ -13,9 +13,11 @@ replacement is:
   predicate via Arrow-batched kernel filter. Scales: the only shuffle is the
   equi-join on cell, AQE handles skewed cells, and cell size is chosen from
   a driver-side bbox sample.
-* **broadcast join** (``st_join_broadcast``): small build side collected +
-  broadcast, probe side streamed through ``mapInPandas`` with a grid-bucket
-  index and bulk vectorized point-in-polygon — the direct analog of the
+* **broadcast join** (``st_join_broadcast``): small build side probed to
+  the driver as one Arrow table and broadcast as it is; the probe side is
+  streamed through ``mapInArrow`` with a grid-bucket index and bulk
+  vectorized point-in-polygon, and each match is emitted as the left
+  batch's and the build table's Arrow rows — the direct analog of the
   reference's prepared-geometry constant path (geos_executor.hpp:28-105).
 
 ``st_join`` auto-dispatches to broadcast when the right side is small.
@@ -27,6 +29,7 @@ excludes it too, optimizer_rules.cpp:95).
 from __future__ import annotations
 
 import math
+import uuid
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
@@ -36,12 +39,12 @@ import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 from ..geom import kernels as K
 from ..geom import vec as Vec
 from ..geom.wkb import from_wkb
 from ..functions import scalar as S
+from .. import runtime
 from ..runtime import probe_arrow
 
 # predicate name → (kernel, needs_swap_for_bulk)
@@ -329,11 +332,8 @@ def st_join(
         table = probe_arrow(right, broadcast_threshold)
         if (table is not None and _geom_bytes(table, right_geom)
                 <= broadcast_byte_budget):
-            return st_join_broadcast(
-                left, right, pred, left_geom, right_geom,
-                _prefetched_rows=ArrowTableToRowsConversion.convert(
-                    table, right.schema),
-            )
+            return _broadcast(left, right.schema, table, right_geom,
+                              _geom_pairs(pred, left_geom, right_geom))
 
     L = _with_bbox(left, left_geom, "__bbox")
     R = _with_bbox(right, right_geom, "__bbox")
@@ -397,39 +397,181 @@ class _GridIndex:
         return out
 
 
-# executor-side build cache: token → (geoms, bounds, cell, index).
-# The build is broadcast as raw WKB tuples (never Python Geometry objects —
-# the driver neither decodes nor pickles geometry); each worker process
-# decodes and indexes once, keyed by a per-join token.
+# executor-side build cache: token → the decoded build side. The build is
+# broadcast as the probed Arrow table (the driver neither decodes nor
+# pickles geometry for it); each worker process decodes and indexes its
+# geometry column once, keyed by a per-join token.
 _BUILD_CACHE: Dict[str, tuple] = {}
 
 
-def _build_side(token: str, rows, geom_idx):
+def _decode(blobs) -> Tuple[list, np.ndarray]:
+    """The Geometry (None for a null blob) and the (n, 4) bounds (NaN for
+    a null or empty geometry) of each WKB blob."""
+    geoms = [from_wkb(b) if b is not None else None for b in blobs]
+    bounds = [(g.bounds() if g is not None else None) or (np.nan,) * 4
+              for g in geoms]
+    return geoms, np.asarray(bounds, dtype=np.float64).reshape(-1, 4)
+
+
+def _build_side(token: str, table: pa.Table, geom: str):
+    """(rows, geoms, bounds, index) of a broadcast build table: ``rows`` is
+    the table as one RecordBatch, its ``geom`` column decoded and
+    grid-indexed once per process and join token."""
     cached = _BUILD_CACHE.get(token)
     if cached is not None:
         return cached
-    geoms = []
-    bounds = []
-    for r in rows:
-        b = r[geom_idx]
-        g = from_wkb(bytes(b)) if b is not None else None
-        geoms.append(g)
-        bd = g.bounds() if g is not None else None
-        bounds.append(bd if bd else (np.nan, np.nan, np.nan, np.nan))
-    bounds = np.asarray(bounds, dtype=np.float64) if bounds else np.zeros((0, 4))
-    if len(bounds) and np.isfinite(bounds).any():
+    rows = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in table.columns], schema=table.schema)
+    geoms, bounds = _decode(rows.column(geom).to_pylist())
+    if np.isfinite(bounds).any():
         w = np.nanmax(bounds[:, 2]) - np.nanmin(bounds[:, 0])
         h = np.nanmax(bounds[:, 3]) - np.nanmin(bounds[:, 1])
-        ncell = max(1.0, math.sqrt(max(len(bounds), 1)))
+        ncell = max(1.0, math.sqrt(len(bounds)))
         cell = max(max(w, h) / ncell, 1e-9)
     else:
         cell = 1.0
-    idx = _GridIndex(bounds, cell)
-    out = (geoms, bounds, cell, idx)
+    out = (rows, geoms, bounds, _GridIndex(bounds, cell))
     if len(_BUILD_CACHE) > 8:
         _BUILD_CACHE.clear()
     _BUILD_CACHE[token] = out
     return out
+
+
+def _indices(parts: List[np.ndarray]) -> np.ndarray:
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+
+
+def _point_hits(pred: str, xs: np.ndarray, ys: np.ndarray, build):
+    """(li, rj): each probe point ``li`` and build row ``rj`` with
+    ``pred(point, geometry)`` — 'within' counts the interior only,
+    'intersects'/'coveredby' the boundary too — by one bulk
+    point-in-geometry call per candidate build geometry."""
+    _, geoms, bounds, idx = build
+    if len(geoms) <= 64:
+        # few build geometries: one vectorized bbox mask per geometry
+        # beats per-point bucket lookups outright
+        cand = {}
+        for j, (x0, y0, x1, y1) in enumerate(bounds):
+            if np.isfinite(x0):
+                m = (xs >= x0) & (xs <= x1) & (ys >= y0) & (ys <= y1)
+                if m.any():
+                    cand[j] = np.flatnonzero(m)
+    else:
+        # bucket the points by grid cell once
+        lists: Dict[int, List[int]] = {}
+        ok = np.flatnonzero(np.isfinite(xs) & np.isfinite(ys))
+        inv = 1.0 / idx.cell
+        cx = np.floor(xs[ok] * inv).astype(np.int64).tolist()
+        cy = np.floor(ys[ok] * inv).astype(np.int64).tolist()
+        for k, key in zip(ok.tolist(), zip(cx, cy)):
+            for j in idx.buckets.get(key, ()):
+                lists.setdefault(j, []).append(k)
+        cand = {j: np.asarray(ks) for j, ks in lists.items()}
+    li, rj = [], []
+    for j, ks in cand.items():
+        loc = K.points_in_geometry_bulk(xs[ks], ys[ks], geoms[j])
+        hit = ks[loc == 2 if pred == "within" else loc >= 1]
+        li.append(hit)
+        rj.append(np.full(len(hit), j))
+    return _indices(li), _indices(rj)
+
+
+def _geom_pairs(pred: str, left_geom: str, right_geom: str):
+    """The probe of ``st_join_broadcast``: (li, rj) of a left batch's WKB
+    column against the build side."""
+    kern = _KERNELS[pred]
+    pip = pred in ("within", "coveredby", "intersects")
+
+    def pairs(batch: pa.RecordBatch, build):
+        rows, geoms, bounds, idx = build
+        lseries = batch.column(left_geom).to_pandas()
+        mat = Vec.fixed_matrix(lseries)
+        pts = Vec.decode_points(mat) if mat is not None and pip else None
+        if pts is not None:
+            # uniform point batch: skip Geometry objects entirely
+            return _point_hits(pred, pts[0], pts[1], build)
+        bds = _matrix_bounds(mat) if mat is not None else None
+        if bds is not None:
+            # uniform NON-point batch (all rects / fixed-n lines /
+            # same-ring polygons): bboxes come straight off the WKB
+            # matrix, the grid index yields candidate pairs, and ONE
+            # pred_pairs call evaluates them — rect-rect groups go
+            # fully vectorized, repeated build blobs parse once via
+            # its cache. This was the 100k-rect probe hot path that
+            # previously built a Geometry per row + ran a python
+            # kernel per candidate (~35× slower, scale_probe).
+            fin = np.flatnonzero(np.isfinite(bds[:, 0]))
+            if len(geoms) <= 64:
+                # few builds: one vectorized bbox-overlap mask per
+                # build beats per-probe bucket lookups outright
+                li, rj = [], []
+                b = bds[fin]
+                for j, (x0, y0, x1, y1) in enumerate(bounds):
+                    if np.isfinite(x0):
+                        hits = fin[(b[:, 0] <= x1) & (b[:, 2] >= x0)
+                                   & (b[:, 1] <= y1) & (b[:, 3] >= y0)]
+                        li.append(hits)
+                        rj.append(np.full(len(hits), j))
+                li, rj = _indices(li), _indices(rj)
+            else:
+                ij = [(i, j) for i in fin.tolist() for j in idx.query(*bds[i])]
+                li = np.asarray([i for i, _ in ij], dtype=np.int64)
+                rj = np.asarray([j for _, j in ij], dtype=np.int64)
+            ok = pred_pairs(
+                pred, lseries.to_numpy(dtype=object)[li],
+                rows.column(right_geom).take(rj).to_numpy(
+                    zero_copy_only=False))
+            return li[ok], rj[ok]
+        # mixed shapes or nulls: one Geometry per row; single non-empty
+        # points still take the bulk path
+        li, rj, pi, pxy = [], [], [], []
+        for i, b in enumerate(lseries):
+            g = from_wkb(b) if b is not None else None
+            if g is None or g.is_empty():
+                continue
+            if pip and g.type_id == 1:
+                pi.append(i)
+                pxy.append((float(g.coords[0]), float(g.coords[1])))
+                continue
+            for j in idx.query(*g.bounds()):
+                rg = geoms[j]
+                if rg is not None and kern(g, rg):
+                    li.append(i)
+                    rj.append(j)
+        if pi:
+            xy = np.asarray(pxy)
+            k, j = _point_hits(pred, xy[:, 0], xy[:, 1], build)
+            li.extend(np.asarray(pi)[k].tolist())
+            rj.extend(j.tolist())
+        return np.asarray(li, dtype=np.int64), np.asarray(rj, dtype=np.int64)
+
+    return pairs
+
+
+def _broadcast(left: DataFrame, right_schema: T.StructType, table: pa.Table,
+               right_geom: str, pairs) -> DataFrame:
+    """``left`` joined to a probed build table through ``mapInArrow``.
+    The table is broadcast as it is; per left batch ``pairs(batch,
+    build)`` gives the (li, rj) index arrays of the matches, emitted as
+    ``batch.take(li)`` beside the build rows' ``take(rj)``, so both sides'
+    columns pass through in Arrow, never decoded to Python values."""
+    bc = left.sparkSession.sparkContext.broadcast(
+        (uuid.uuid4().hex, table, right_geom))
+    out_schema = T.StructType(list(left.schema.fields) + list(right_schema.fields))
+    names = out_schema.fieldNames()
+
+    def probe(batches):
+        build = _build_side(*bc.value)
+        for batch in batches:
+            if not batch.num_rows:
+                continue
+            li, rj = pairs(batch, build)
+            if len(li):
+                yield pa.RecordBatch.from_arrays(
+                    batch.take(li).columns + build[0].take(rj).columns,
+                    names=names)
+
+    return left.mapInArrow(probe, out_schema)
 
 
 def st_join_broadcast(
@@ -438,182 +580,21 @@ def st_join_broadcast(
     predicate: str = "intersects",
     left_geom: str = "geom",
     right_geom: str = "geom",
-    _prefetched_rows=None,
 ) -> DataFrame:
-    """Broadcast spatial join: build side (right) collected to the driver as
-    raw WKB rows, shipped via Spark broadcast, decoded + grid-indexed once
-    per worker, probed per Arrow batch. Point probes against polygon builds
-    take the bulk-vectorized PiP path. ``_prefetched_rows`` lets st_join's
-    size probe reuse its sampled rows instead of collecting twice."""
-    import uuid
-
+    """Broadcast spatial join: the build side (right, at most
+    ``runtime.LOCAL_ROW_LIMIT`` rows) is probed to the driver as one Arrow
+    table, broadcast as it is, decoded + grid-indexed once per worker and
+    probed per Arrow batch of ``left``. Point probes against polygon
+    builds take the bulk-vectorized PiP path."""
     pred = _norm_pred(predicate)
-    kern = _KERNELS[pred]
-
-    right_rows = [
-        tuple(r)
-        for r in (_prefetched_rows if _prefetched_rows is not None else right.collect())
-    ]
-    right_cols = right.columns
-    rgi = right_cols.index(right_geom)
-    token = uuid.uuid4().hex
-
-    sc = left.sparkSession.sparkContext
-    bc = sc.broadcast({"rows": right_rows, "token": token, "rgi": rgi})
-
-    out_schema = T.StructType(list(left.schema.fields) + list(right.schema.fields))
-    left_cols = left.columns
-    lgi = left_cols.index(left_geom)
-    pip_mode = pred in ("within", "coveredby", "intersects", "covers", "contains")
-
-    def probe(batches):
-        data = bc.value
-        rrows = data["rows"]
-        rgeoms, bnds, cell, idx = _build_side(data["token"], rrows, data["rgi"])
-        data_bounds = bnds
-        empty_right = {c: [] for c in right_cols}
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            out_left_idx: List[int] = []
-            out_right_idx: List[int] = []
-            pts_i: List[int] = []
-            pts_xy: List[Tuple[float, float]] = []
-
-            lgeoms = None
-            lseries = pdf.iloc[:, lgi]
-            mat = Vec.fixed_matrix(lseries)
-            pts = (Vec.decode_points(mat)
-                   if mat is not None and pip_mode else None)
-            handled = pts is not None
-            if pts is not None:
-                # uniform point batch: skip Geometry objects entirely
-                pts_i = list(range(len(pdf)))
-                pts_xy = list(zip(pts[0].tolist(), pts[1].tolist()))
-            elif mat is not None:
-                # uniform NON-point batch (all rects / fixed-n lines /
-                # same-ring polygons): bboxes come straight off the WKB
-                # matrix, the grid index yields candidate pairs, and ONE
-                # pred_pairs call evaluates them — rect-rect groups go
-                # fully vectorized, repeated build blobs parse once via
-                # its cache. This was the 100k-rect probe hot path that
-                # previously built a Geometry per row + ran a python
-                # kernel per candidate (~35× slower, scale_probe).
-                bds = _matrix_bounds(mat)
-                if bds is not None:
-                    pair_i: List[int] = []
-                    pair_j: List[int] = []
-                    if len(rgeoms) <= 64:
-                        # few builds: one vectorized bbox-overlap mask per
-                        # build beats per-probe bucket lookups outright
-                        fin = np.isfinite(bds[:, 0])
-                        for j in range(len(rgeoms)):
-                            bj = data_bounds[j]
-                            if not np.isfinite(bj[0]):
-                                continue
-                            m = (fin
-                                 & (bds[:, 0] <= bj[2]) & (bds[:, 2] >= bj[0])
-                                 & (bds[:, 1] <= bj[3]) & (bds[:, 3] >= bj[1]))
-                            hits = np.flatnonzero(m)
-                            pair_i.extend(hits.tolist())
-                            pair_j.extend([j] * len(hits))
-                    else:
-                        for i in np.flatnonzero(np.isfinite(bds[:, 0])):
-                            for j in idx.query(bds[i, 0], bds[i, 1],
-                                               bds[i, 2], bds[i, 3]):
-                                pair_i.append(int(i))
-                                pair_j.append(j)
-                    if pair_i:
-                        av = lseries.to_numpy(dtype=object)[
-                            np.asarray(pair_i)]
-                        rgi_ = data["rgi"]
-                        bv = np.asarray(
-                            [rrows[j][rgi_] for j in pair_j], dtype=object)
-                        ok = pred_pairs(pred, av, bv)
-                        ia = np.asarray(pair_i)
-                        ja = np.asarray(pair_j)
-                        out_left_idx.extend(ia[ok].tolist())
-                        out_right_idx.extend(ja[ok].tolist())
-                    handled = True
-            if not handled:
-                lgeoms = [
-                    from_wkb(b) if b is not None else None for b in lseries
-                ]
-                # classify probe rows: single non-empty points → bulk path
-                for i, g in enumerate(lgeoms):
-                    if g is None or g.is_empty():
-                        continue
-                    if pip_mode and g.type_id == 1:
-                        pts_i.append(i)
-                        pts_xy.append((float(g.coords[0]), float(g.coords[1])))
-                        continue
-                    bd = g.bounds()
-                    for j in idx.query(*bd):
-                        rg = rgeoms[j]
-                        if rg is not None and kern(g, rg):
-                            out_left_idx.append(i)
-                            out_right_idx.append(j)
-            if pts_xy:
-                xs = np.asarray([p[0] for p in pts_xy])
-                ys = np.asarray([p[1] for p in pts_xy])
-                cand: Dict[int, np.ndarray] = {}
-                if len(rgeoms) <= 64:
-                    # few build geometries: one vectorized bbox mask per
-                    # geometry beats per-point bucket lookups outright
-                    bnd = data_bounds
-                    for j, rg in enumerate(rgeoms):
-                        if rg is None or not np.isfinite(bnd[j, 0]):
-                            continue
-                        m = (
-                            (xs >= bnd[j, 0]) & (xs <= bnd[j, 2])
-                            & (ys >= bnd[j, 1]) & (ys <= bnd[j, 3])
-                        )
-                        if m.any():
-                            cand[j] = np.flatnonzero(m)
-                else:
-                    # bucket points by grid cell once, then per candidate
-                    # polygon run the vectorized locate
-                    lists: Dict[int, List[int]] = {}
-                    inv = 1.0 / cell
-                    for k, (px, py) in enumerate(pts_xy):
-                        for j in idx.buckets.get(
-                            (int(math.floor(px * inv)), int(math.floor(py * inv))), ()
-                        ):
-                            lists.setdefault(j, []).append(k)
-                    cand = {j: np.asarray(ks) for j, ks in lists.items()}
-                for j, ks in cand.items():
-                    rg = rgeoms[j]
-                    if rg is None:
-                        continue
-                    karr = np.asarray(ks)
-                    loc = K.points_in_geometry_bulk(xs[karr], ys[karr], rg)
-                    if pred in ("within", "coveredby"):
-                        want = loc == 2 if pred == "within" else loc >= 1
-                    elif pred == "intersects":
-                        want = loc >= 1
-                    elif pred in ("covers", "contains"):
-                        # point covers/contains geometry — rare; exact check
-                        want = np.zeros(len(karr), dtype=bool)
-                        for m, kk in enumerate(karr):
-                            i = pts_i[kk]
-                            g = lgeoms[i] if lgeoms is not None else from_wkb(lseries.iloc[i])
-                            want[m] = kern(g, rg)
-                    hit = karr[want]
-                    if len(hit):
-                        pts_i_arr = np.asarray(pts_i)
-                        out_left_idx.extend(pts_i_arr[hit].tolist())
-                        out_right_idx.extend([j] * len(hit))
-
-            if not out_left_idx:
-                continue
-            lpart = pdf.iloc[out_left_idx].reset_index(drop=True)
-            rpart = pd.DataFrame(
-                [rrows[j] for j in out_right_idx], columns=right_cols
-            )
-            yield pd.concat([lpart, rpart], axis=1)
-
-    return left.mapInPandas(probe, schema=out_schema)
+    table = probe_arrow(right)
+    if table is None:
+        raise ValueError(
+            f"st_join_broadcast: right side exceeds the broadcast budget "
+            f"(>{runtime.LOCAL_ROW_LIMIT} rows) — use st_join "
+            "(grid-partitioned tier) for build sides this large")
+    return _broadcast(left, right.schema, table, right_geom,
+                      _geom_pairs(pred, left_geom, right_geom))
 
 
 def st_join_points(
@@ -656,15 +637,7 @@ def st_join_points(
             f"(>{broadcast_threshold} rows or >{broadcast_byte_budget >> 20}"
             " MiB of geometry) — use st_join (grid-partitioned tier) for "
             "build sides this large, or raise the thresholds explicitly")
-    right_cols = right.columns
-    geoms = []
-    bounds = []
-    for b in table.column(right_geom).to_pylist():
-        g = from_wkb(b) if b is not None else None
-        geoms.append(g)
-        bd = g.bounds() if g is not None else None
-        bounds.append(bd if bd else (np.nan, np.nan, np.nan, np.nan))
-    bounds = np.asarray(bounds, dtype=np.float64) if bounds else np.zeros((0, 4))
+    geoms, _ = _decode(table.column(right_geom).to_pylist())
 
     # all-rectangle build side → pure col-expr broadcast nested-loop plan:
     # zero Python stages, whole-stage codegen end to end (the reference's
@@ -700,47 +673,11 @@ def st_join_points(
             .drop(*box_cols)
         )
 
-    sc = left.sparkSession.sparkContext
-    bc = sc.broadcast({
-        "rows": ArrowTableToRowsConversion.convert(
-            table, right.schema, return_as_tuples=True),
-        "geoms": geoms, "bounds": bounds})
+    def doubles(batch, name):
+        return batch.column(name).cast(pa.float64()).to_numpy(
+            zero_copy_only=False)
 
-    out_schema = T.StructType(list(left.schema.fields) + list(right.schema.fields))
-    lcols = left.columns
-    xi, yi = lcols.index(x), lcols.index(y)
-
-    def probe(batches):
-        data = bc.value
-        rgeoms, bnd, rrows = data["geoms"], data["bounds"], data["rows"]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            xs = pdf.iloc[:, xi].to_numpy(dtype=np.float64, copy=False)
-            ys = pdf.iloc[:, yi].to_numpy(dtype=np.float64, copy=False)
-            out_l: List[np.ndarray] = []
-            out_r: List[int] = []
-            for j, rg in enumerate(rgeoms):
-                if rg is None or not np.isfinite(bnd[j, 0]):
-                    continue
-                m = (
-                    (xs >= bnd[j, 0]) & (xs <= bnd[j, 2])
-                    & (ys >= bnd[j, 1]) & (ys <= bnd[j, 3])
-                )
-                if not m.any():
-                    continue
-                karr = np.flatnonzero(m)
-                loc = K.points_in_geometry_bulk(xs[karr], ys[karr], rg)
-                want = loc == 2 if pred == "within" else loc >= 1
-                hit = karr[want]
-                if len(hit):
-                    out_l.append(hit)
-                    out_r.extend([j] * len(hit))
-            if not out_r:
-                continue
-            li = np.concatenate(out_l)
-            lpart = pdf.iloc[li].reset_index(drop=True)
-            rpart = pd.DataFrame([rrows[j] for j in out_r], columns=right_cols)
-            yield pd.concat([lpart, rpart], axis=1)
-
-    return left.mapInPandas(probe, schema=out_schema)
+    return _broadcast(
+        left, right.schema, table, right_geom,
+        lambda batch, build: _point_hits(
+            pred, doubles(batch, x), doubles(batch, y), build))

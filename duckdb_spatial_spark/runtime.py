@@ -77,9 +77,9 @@ def adaptive_partitions(df: DataFrame, target_bytes: int = 64 << 20) -> int:
 def probe_arrow(df: DataFrame, limit: Optional[int] = None):
     """``df`` as a ``pyarrow.Table`` when it has at most ``limit`` rows
     (default :data:`LOCAL_ROW_LIMIT`), else None. One job, and no value
-    passes through a Python ``Row``; a caller that needs the values
-    ``collect()`` returns converts the table with
-    ``pyspark.sql.conversion.ArrowTableToRowsConversion.convert``.
+    passes through a Python ``Row``; callers keep the values in Arrow
+    (the broadcast joins ship the table itself as their build side and
+    emit its rows with ``take``).
 
     ``limit(limit + 1).toArrow()`` plans a CollectLimit whose execution
     runs the limit over every partition at once (no escalation waves of

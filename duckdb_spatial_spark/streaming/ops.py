@@ -5,7 +5,7 @@ has no streaming; this is the Spark-native extension the model classification
 Every scalar ST_* function is stateless → usable in a stream unchanged.
 ``ST_Extent_Agg`` decomposes into min/max → watermark-compatible windowed
 aggregation with no custom state store. Stream-static spatial joins reuse
-the broadcast probe (mapInPandas is streaming-safe); bespoke state goes
+the broadcast probe (mapInArrow is streaming-safe); bespoke state goes
 through ``applyInPandasWithState``. A bounded stream is run to its end and
 read back with :func:`drain`.
 """
@@ -103,9 +103,10 @@ def streaming_spatial_join(
     left_geom: str = "geom",
     right_geom: str = "geom",
 ) -> DataFrame:
-    """Stream-static spatial join: the static (dimension) side is collected
-    and broadcast once, each micro-batch probes it through the same
-    mapInPandas grid/STR probe as the batch ``st_join_broadcast`` — the
+    """Stream-static spatial join: the static (dimension) side is probed
+    to the driver as one Arrow table (at most ``runtime.LOCAL_ROW_LIMIT``
+    rows) and broadcast once, each micro-batch probes it through the same
+    mapInArrow grid probe as the batch ``st_join_broadcast`` — the
     streaming analog of the reference's prepared-geometry constant path.
     Works in append mode with no state store (per-row enrichment)."""
     from ..operators.join import st_join_broadcast

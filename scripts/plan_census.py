@@ -35,6 +35,10 @@ with driver-side fits) still yield their final frame's plan; their
 internal jobs run — expect a several-minute wall at sf0.01.
 
 Usage: python scripts/plan_census.py [sf_dir] [query ...]
+
+The sf dir is the argument with a path separator in it. A query is a
+full ``queries()`` key or its ``qNN`` prefix (``check_oracle``'s rule); a
+name that matches no query is an error.
 """
 from __future__ import annotations
 
@@ -43,11 +47,9 @@ import os
 import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from check_oracle import resolve_names
 
-SF = next((a for a in sys.argv[1:] if os.path.sep in a),
-          "/root/testdata/sf0.01")
-ONLY = {a for a in sys.argv[1:] if os.path.sep not in a}
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _rdd_scans(node) -> list:
@@ -71,6 +73,14 @@ def main() -> None:
 
     import __spark_entry__ as entry
 
+    args = sys.argv[1:]
+    sf = next((a for a in args if os.path.sep in a), "/root/testdata/sf0.01")
+    qs = entry.queries()
+    run, unknown = resolve_names(
+        list(qs), [a for a in args if os.path.sep not in a])
+    if unknown:
+        sys.exit(f"no query named {', '.join(unknown)}")
+
     spark = (
         SparkSession.builder.master("local[8]")
         .config("spark.sql.adaptive.enabled", "false")
@@ -86,13 +96,11 @@ def main() -> None:
     cache = spark._jsparkSession.sharedState().cacheManager()
     cart, bep, bnlj, rows_scan, ckpt_scan, errs = [], [], {}, {}, {}, []
     conf_changed, view_left, cache_left = [], [], []
-    for name, fn in entry.queries().items():
-        if ONLY and name not in ONLY:
-            continue
+    for name in run:
         before = dict(spark.conf.getAll)
         views = _temp_views(spark)
         try:
-            df = fn(spark, SF)
+            df = qs[name](spark, sf)
             qe = df._jdf.queryExecution()
             plan = qe.explainString(mode)
             scans = _rdd_scans(qe.executedPlan())
@@ -124,7 +132,7 @@ def main() -> None:
         if len(scans) > n:
             ckpt_scan[name] = len(scans) - n
     print(json.dumps({
-        "sf": SF,
+        "sf": sf,
         "cartesian_product": cart,
         "batch_eval_python": bep,
         "broadcast_nested_loop": bnlj,

@@ -263,3 +263,100 @@ def test_st_join_points_broadcast_guard(spark):
     with pytest.raises(ValueError, match="st_join"):
         st_join_points(pts, zones, "within", "x", "y", "zone",
                        broadcast_byte_budget=1024)
+
+
+def test_st_join_broadcast_bounded_build_side(spark, pts_and_zones,
+                                              monkeypatch):
+    """The build side is read through the bounded probe: above
+    runtime.LOCAL_ROW_LIMIT rows it raises with a redirect to the grid
+    tier instead of collecting it all onto the driver."""
+    from duckdb_spatial_spark import runtime
+
+    pts_df, zones_df, _ = pts_and_zones
+    monkeypatch.setattr(runtime, "LOCAL_ROW_LIMIT", 1)
+    with pytest.raises(ValueError, match=r"st_join_broadcast: .*>1 rows.*"
+                                         r"use st_join"):
+        st_join_broadcast(pts_df, zones_df, "within", "pt", "zone")
+
+
+def _pair_set(df, a="pid", b="zid"):
+    return sorted((r[a], r[b]) for r in df.collect())
+
+
+def test_broadcast_build_side_with_null_and_no_rows(spark, pts_and_zones):
+    """A null build geometry matches nothing, and a 0-row build side gives
+    a 0-row result of the joined schema, on every broadcast tier."""
+    from duckdb_spatial_spark.operators.join import st_join_points
+
+    pts_df, zones_df, _ = pts_and_zones
+    tri = spark.createDataFrame(
+        [(100, "t", "POLYGON ((0 0, 60 0, 0 60, 0 0))"),
+         (101, "null", None)], "zid long, zname string, zwkt string",
+    ).withColumn("zone", ST.st_geomfromtext("zwkt"))
+    for zones in (zones_df.unionByName(tri), tri):
+        grid = _pair_set(st_join(pts_df, zones, "within", "pt", "zone",
+                                 broadcast_threshold=0))
+        assert grid and all(z != 101 for _, z in grid)
+        for tier in (st_join(pts_df, zones, "within", "pt", "zone"),
+                     st_join_broadcast(pts_df, zones, "within", "pt", "zone"),
+                     st_join_points(pts_df, zones, "within", "x", "y", "zone")):
+            assert _pair_set(tier) == grid
+
+    empty = zones_df.filter("zid < 0")
+    for tier in (st_join(pts_df, empty, "within", "pt", "zone"),
+                 st_join_broadcast(pts_df, empty, "within", "pt", "zone"),
+                 st_join_points(pts_df, empty, "within", "x", "y", "zone")):
+        assert tier.collect() == []
+        assert tier.columns == pts_df.columns + empty.columns
+
+
+def test_broadcast_left_batches_without_hits_and_mixed_shapes(spark):
+    """Left batches with no match emit nothing; a left batch of mixed WKB
+    lengths (points, lines, polygons, a null) takes the per-row path and
+    agrees with the grid tier and the brute-force oracle."""
+    wkts = [f"POINT ({500 + i} {500 + i})" for i in range(40)]  # no hits
+    wkts += [
+        "POINT (5 5)", "POINT (30 30)", "POINT (25 10)",
+        "LINESTRING (1 1, 40 40)", "LINESTRING (60 60, 70 70, 80 60)",
+        "POLYGON ((20 20, 30 20, 30 30, 20 30, 20 20))",
+        "POLYGON ((90 90, 95 90, 95 95, 90 90))", None,
+    ]
+    left = spark.createDataFrame(
+        list(enumerate(wkts)), "pid long, lwkt string", verifySchema=False,
+    ).coalesce(1).withColumn("lg", ST.st_geomfromtext("lwkt"))
+    zones_df = spark.createDataFrame(
+        _zones_wkt(), ["zid", "zname", "zwkt"]
+    ).withColumn("zone", ST.st_geomfromtext("zwkt"))
+    want = sorted(
+        (pid, z[0]) for pid, w in enumerate(wkts) if w is not None
+        for z in _zones_wkt() if K.intersects(from_wkt(w), from_wkt(z[2])))
+    assert len(want) > 8
+    grid = st_join(left, zones_df, "intersects", "lg", "zone",
+                   broadcast_threshold=0)
+    assert _pair_set(grid) == want
+    assert _pair_set(st_join_broadcast(
+        left, zones_df, "intersects", "lg", "zone")) == want
+    # the 40 far points alone: every batch is hit-free
+    far = left.filter("pid < 40")
+    assert st_join_broadcast(far, zones_df, "intersects", "lg",
+                             "zone").collect() == []
+
+
+def test_st_join_points_many_build_geometries(spark, pts_and_zones):
+    """Over 64 non-rectangle build geometries the point probe buckets the
+    points by grid cell; it returns the grid tier's pairs."""
+    from duckdb_spatial_spark.operators.join import st_join_points
+
+    pts_df, _, _ = pts_and_zones
+    tris = spark.createDataFrame(
+        [(i * 10 + j, f"POLYGON (({i * 10} {j * 10}, {i * 10 + 10} {j * 10},"
+                      f" {i * 10} {j * 10 + 10}, {i * 10} {j * 10}))")
+         for i in range(10) for j in range(10)], "zid long, zwkt string",
+    ).withColumn("zone", ST.st_geomfromtext("zwkt"))
+    grid = _pair_set(st_join(pts_df, tris, "within", "pt", "zone",
+                             broadcast_threshold=0))
+    assert len(grid) > 150
+    assert _pair_set(st_join_points(
+        pts_df, tris, "within", "x", "y", "zone")) == grid
+    assert _pair_set(st_join_broadcast(
+        pts_df, tris, "within", "pt", "zone")) == grid

@@ -69,3 +69,31 @@ def test_no_second_probe_mechanism():
                          "spark.sql.limit.initialNumPartitions")
             if word in p.read_text()]
     assert hits == []
+
+
+def test_no_arrow_to_row_conversion():
+    """The broadcast joins keep the probed table in Arrow from probe to
+    output: no module converts it to ``Row``s."""
+    hits = [str(p.relative_to(ROOT)) for p in sorted(PKG.rglob("*.py"))
+            if "ArrowTableToRowsConversion" in p.read_text()]
+    assert hits == []
+
+
+def test_join_emits_in_arrow_without_collect():
+    """``operators/join.py`` has no ``mapInPandas`` and no ``collect``
+    outside the cell-size sample: its build sides come from the bounded
+    probe and its matches leave through ``mapInArrow``."""
+    bad = []
+
+    def visit(node, func):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            func = node.name
+        if isinstance(node, ast.Attribute) and (
+                node.attr == "mapInPandas"
+                or (node.attr == "collect" and func != "_sample_cell_size")):
+            bad.append(f"{node.lineno}: {node.attr} ({func})")
+        for child in ast.iter_child_nodes(node):
+            visit(child, func)
+
+    visit(ast.parse((PKG / "operators" / "join.py").read_text()), None)
+    assert bad == []

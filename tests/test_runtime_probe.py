@@ -3,12 +3,13 @@ decides whether an operator finishes in the driver or stays in Spark.
 
 The contract under test: (1) a table at exactly ``limit`` rows, None one
 row past it, and a 0-row table of the frame's schema for an empty frame;
-(2) one job per call, whatever the input's plan; (3) Spark's own
-Arrow-to-Row converter turns the probed table into exactly the rows
-``collect()`` returns, so the broadcast joins can ship it as their build
-side; (4) the guards built on it (the broadcast joins and
-``edit_distance_pairs``' short-string tier) keep their results and
-bounds."""
+(2) one job per call, whatever the input's plan; (3) the probed table
+holds exactly the values ``collect()`` returns (Spark's own Arrow-to-Row
+converter turns it into the same rows), and the broadcast joins, which
+ship it as their build side and emit its rows in Arrow, return the grid
+tier's rows and value types under any session zone; (4) the guards built
+on it (the broadcast joins and ``edit_distance_pairs``' short-string
+tier) keep their results and bounds."""
 
 import itertools
 
@@ -19,9 +20,11 @@ from pyspark.sql.conversion import ArrowTableToRowsConversion
 
 import duckdb_spatial_spark.functions as ST
 from duckdb_spatial_spark.operators.dedup import edit_distance_pairs
-from duckdb_spatial_spark.operators.join import st_join, st_join_points
+from duckdb_spatial_spark.operators.join import (
+    st_join, st_join_broadcast, st_join_points)
 from duckdb_spatial_spark.runtime import probe_arrow, scoped_conf
 from duckdb_spatial_spark.sources.tables import local_relation
+from duckdb_spatial_spark.streaming import drain, streaming_spatial_join
 
 _TZ = "spark.sql.session.timeZone"
 _GROUPS = itertools.count()
@@ -140,20 +143,35 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("boxes", [True, False], ids=["boxes", "triangles"])
-def test_broadcast_joins_carry_typed_build_sides(spark, points, boxes):
-    # under the session's UTC zone: the broadcast tiers emit their build
-    # rows through mapInPandas, whose pandas conversion reads a naive
-    # TIMESTAMP in the session zone, not the process zone collect() used
-    zones = _zones(spark, boxes)
-    grid = _rows(st_join(points, zones, "within", "pt", "zone",
-                         broadcast_threshold=0))
-    assert len(grid) > 50
-    for tier in (st_join(points, zones, "within", "pt", "zone"),
-                 st_join_points(points, zones, "within", "x", "y", "zone")):
-        got = _rows(tier)
-        assert got == grid
-        for g, w in zip(got, grid):
-            assert [type(v) for v in g] == [type(v) for v in w]
+def test_broadcast_joins_carry_typed_build_sides(spark, points, boxes,
+                                                 tmp_path):
+    # session zones other than the process zone: a TIMESTAMP on the build
+    # side must not shift (Asia/Kathmandu), and the TIMESTAMP_NTZ 02:30,
+    # in Los Angeles' daylight-saving gap, must pass through unchanged
+    src = str(tmp_path / "points")
+    points.select("pid", "x", "y").write.parquet(src)
+    stream = (spark.readStream.schema("pid long, x double, y double")
+              .parquet(src).withColumn("pt", ST.st_point("x", "y")))
+    for tz in ("Asia/Kathmandu", "America/Los_Angeles"):
+        with scoped_conf(spark, {_TZ: tz}):
+            zones = _zones(spark, boxes)
+            grid = _rows(st_join(points, zones, "within", "pt", "zone",
+                                 broadcast_threshold=0))
+            assert len(grid) > 50
+            tiers = {
+                "st_join": st_join(points, zones, "within", "pt", "zone"),
+                "st_join_broadcast": st_join_broadcast(
+                    points, zones, "within", "pt", "zone"),
+                "st_join_points": st_join_points(
+                    points, zones, "within", "x", "y", "zone"),
+                "streaming": drain(streaming_spatial_join(
+                    stream, zones, "within", "pt", "zone"), "append"),
+            }
+            for name, tier in tiers.items():
+                got = _rows(tier)
+                assert got == grid, (tz, name)
+                for g, w in zip(got, grid):
+                    assert [type(v) for v in g] == [type(v) for v in w]
 
 
 def test_edit_distance_short_cap_is_exact(spark):
